@@ -1,14 +1,16 @@
 """Run the benchmark over several seeds and summarise it.
 
     python3 perfbench/collect.py --out perfbench/baseline/local4.json \\
-        --sets 2 --seeds 10 [--traced 1] [--workloads catalog,etl_write]
+        --sets 2 --seeds 10 --traced 1
 
-Each run is a fresh ``run.py`` process, as the driver makes them. For every
-workload the summary gives, per set of ``--seeds`` untraced runs, each
-end-to-end metric's median and its quartile spread (IQR over median) next to
-the metric's bound from ``BENCHMARK.json``; with ``--traced`` it adds traced
-runs, their per-layer medians and the tracing overhead (traced pass wall
-minus untraced pass wall, cold and warm).
+Each run is a fresh ``run.py`` process, as the driver makes them. Every
+workload in ``BENCHMARK.json`` runs, one after another, with seeds counted
+from 1 across the whole collection. For every workload the summary gives,
+per set of ``--seeds`` untraced runs, each end-to-end metric's median and
+its quartile spread (IQR over median) next to the metric's bound from
+``BENCHMARK.json``; with ``--traced`` it adds traced runs, their per-layer
+medians and the tracing overhead (traced pass wall minus untraced pass
+wall, cold and warm).
 """
 
 from __future__ import annotations
@@ -91,14 +93,11 @@ def main() -> None:
     ap.add_argument("--sets", type=int, default=1)
     ap.add_argument("--seeds", type=int, default=10)
     ap.add_argument("--traced", type=int, default=0)
-    ap.add_argument("--workloads", default=None)
-    ap.add_argument("--first-seed", type=int, default=1)
     args = ap.parse_args()
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
-    names = args.workloads.split(",") if args.workloads else [w["name"] for w in spec["workloads"]]
     report: dict = {"benchmark": spec, "workloads": {}}
-    seed = args.first_seed
-    for name in names:
+    seed = 1
+    for name in (w["name"] for w in spec["workloads"]):
         sets, traced = [], []
         for _ in range(args.sets):
             runs = []

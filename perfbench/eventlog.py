@@ -143,34 +143,46 @@ def job_totals(log: EventLog, spans: set[str]) -> dict[str, float]:
 
 
 def exec_totals(
-    log: EventLog, spans: set[str], windows: list[tuple[float, float]], cores: int
+    log: EventLog, windows: list[tuple[str, float, float]], cores: int
 ) -> dict[str, float]:
-    """Stage and task sums for the jobs caused by ``spans``.
+    """Stage and task sums for the jobs caused by the spans in ``windows``.
 
-    ``windows`` are the (start, end) epoch seconds of those spans as the
-    benchmark timed them; ``idle_s`` is the part of their total length in
-    which no task of these spans ran, and ``core_util`` is task run time
-    over window length times ``cores``.
+    ``windows`` are (span id, start, end) with the epoch seconds of each span
+    as the benchmark timed it. Each window splits at its span's first job
+    submission: ``prejob_s`` is the part before it (planning of the query
+    that runs, and any other driver work ahead of it; all of a window whose
+    span ran no job), and ``idle_s`` is the part after it in which no task
+    of the span ran. ``core_util`` is task run time over the windows' total
+    length times ``cores``.
     """
+    spans = {sid for sid, _, _ in windows}
     tasks = [t for t in log.tasks if t.span in spans]
-    wall_s = sum(hi - lo for lo, hi in windows)
-    busy_ms = 0
-    for lo, hi in windows:
+    first_job: dict[str, int] = {}
+    for span, submitted, _ in log.jobs.values():
+        if span in spans:
+            first_job[span] = min(submitted, first_job.get(span, submitted))
+    wall_s = prejob_ms = idle_ms = 0.0
+    for sid, lo, hi in windows:
+        wall_s += hi - lo
         lo_ms, hi_ms = lo * 1000, hi * 1000
-        busy_ms += _union_ms(
+        jobs_ms = min(max(first_job.get(sid, hi_ms), lo_ms), hi_ms)
+        prejob_ms += jobs_ms - lo_ms
+        busy_ms = _union_ms(
             [
-                (max(t.launch_ms, lo_ms), min(t.finish_ms, hi_ms))
+                (max(t.launch_ms, jobs_ms), min(t.finish_ms, hi_ms))
                 for t in tasks
-                if t.finish_ms > lo_ms and t.launch_ms < hi_ms
+                if t.span == sid and t.finish_ms > jobs_ms and t.launch_ms < hi_ms
             ]
         )
+        idle_ms += max(0.0, hi_ms - jobs_ms - busy_ms)
     run_s = sum(t.run_ms for t in tasks) / 1000
     return {
         "wall_s": wall_s,
         **job_totals(log, spans),
         "stages": sum(1 for s in log.stages.values() if s in spans),
         "tasks": len(tasks),
-        "idle_s": max(0.0, wall_s - busy_ms / 1000),
+        "prejob_s": prejob_ms / 1000,
+        "idle_s": idle_ms / 1000,
         "task_run_s": run_s,
         "task_cpu_s": sum(t.cpu_ns for t in tasks) / 1e9,
         "gc_s": sum(t.gc_ms for t in tasks) / 1000,

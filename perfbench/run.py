@@ -3,11 +3,13 @@
     python3 perfbench/run.py --workload catalog --seed 1 --seconds 8 --trace 0
 
 One client runs one operation at a time, as the reference's serial nightly
-batch does: a set-up (fresh JVM, schema-cache warm-up), then a cold
-pass over the workload's operations, then warm passes, started until
-``--seconds`` have elapsed after the cold pass (at least three). Every query's row count and digest ride on its
-own ``noop`` job through an ``Observation`` and are compared with
-``expected.json``; a mismatch or an exception counts as a failed operation.
+batch does: a set-up (fresh JVM, schema-cache warm-up; made ``SETUPS``
+times, the median reported), then a cold pass over the workload's
+operations, then warm passes, started until ``--seconds`` have elapsed after
+the cold pass (at least ``MIN_WARM``). Every query's row count and digest
+ride on its own ``noop`` job through an ``Observation`` and are compared
+with ``expected.json``; a mismatch or an exception counts as a failed
+operation.
 
 The last line of stdout is the result: end-to-end metrics with ``--trace 0``;
 with ``--trace 1`` the same loop runs with Spark's event log on, a Catalyst
@@ -24,6 +26,7 @@ import time
 _T0 = time.perf_counter()
 
 import argparse  # noqa: E402
+import hashlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import platform  # noqa: E402
@@ -47,13 +50,19 @@ from spans import Tracer  # noqa: E402
 #: fit a 16 GB host
 DRIVER_HEAP = "3g"
 
+#: an untraced run sets up this many times (fresh JVM and warm-up each) and
+#: reports the median; the last set-up's session runs the passes
+SETUPS = 3
+
+#: warm passes a run makes at least, however short ``--seconds``
+MIN_WARM = 2
+
 END_TO_END = {
     "setup_s": "s",
     "cold_pass_s": "s",
     "warm_pass_s": "s",
     "op_p50_s": "s",
     "op_p90_s": "s",
-    "driver_rss_peak_mb": "MB",
 }
 
 _PASS_LAYER = {
@@ -70,6 +79,7 @@ _PASS_LAYER = {
     "exec.jobs": "count",
     "exec.stages": "count",
     "exec.tasks": "count",
+    "exec.prejob_s": "s",
     "exec.idle_s": "s",
     "exec.task_run_s": "s",
     "exec.task_cpu_s": "s",
@@ -99,6 +109,7 @@ PER_LAYER = {
     "session.warmup_s": "s",
     **{f"{k}.{p}": u for p in ("cold", "warm") for k, u in _PASS_LAYER.items()},
     "sink_bytes": "B",
+    "driver_rss_peak_mb": "MB",
 }
 
 _IO_PHASES = {
@@ -138,17 +149,31 @@ def _cpu_ticks() -> tuple[int, int]:
     return vals[7], sum(vals[:8])
 
 
-def _git_commit() -> str | None:
+def _git(*args: str) -> str | None:
     try:
         out = subprocess.run(
-            ["git", "-C", str(ROOT), "rev-parse", "HEAD"],
+            ["git", "-C", str(ROOT), *args],
             capture_output=True,
             text=True,
             timeout=10,
         )
     except (OSError, subprocess.TimeoutExpired):
         return None
-    return out.stdout.strip() or None
+    return out.stdout.strip() if out.returncode == 0 else None
+
+
+def _source_sha256() -> str:
+    """Hash of the code a run executes: the engine package and the
+    benchmark's own code and expected digests. It tells runs of different
+    code apart also where there is no git, or the tree is not committed."""
+    files = sorted(
+        [*(ROOT / "etl_cascalog_spark").rglob("*.py"), *BENCH.glob("*.py"),
+         BENCH / "expected.json"]
+    )
+    h = hashlib.sha256()
+    for f in files:
+        h.update(str(f.relative_to(ROOT)).encode() + b"\0" + f.read_bytes() + b"\0")
+    return h.hexdigest()
 
 
 def _cpu_model() -> str | None:
@@ -281,7 +306,7 @@ def _p90(xs: list[float]) -> float:
     return statistics.quantiles(xs, n=10, method="inclusive")[8]
 
 
-def _end_to_end(setup_s, passes, tracer, rss_mb) -> dict[str, float]:
+def _end_to_end(setup_s, passes, tracer) -> dict[str, float]:
     warm = passes[1:]
     warm_ops = [
         s["wall_s"]
@@ -295,7 +320,6 @@ def _end_to_end(setup_s, passes, tracer, rss_mb) -> dict[str, float]:
         "warm_pass_s": statistics.median(p["wall_s"] for p in warm),
         "op_p50_s": statistics.median(warm_ops),
         "op_p90_s": _p90(warm_ops),
-        "driver_rss_peak_mb": rss_mb,
     }
 
 
@@ -313,8 +337,7 @@ def _pass_layers(tracer, log, pass_rec, cores) -> dict[str, float]:
     exec_names = {"exec", *_IO_PHASES}
     ex = eventlog.exec_totals(
         log,
-        ids(exec_names),
-        [(s["start"], s["end"]) for s in phases if s["name"] in exec_names],
+        [(s["id"], s["start"], s["end"]) for s in phases if s["name"] in exec_names],
         cores,
     )
     out = {
@@ -373,15 +396,28 @@ def run(
     spark = None
     try:
         sf_dir = str(wl.DATA / base)
-        t = time.perf_counter()
-        spark = _start_spark(work, cores, traced)
-        start_s = time.perf_counter() - t
-        tracer = Tracer(spark.sparkContext if traced else None)
-        ctx = Context(spark, tracer, traced, sf_dir, work)
-        t = time.perf_counter()
-        _warm_up(ctx, w)
-        warmup_s = time.perf_counter() - t
-        setup_s = time.perf_counter() - t_start
+        # imported once per process, so every set-up below is the same
+        from etl_cascalog_spark import catalog, incremental, io  # noqa: F401
+
+        imports_s = time.perf_counter() - t_start
+        starts, warmups = [], []
+        for _ in range(1 if traced else SETUPS):
+            if spark is not None:
+                _stop_spark(spark)
+                spark = None
+            io.clear_schema_cache()  # as empty as in a fresh process
+            t = time.perf_counter()
+            spark = _start_spark(work, cores, traced)
+            starts.append(time.perf_counter() - t)
+            tracer = Tracer(spark.sparkContext if traced else None)
+            ctx = Context(spark, tracer, traced, sf_dir, work)
+            t = time.perf_counter()
+            _warm_up(ctx, w)
+            warmups.append(time.perf_counter() - t)
+        start_s, warmup_s = statistics.median(starts), statistics.median(warmups)
+        # a fresh process to its first operation: imports, once, plus the
+        # median set-up
+        setup_s = imports_s + statistics.median(map(sum, zip(starts, warmups)))
 
         rng = random.Random(seed)
         calendar = wl.etl_calendar(seed)
@@ -411,7 +447,7 @@ def run(
                 if passes is not None:
                     if len(pass_recs) >= passes:
                         break
-                elif len(pass_recs) >= 4 and time.perf_counter() >= deadline:
+                elif len(pass_recs) > MIN_WARM and time.perf_counter() >= deadline:
                     break
         sink_bytes = wl.dir_usage(prev_etl.root)[0] if prev_etl else 0
         jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
@@ -436,7 +472,13 @@ def run(
         "cores": cores,
         "driver_heap": DRIVER_HEAP,
         "driver_pid": jvm_pid,
-        "git_commit": _git_commit(),
+        "git_commit": _git("rev-parse", "HEAD") or None,
+        # None without git; else whether tracked files differ from the commit
+        "git_dirty": (
+            None if (st := _git("status", "--porcelain", "--untracked-files=no")) is None
+            else bool(st)
+        ),
+        "source_sha256": _source_sha256(),
         "pyspark": pyspark.__version__,
         "java": java,
         "python": platform.python_version(),
@@ -447,8 +489,9 @@ def run(
         "attempted": attempted,
         "failures": failures,
         "setup": {
-            "session.start_s": start_s,
-            "session.warmup_s": warmup_s,
+            "imports_s": imports_s,
+            "session.start_s": starts,
+            "session.warmup_s": warmups,
             "setup_s": setup_s,
         },
         "passes": [
@@ -474,6 +517,7 @@ def run(
             "session.start_s": start_s,
             "session.warmup_s": warmup_s,
             "sink_bytes": sink_bytes,
+            "driver_rss_peak_mb": rss_mb,
         }
         for rec, kind in ((pass_recs[0], "cold"), (pass_recs[1], "warm")):
             for k, v in _pass_layers(tracer, log, rec, cores).items():
@@ -482,7 +526,7 @@ def run(
         record["spans"] = tracer.spans
     else:
         metrics = _metrics_line(
-            _end_to_end(setup_s, pass_recs, tracer, rss_mb), END_TO_END
+            _end_to_end(setup_s, pass_recs, tracer), END_TO_END
         )
     record["metrics"] = metrics
     shutil.rmtree(work, ignore_errors=True)

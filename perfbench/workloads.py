@@ -78,7 +78,11 @@ def _tree_counts(plan) -> tuple[int, int]:
 def run_query(ctx, name: str) -> tuple[int, int]:
     """Build, (traced: plan,) and execute catalog query ``name`` through the
     ``noop`` sink. Row count and digest come from an ``Observation`` on the
-    same job, so nothing runs twice. Returns (rows, digest)."""
+    same job, so nothing runs twice. Returns (rows, digest).
+
+    The Catalyst probe plans the observed query, the one the write runs. The
+    write then plans it once more inside ``exec``; the event log puts that
+    planning in ``exec.prejob_s``, ahead of the write's first job."""
     from pyspark.sql import Observation
 
     from etl_cascalog_spark.catalog import QUERIES
@@ -88,9 +92,11 @@ def run_query(ctx, name: str) -> tuple[int, int]:
     with scoped_storage(spark):
         with tr.span("phase", "build"):
             df = QUERIES[name].build(spark, ctx.sf_dir)
+        obs = Observation()
+        observed = df.observe(obs, *digest_aggs(df.columns))
         if ctx.traced:
             with tr.span("phase", "plan") as rec:
-                qe = df._jdf.queryExecution()
+                qe = observed._jdf.queryExecution()
                 plan = qe.executedPlan()
                 phases = qe.tracker().phases()
                 for p in ("analysis", "optimization", "planning"):
@@ -98,10 +104,7 @@ def run_query(ctx, name: str) -> tuple[int, int]:
                     rec[p] = opt.get().durationMs() / 1000 if opt.isDefined() else 0.0
                 rec["plan_nodes"], rec["exchanges"] = _tree_counts(plan)
         with tr.span("phase", "exec"):
-            obs = Observation()
-            df.observe(obs, *digest_aggs(df.columns)).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            observed.write.format("noop").mode("overwrite").save()
             got = obs.get
     return got["rows"], got["digest"]
 
