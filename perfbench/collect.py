@@ -3,7 +3,7 @@
     python3 perfbench/collect.py --out perfbench/baseline/local4.json \\
         --sets 2 --seeds 10 --traced 1
 
-Each run is a fresh ``run.py`` process, as the driver makes them. Every
+Each run is a fresh ``run.py`` process, as in a full check. Every
 workload in ``BENCHMARK.json`` runs, one after another, with seeds counted
 from 1 across the whole collection. For every workload the summary gives,
 per set of ``--seeds`` untraced runs, each end-to-end metric's median and

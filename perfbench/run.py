@@ -51,11 +51,13 @@ from spans import Tracer  # noqa: E402
 DRIVER_HEAP = "3g"
 
 #: an untraced run sets up this many times (fresh JVM and warm-up each) and
-#: reports the median; the last set-up's session runs the passes
-SETUPS = 3
+#: reports the median; the last set-up's session runs the passes. Each
+#: set-up costs 8-10 s on a 4-core host; more do not fit the time budget.
+SETUPS = 2
 
-#: warm passes a run makes at least, however short ``--seconds``
-MIN_WARM = 2
+#: warm passes a run makes at least, however short ``--seconds``; with two,
+#: the warm operation percentiles of ``catalog`` spread up to the bound
+MIN_WARM = 3
 
 END_TO_END = {
     "setup_s": "s",

@@ -6,8 +6,9 @@ each pass and the ``etl_write`` batch calendar; it never changes a table.
 
 Operation lists are fixed subsets of the catalog groups they name. A pass
 of the full lists takes 9-26 s warm on a 4-core host; the subsets keep a
-run of set-up, a cold pass and the warm passes near a minute on a loaded
-host, so that every workload's 22 driver runs fit the time budget.
+run of two set-ups, a cold pass and the warm passes near a minute on a
+loaded host, so that a full check's 22 runs per workload fit its time
+budget.
 """
 
 from __future__ import annotations
