@@ -7019,18 +7019,17 @@ def unpivot_metrics_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_cc_labels_sql()}
     SELECT node AS doc_id, label AS cluster_id FROM cc_labels
     """,
-    doc="neardup_clusters on the LARGE-COMPONENT algorithm: alternating "
-    "large-star/small-star (Kiveris et al., SoCC 2014) instead of "
-    "min-label propagation — tree heights HALVE per round (O(log n) "
+    doc="raw near-dup cluster labels: MinHash-LSH pairs over the whole "
+    "corpus into alternating large-star/small-star connected components "
+    "(Kiveris et al., SoCC 2014) — tree heights HALVE per round (O(log n) "
     "rounds regardless of component diameter), which is the difference "
     "between 4 rounds and 10⁷ rounds on a chain-shaped component at "
-    "100 TB. Same fixpoint, same oracle (unrolled self-verifying label "
-    "propagation); the equivalence is also property-tested on random "
-    "graphs.",
+    "100 TB. The oracle is unrolled self-verifying label propagation; "
+    "the equivalence is also property-tested on random graphs.",
 )
 def neardup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cascalog_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         minhash_lsh_pairs,
     )
 
@@ -7038,7 +7037,7 @@ def neardup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.7
     )
-    return connected_components_star(pairs).select(
+    return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 

@@ -68,16 +68,3 @@ def month_spine(spark: SparkSession, start_dt: str, end_dt: str) -> DataFrame:
             )
         ).alias("_m")
     ).select(F.last_day(F.col("_m")).alias("spine_dt"))
-
-
-def date_spine(spark: SparkSession, start_dt: str, end_dt: str) -> DataFrame:
-    """X3 ``mk-dts`` (trgx.clj:37-40): every day in [start, end]."""
-    return spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(start_dt).cast("date"),
-                F.lit(end_dt).cast("date"),
-                F.expr("interval 1 day"),
-            )
-        ).alias("spine_dt")
-    )

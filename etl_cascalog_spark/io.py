@@ -157,18 +157,6 @@ def ensure_min_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(target)
 
 
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every test table as a dict (and register temp views for SQL)."""
-    out = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
-
-
 def from_rows(spark: SparkSession, rows, schema) -> DataFrame:
     """S3 in-memory collection generator.
 
@@ -663,14 +651,6 @@ def read_csv(
     else:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """S7 JSON-lines source — with schema for one-pass reads."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
 
 
 def read_seqfile(

@@ -76,28 +76,6 @@ def str_min(col: Column) -> Column:
     return F.min(convert_null(col))
 
 
-def nest_dimension_metrics(
-    dim_cols: Sequence[str], metric_cols: Sequence[str]
-) -> Column:
-    """A7 ``tr-dimension-metrics`` (trgx.clj:72-77): the report payload — a
-    nested dict keyed by the dimension path with a {metric: value} leaf:
-    ``{dim1|dim2: {metric: value, ...}, ...}``.
-
-    Canonical engine representation is the **flat map keyed by the joined
-    dimension path** (deterministic: path-sorted). Sinks serialize it to JSON
-    (functions pair-edn->json, trgx.clj:78-79); the driver-facing reports use
-    :func:`etl_cascalog_spark.plans.report.payload_json` which emits
-    deterministic, key-sorted JSON text.
-    """
-    path = F.concat_ws("|", *[F.col(c) for c in dim_cols])
-    metrics = F.struct(*[F.col(m).alias(m) for m in metric_cols])
-    return F.map_from_entries(
-        F.array_sort(
-            F.collect_list(F.struct(path.alias("key"), metrics.alias("value")))
-        )
-    )
-
-
 def grouped_pivot(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -209,7 +187,11 @@ def exact_group_percentiles(
         stats.select(
             group_col,
             "__n",
-            F.explode(F.array(*[F.lit(float(p)) for p in ps])).alias("__p"),
+            # distinct ps: a repeated p would join every row of its
+            # bucket twice and double each local row number
+            F.explode(
+                F.array(*[F.lit(float(p)) for p in dict.fromkeys(ps)])
+            ).alias("__p"),
         )
         .withColumn("__r", F.ceil(F.col("__p") * F.col("__n")).cast("long"))
         # bases is metadata-sized (G·n_buckets rows) but ids-only frames
@@ -274,7 +256,11 @@ def _hist_pick_ranks(
             cnt_col,
             "__cum",
             "__n",
-            F.explode(F.array(*[F.lit(float(p)) for p in ps])).alias("__p"),
+            # distinct ps: a repeated p would join every row of its
+            # bucket twice and double each local row number
+            F.explode(
+                F.array(*[F.lit(float(p)) for p in dict.fromkeys(ps)])
+            ).alias("__p"),
         )
         .where(
             (F.col("__cum") >= rank) & (F.col("__cum") - F.col(cnt_col) < rank)

@@ -647,121 +647,6 @@ def embedding_neardup_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 25,
-    algorithm: str = "star",
-) -> DataFrame:
-    """Connected components over a near-dup pair graph → ``(node,
-    cluster_id)`` with ``cluster_id`` = the smallest doc id reachable.
-    This is the step that turns verified PAIRS into dedup CLUSTERS: keep
-    ``node == cluster_id``, drop the rest — without it, pairwise "drop the
-    larger id" over-deletes on chains (a-b, b-c drops both b and c even
-    when a-c are not near-dups).
-
-    Dispatches to the alternating large-star/small-star algorithm
-    (:func:`connected_components_star`) by DEFAULT: its round count is
-    O(log n) regardless of component diameter, which is the difference
-    between 4 rounds and 10⁷ rounds on a chain-shaped component at
-    100 TB, and its per-round cost is the same one groupBy-min + one
-    equi-join. ``algorithm="labelprop"`` selects min-label propagation
-    (:func:`connected_components_labelprop`) — O(diameter) rounds, kept
-    for the shallow-component case and as the independent twin the
-    equivalence property test compares against. Both produce the
-    IDENTICAL canonical labeling (min reachable id, isolated self-loop
-    nodes included), so swapping algorithms never moves a result hash.
-    """
-    if algorithm == "star":
-        return connected_components_star(pairs, id_a=id_a, id_b=id_b)
-    if algorithm == "labelprop":
-        return connected_components_labelprop(
-            pairs, id_a=id_a, id_b=id_b, max_iter=max_iter
-        )
-    raise ValueError(f"connected_components: unknown algorithm {algorithm!r}")
-
-
-def connected_components_labelprop(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Min-label-propagation connected components — the O(diameter) twin
-    of :func:`connected_components_star` (same output contract: ``(node,
-    label)``, label = smallest reachable id).
-
-    Min-label propagation: every node starts labeled with itself; each
-    round sends labels across (bidirectional) edges and keeps the min;
-    fixpoint in O(component diameter) rounds — near-dup components are
-    shallow (chains of near-identical docs), so single-digit rounds in
-    practice, ``max_iter`` bounds the worst case.
-
-    100 TB posture: each round is one equi-join + one groupBy (both keyed
-    on node id), and ``localCheckpoint`` truncates the lineage so the DAG
-    does not grow with iterations (at cluster scale: ``checkpoint`` to
-    reliable storage instead). The convergence probe is a count on the
-    already-checkpointed frame (no recompute). For graphs with huge
-    components/heavy skew, the published large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce") halves rounds —
-    unnecessary for near-dup graphs, noted for parity.
-
-    Block lifecycle: round ``N-1``'s checkpoint blocks are unpersisted as
-    soon as round ``N`` is materialized and the convergence probe has run,
-    so the build holds at most edges + two rounds of labels — NOT one
-    leaked checkpoint per round (``clearCache`` cannot free these, and the
-    leak is what stalled unrelated queries later in a long session). Only
-    the returned frame's own checkpoint stays alive; callers release it
-    via :func:`etl_cascalog_spark.session.release_all_blocks` once
-    consumed.
-    """
-    from etl_cascalog_spark.session import persistent_rdd_ids, unpersist_rdd_ids
-
-    spark = pairs.sparkSession
-    before = persistent_rdd_ids(spark)
-    edges = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("t"))
-    edges = (
-        edges.unionByName(edges.select(F.col("t").alias("s"), F.col("s").alias("t")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edge_ids = persistent_rdd_ids(spark) - before
-    labels = (
-        edges.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    label_ids = persistent_rdd_ids(spark) - before - edge_ids
-    for _ in range(max_iter):
-        msgs = edges.join(
-            labels.withColumnRenamed("node", "s"), on="s"
-        ).select(F.col("t").alias("node"), "label")
-        seen = persistent_rdd_ids(spark)
-        new_labels = (
-            labels.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        new_ids = persistent_rdd_ids(spark) - seen
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("label", "__old"), on="node"
-            )
-            .where(F.col("label") != F.col("__old"))
-            .limit(1)
-            .count()
-        )
-        unpersist_rdd_ids(spark, label_ids)  # retire round N-1's blocks
-        labels, label_ids = new_labels, new_ids
-        if changed == 0:
-            break
-    unpersist_rdd_ids(spark, edge_ids)  # result lineage is truncated: safe
-    return labels
-
-
 def incremental_dedup(
     new_df: DataFrame,
     history_df: DataFrame,
@@ -1164,19 +1049,14 @@ def pigeonhole_edit_pairs(
     )
 
 
-def _symmetric(edges: DataFrame) -> DataFrame:
-    rev = edges.select(F.col("t").alias("s"), F.col("s").alias("t"))
-    return edges.unionByName(rev)
-
-
 #: monotone suffix so repeated CC builds in one SparkContext never reuse
 #: an Observation name (names must be unique per session)
 _CC_OBS_SEQ = _itercount()
 
 
 def _explode_symmetric(e: DataFrame) -> DataFrame:
-    """Both edge directions in ONE pass over ``e`` (s/t columns): the
-    union form (:func:`_symmetric`) scans its input lineage twice — fine
+    """Both edge directions in ONE pass over ``e`` (s/t columns): a
+    union of ``e`` with its reverse scans the input lineage twice — fine
     over checkpointed blocks, a doubled map cost over anything expensive.
     explode(array(fwd, rev)) emits the same multiset of rows from a
     single scan."""
@@ -1190,103 +1070,104 @@ def _explode_symmetric(e: DataFrame) -> DataFrame:
     ).select(F.col("__e.s").alias("s"), F.col("__e.t").alias("t"))
 
 
-def connected_components_star(
+def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 15,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the huge-component twin of :func:`connected_components`.
+    """Connected components over a near-dup pair graph → ``(node,
+    label)`` with ``label`` = the smallest id reachable from ``node``.
+    This is the step that turns verified PAIRS into dedup CLUSTERS: keep
+    ``node == label``, drop the rest — without it, pairwise "drop the
+    larger id" over-deletes on chains (a-b, b-c drops both b and c even
+    when a-c are not near-dups). Nodes that appear only in self-loop
+    pairs are labeled with themselves.
 
-    Min-label propagation converges in O(component diameter) rounds: fine
-    for shallow near-dup clusters, catastrophic for a 10⁷-node chain. The
-    star operations instead HALVE tree heights per round (O(log² n)
-    worst-case, O(log n) in practice) by rewiring every node directly
-    toward its neighborhood minimum:
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). Min-label
+    propagation needs O(component diameter) rounds — catastrophic for a
+    10⁷-node chain; the star operations instead rewire every node
+    directly toward its neighborhood minimum, so the round count is
+    O(log n) in practice (O(log² n) worst case):
 
     - **large-star** (per node u): every neighbor v > u re-attaches to
       m = min({u} ∪ N(u));
     - **small-star** (per node u over edges oriented high→low): every
       neighbor v ≤ u (and u itself) re-attaches to the minimum.
 
-    Round shape (round 13 — was groupBy-min + equi-join back, plus an
-    intermediate distinct, per star op): each star's neighborhood minimum
-    rides on the edge row via ONE min-window over the node-keyed shuffle
-    (the pagerank out-degree lesson: agg+join re-reads the input into the
-    join probe and re-shuffles it anyway), and the large-star output
-    flows UN-deduplicated into small-star, whose terminal distinct
-    already collapses duplicates — min-aggregates are duplicate-
-    insensitive, so the round's edge SET is unchanged. One round = two
-    node-keyed window shuffles + one distinct, with per-partition partial
-    sort absorbing hub skew the way partial aggregation did.
+    Round shape: each star's neighborhood minimum rides on the edge row
+    via ONE min-window over the node-keyed shuffle, and the large-star
+    output flows un-deduplicated into small-star, whose terminal distinct
+    collapses duplicates (min is duplicate-insensitive). One round = two
+    node-keyed window shuffles + one distinct, materialized by one eager
+    ``localCheckpoint`` that cuts the lineage.
 
-    Fixpoint when the edge set stops changing; the surviving edges are
-    exactly (node, component_min) stars. Convergence is detected from the
-    SAME job that materializes the round (an ``Observation`` on the
-    checkpoint carrying count + two order-independent checksums); only
-    when the observed triple repeats does ONE exact set-difference probe
-    confirm — equal sets always produce equal observations, so a round
-    that changed anything is never probed, and the exact probe means a
-    checksum collision cannot terminate early (it would just cost one
-    wasted probe). Net: the per-round convergence job of rounds ≤ 12 is
-    gone; the probe runs once, at the actual fixpoint.
+    Convergence is read off that same checkpoint job: an ``Observation``
+    on each star op counts the rows it rewires — large-star the rows with
+    t > s whose minimum m != s, small-star the rows with m != t. Both
+    counts 0 means every node with a larger neighbor has no smaller one
+    and every node has at most one smaller neighbor: the edges form a
+    star forest centered on the component minima, which is the
+    algorithm's fixpoint (the round's output set equals its input set),
+    so the loop stops. The test is exact and needs no extra job; an input
+    that is already a star forest stops after round 1. Counts cannot
+    overflow.
 
-    Output matches :func:`connected_components_labelprop` EXACTLY:
-    ``(node, label)``, label = smallest reachable id, INCLUDING nodes
-    that appear only in self-loop pairs (node universe is taken from the
-    symmetric closure BEFORE self-loops are dropped, so the two
-    algorithms agree on every input). localCheckpoint +
-    retire-previous-round, identical block lifecycle to the propagation
-    variant.
+    The build submits one setup checkpoint (the symmetric closure) plus
+    one checkpoint per round. Round ``N-1``'s blocks are unpersisted as
+    soon as round ``N`` is materialized; the setup blocks and the last
+    round's blocks back the returned frame until the caller releases
+    them (``session.scoped_storage`` / ``release_all_blocks``).
     """
     from pyspark.sql import Observation
 
     from etl_cascalog_spark.session import persistent_rdd_ids, unpersist_rdd_ids
 
     spark = pairs.sparkSession
-    before = persistent_rdd_ids(spark)
-    # ONE setup checkpoint (round 13; was raw-pairs + distinct-edges = two
-    # eager jobs): the symmetric closure INCLUDING self-loops materializes
-    # in a single job — the explode emits both directions in one pass over
-    # the (possibly expensive) pair lineage, distinct dedups. The working
-    # edge set (self-loops dropped) and the node universe are narrow /
-    # one-shuffle derivations over the checkpointed blocks, built lazily
-    # where they are consumed (round 1 and the final label join). sym's
-    # blocks live until the caller releases the returned frame.
+    run_tag = next(_CC_OBS_SEQ)
+    # setup: the symmetric closure INCLUDING self-loops in one job (one
+    # pass over the pair lineage, distinct dedups). The working edge set
+    # (self-loops dropped) and the node universe are narrow / one-shuffle
+    # derivations over these blocks, built where they are consumed. The
+    # job also counts the working edges: with none there is no round to
+    # run, and a round over an empty edge set could not report its
+    # counts (AQE prunes the empty stages, observations included).
+    n_edges = Observation(f"cc_edges_{run_tag}")
     sym = (
         _explode_symmetric(
             pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("t"))
         )
         .distinct()
+        .observe(n_edges, F.count(F.when(F.col("s") != F.col("t"), 1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     edges = sym.where(F.col("s") != F.col("t"))
     edge_ids: set[int] = set()  # round-1 edges live on sym's blocks
 
-    def large_star(e: DataFrame) -> DataFrame:
-        sym_e = _explode_symmetric(e)
+    def large_star(e: DataFrame, obs) -> DataFrame:
         w = Window.partitionBy("s")
         return (
-            sym_e.withColumn(
-                "m", F.least(F.min("t").over(w), F.col("s"))
-            )
+            _explode_symmetric(e)
+            .withColumn("m", F.least(F.min("t").over(w), F.col("s")))
             .where(F.col("t") > F.col("s"))
+            .observe(obs, F.count(F.when(F.col("m") != F.col("s"), 1)).alias("n"))
             # m <= s < t, so the rewired edge is strictly high -> low and
             # never a self-loop — no filter, no distinct (small_star's
             # terminal distinct collapses duplicates)
             .select(F.col("t").alias("s"), F.col("m").alias("t"))
         )
 
-    def small_star(e: DataFrame) -> DataFrame:
+    def small_star(e: DataFrame, obs) -> DataFrame:
         # orient high -> low: s > t (identity on large_star output, kept
         # so the operator matches the published form on any input)
         hi = e.select(
             F.greatest("s", "t").alias("s"), F.least("s", "t").alias("t")
         )
         w = Window.partitionBy("s")
-        hm = hi.withColumn("m", F.min("t").over(w))
+        hm = hi.withColumn("m", F.min("t").over(w)).observe(
+            obs, F.count(F.when(F.col("t") != F.col("m"), 1)).alias("n")
+        )
         return (
             hm.select(
                 F.explode(
@@ -1301,61 +1182,25 @@ def connected_components_star(
             .distinct()
         )
 
-    # order-independent exact-set fingerprints: equal sets ALWAYS agree,
-    # so differing observations prove the round changed something with no
-    # extra job. sum() is taken over 32-bit slices (ANSI long sum over
-    # full 64-bit hashes could overflow); bit_xor cannot overflow.
-    _obs_metrics = (
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(s, t))").alias("hx"),
-        F.expr("sum(xxhash64(s, t) & 4294967295)").alias("hs"),
-    )
-    prev_obs: tuple | None = None
-    run_tag = next(_CC_OBS_SEQ)
-    for round_i in range(max_iter):
+    for round_i in range(max_iter if n_edges.get["n"] else 0):
+        large = Observation(f"cc_large_star_{run_tag}_{round_i}")
+        small = Observation(f"cc_small_star_{run_tag}_{round_i}")
         seen = persistent_rdd_ids(spark)
-        obs = Observation(f"cc_star_{run_tag}_{round_i}")
-        new_edges = (
-            small_star(large_star(edges))
-            .observe(obs, *_obs_metrics)
-            .localCheckpoint(eager=True)
+        edges = small_star(large_star(edges, large), small).localCheckpoint(
+            eager=True
         )
-        new_ids = persistent_rdd_ids(spark) - seen
-        row = obs.get
-        cur_obs = (row["n"], row["hx"], row["hs"])
-        if cur_obs == prev_obs or cur_obs[0] == 0:
-            # suspected fixpoint: round outputs are distinct SETS, so
-            # equality needs count + content match. n == 0 is exact on
-            # its own (a nonempty symmetric edge set always emits rows).
-            # Otherwise confirm with the exact symmetric-difference probe
-            # — runs ONCE per build in the non-collision case.
-            changed = 0 if cur_obs[0] == 0 else (
-                new_edges.unionByName(edges)
-                .groupBy("s", "t")
-                .agg(F.count("*").alias("c"))
-                .where(F.col("c") == 1)
-                .limit(1)
-                .count()
-            )
-        else:
-            changed = 1  # sets provably differ — no probe job
-        prev_obs = cur_obs
-        # retire round N-1's edge blocks; sym's stay (the final label
-        # join reads them)
+        # retire round N-1's edge blocks; sym's stay (the label attach
+        # reads them)
         unpersist_rdd_ids(spark, edge_ids)
-        edge_ids = new_ids
-        edges = new_edges
-        if changed == 0:
+        edge_ids = persistent_rdd_ids(spark) - seen
+        if large.get["n"] == 0 and small.get["n"] == 0:
             break
     # surviving edges are (node, min) stars; the label attach is ONE
-    # groupBy-min over self-labels ∪ star edges (round 13; was node-
-    # universe distinct + left join = two exchanges and a join sort):
-    # label ≤ node always (min reachable id), so min over {node} ∪
-    # {star target} IS the star target for rewired nodes and the node
-    # itself for component minima / self-loop-only nodes — the identical
-    # labeling, one shuffle, and multi-reference consumers re-execute
-    # one hash aggregate over in-memory blocks instead of a join.
-    labels = (
+    # groupBy-min over self-labels ∪ star edges: label ≤ node always, so
+    # min over {node} ∪ {star target} IS the star target for rewired
+    # nodes and the node itself for component minima / self-loop-only
+    # nodes.
+    return (
         sym.select(F.col("s").alias("node"), F.col("s").alias("label"))
         .unionByName(
             edges.select(F.col("s").alias("node"), F.col("t").alias("label"))
@@ -1363,4 +1208,3 @@ def connected_components_star(
         .groupBy("node")
         .agg(F.min("label").alias("label"))
     )
-    return labels

@@ -36,11 +36,6 @@ def require_non_null(df: DataFrame, *cols: str) -> DataFrame:
     return out
 
 
-def is_null_test(col: Column) -> Column:
-    """F3 ``(not !code)`` — IS NULL (m_cocacola_score_overall.clj:62-63)."""
-    return col.isNull()
-
-
 def regex_keep(col: Column, pattern: str) -> Column:
     """F5 ``re-find`` filter (m_cocacola_score_overall.clj:67). Works on CJK
     text — Spark ``rlike`` is UTF-8 native."""
@@ -68,9 +63,3 @@ def not_in_set(col: Column, values: Sequence) -> Column:
     """F7 ``(c/partial get #{…})`` + ``(not !hit)`` — NOT IN
     (m_cocacola_score_period.clj:74-79)."""
     return ~col.isin(list(values))
-
-
-def in_set(col: Column, values: Sequence) -> Column:
-    """F8 ``deffilterfn`` membership filters like ``bg-all?``
-    (m_cocacola_core_sku.clj:35-41) — a plain isin, no UDF needed."""
-    return col.isin(list(values))

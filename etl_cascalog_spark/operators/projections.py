@@ -1,43 +1,12 @@
-"""Projection / rename / row construction (SURVEY.md §2.2, P1-P6).
-
-Mostly thin, deliberately: rule heads map to ``select``; the value here is
-API parity with the reference's helpers.
+"""Plan-time config binding and multi-column projection helpers
+(SURVEY.md §2.2, §2.10). Plain projections and renames are ``select`` /
+``toDF`` directly; what lives here has no one-call DataFrame equivalent.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def select_fields(df: DataFrame, *names: str) -> DataFrame:
-    """P2 ``select-fields`` (trgx.clj:112,142,149): project a subset by name."""
-    return df.select(*names)
-
-
-def rename_all(df: DataFrame, *names: str) -> DataFrame:
-    """P3 ``ops/rename*`` (mlin/d_bolome_user_order.clj:89-92): positional
-    rename of every output field."""
-    return df.toDF(*names)
-
-
-def bind_constants(df: DataFrame, constants: Mapping[str, object]) -> DataFrame:
-    """P4 identity-binding of constants (m_cocacola_score_overall.clj:71)."""
-    out = df
-    for name, value in constants.items():
-        out = out.withColumn(name, F.lit(value))
-    return out
-
-
-def wildcard_project(df: DataFrame, prefix: str | None = None) -> list[Column]:
-    """P5 arity-generic projection (num-out-fields + gen-nullable-vars,
-    trgx.clj:145,291): all current columns, optionally re-aliased with a
-    prefix — schema introspection replaces generated var names."""
-    return [
-        F.col(c).alias(f"{prefix}{c}") if prefix else F.col(c) for c in df.columns
-    ]
 
 
 def broadcast_config_map(

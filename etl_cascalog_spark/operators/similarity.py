@@ -1229,13 +1229,6 @@ def _l2_col(a: Column, c: Column) -> Column:
     )
 
 
-def _l2(a: Column, lit_vec: list[float]) -> Column:
-    """Σ (aᵢ − cᵢ)² against a plan-time vector — the literal parses as one
-    string (:func:`_dvec_sql`, round 12) instead of one py4j call per
-    element; the fold itself is :func:`_l2_col`, unchanged."""
-    return _l2_col(a, F.expr(_dvec_sql(lit_vec)))
-
-
 def pq_code(vec: Column, codebook: list[list[list[float]]], j: int) -> Column:
     """Subspace-``j`` PQ code: argmin L2 to the subspace centroids (ties →
     lower code). Same single array_min struct fold as :func:`ivf_cell` —

@@ -316,32 +316,33 @@ EAGER_BUILD_OK: dict[str, tuple[int, str]] = {
         "(b) trained-centroid Lloyd rounds (28 measured at sf0.001)",
     ),
     "neardup_clusters": (
-        50,
+        47,
         "(b) connected-components star rounds checkpoint per iteration"
-        " until fixpoint (round-13 fused shape: one setup checkpoint,"
-        " window-star rounds, Observation-fused convergence — 30 measured"
-        " at sf0.001 AND sf0.1, was 42; rounds grow O(log n))",
+        " until fixpoint (one setup checkpoint, window-star rounds,"
+        " convergence observed on the round checkpoint with no probe job —"
+        " 27 measured with AQE on at sf0.001 AND sf0.1, 5 with AQE off,"
+        " was 30/6; rounds grow O(log n))",
     ),
-    "neardup_clusters_star": (50, "(b) same CC recurrence"),
-    "neardup_keep_best": (50, "(b) same CC recurrence feeding keep-best"),
+    "neardup_clusters_star": (47, "(b) same CC recurrence"),
+    "neardup_keep_best": (47, "(b) same CC recurrence feeding keep-best"),
     "dedup_cluster_sizes": (
-        50,
+        47,
         "(b) same CC recurrence feeding size profile",
     ),
     "cluster_keyed_split_audit": (
-        50,
+        47,
         "(b) same CC recurrence feeding the leakage-safe split audit"
-        " (22 measured at sf0.001, was 32)",
+        " (19 measured at sf0.001, was 22)",
     ),
     "corpus_curation_pipeline": (
-        55,
-        "(b) composition embeds the CC recurrence (34 measured at"
-        " sf0.001, was 46)",
+        52,
+        "(b) composition embeds the CC recurrence (31 measured at"
+        " sf0.001, was 34)",
     ),
     "training_data_pipeline": (
-        55,
-        "(b) composition embeds the CC recurrence (34 measured at"
-        " sf0.001, was 46)",
+        52,
+        "(b) composition embeds the CC recurrence (31 measured at"
+        " sf0.001, was 34)",
     ),
 }
 

@@ -32,6 +32,16 @@ def get_spark(
     - UTC session timezone so timestamp semantics match the DuckDB oracle and
       are cluster-location-independent.
     - Arrow enabled for the (rare) pandas-UDF paths.
+    - Driver heap from :func:`default_driver_memory` (about half of
+      physical RAM, capped at 16g); ``SPARK_GRAFT_DRIVER_MEM`` overrides.
+    - PySpark's DataFrame call-site capture off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``). It costs
+      about five py4j round trips per ``functions``/``Column`` call, half
+      of a plan build's round trips, to put a Python file:line in error
+      messages. PySpark reads the setting once per process, on the first
+      wrapped call; pinned here it no longer depends on whether that call
+      came before a session existed. Pass it as ``"true"`` in
+      ``extra_conf`` to get call sites back.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
@@ -49,12 +59,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # wide-aggregate plans (64-column sketches) stay in whole-stage
         # codegen instead of falling back to interpreted mode
         .config("spark.sql.codegen.maxFields", "256")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -63,13 +77,31 @@ def get_spark(
     return spark
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: half of physical RAM (MemTotal),
+    capped at 16g. The heap is only part of the driver JVM's footprint
+    (metaspace, code cache, direct buffers, plus the Python workers), so a
+    heap sized to all of RAM gets the JVM OOM-killed on a 16 GB host with
+    no swap. Falls back to 4g where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(total_mb // 2, 16 * 1024)}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """IDs of every RDD currently holding blocks in the BlockManager —
     caches AND ``localCheckpoint`` data (the latter is invisible to
     ``spark.catalog.clearCache``, which only walks the SQL cache manager).
+    The id set crosses py4j as one string, not one round trip per entry.
     """
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keys()}
+    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(k) for k in ids.split(",") if k}
 
 
 def unpersist_rdd_ids(
@@ -79,9 +111,12 @@ def unpersist_rdd_ids(
     already gone). Used by iterative operators to retire round ``N-1``'s
     ``localCheckpoint`` as soon as round ``N`` is materialized, so a
     bounded-iteration build holds at most one round of blocks."""
+    if not ids:
+        return
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid, jrdd in list(jmap.items()):
-        if int(rid) in ids:
+    for rid in ids:
+        jrdd = jmap.get(rid)
+        if jrdd is not None:
             jrdd.unpersist(blocking)
 
 

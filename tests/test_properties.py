@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from datetime import date
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -247,6 +247,8 @@ def test_exact_group_percentiles_equals_naive_rank(spark, data, p, n_buckets):
     ),
     ps=st.sampled_from([(0.05, 0.95), (0.1, 0.9), (0.5, 0.5), (0.25, 1.0)]),
 )
+# p_lo == p_hi with two values in the target bucket
+@example(data=[("b", -731), ("b", 0), ("b", -732)], ps=(0.5, 0.5))
 @_settings
 def test_winsorized_hist_equals_two_pass(spark, data, ps):
     """The one-shuffle histogram winsorization (round 12) equals the
@@ -463,6 +465,47 @@ def test_resample_interpolate_equals_naive(spark, vals, gaps):
         cur += timedelta(days=1)
 
 
+def _labelprop_cc(pairs, max_iter: int = 50):
+    """Min-label-propagation connected components: the O(diameter)
+    independent twin of ``dedup.connected_components`` (same contract:
+    ``(node, label)``, label = smallest reachable id, self-loop-only nodes
+    labeled with themselves). Every node starts labeled with itself; each
+    round sends labels across both edge directions and keeps the min,
+    until no label changes. Blocks are left to ``release_all_blocks``."""
+    edges = pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
+    edges = (
+        edges.unionByName(edges.select(F.col("t").alias("s"), F.col("s").alias("t")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        edges.select(F.col("s").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(max_iter):
+        msgs = edges.join(labels.withColumnRenamed("node", "s"), on="s").select(
+            F.col("t").alias("node"), "label"
+        )
+        new_labels = (
+            labels.unionByName(msgs)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new_labels.join(labels.withColumnRenamed("label", "__old"), on="node")
+            .where(F.col("label") != F.col("__old"))
+            .limit(1)
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            return labels
+    raise AssertionError("label propagation did not converge")
+
+
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)),
@@ -470,29 +513,75 @@ def test_resample_interpolate_equals_naive(spark, vals, gaps):
         max_size=25,
     )
 )
+# deep graphs, where an in-job fixpoint test could stop a round early
+@example(edges=[(i, i + 1) for i in range(40)])
+@example(edges=[(i + 1, i) for i in range(40)])
+@example(edges=[((i * 17) % 41, ((i + 1) * 17) % 41) for i in range(40)])
+@example(edges=[(i, i + 1) for i in range(12)] + [(100 + i, 101 + i) for i in range(12)])
 @_settings
 def test_star_cc_equals_label_propagation(spark, edges):
     """Alternating large-star/small-star CC produces EXACTLY the same
     (node -> component-min) labeling as min-label propagation on random
     graphs — chains, hubs, self-loops, parallel edges and all."""
-    from etl_cascalog_spark.operators.dedup import (
-        connected_components_labelprop,
-        connected_components_star,
-    )
+    from etl_cascalog_spark.operators.dedup import connected_components
     from etl_cascalog_spark.session import release_all_blocks
 
     df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
-    want = {
-        (r.node, r.label) for r in connected_components_labelprop(df).collect()
-    }
-    got = {
-        (r.node, r.label) for r in connected_components_star(df).collect()
-    }
+    want = {(r.node, r.label) for r in _labelprop_cc(df).collect()}
+    got = {(r.node, r.label) for r in connected_components(df).collect()}
     release_all_blocks(spark)
     # EXACT agreement, self-loop-only nodes included: star takes its node
     # universe from the raw pairs before dropping self-loops, so the two
     # algorithms label the identical node set
     assert got == want
+
+
+def _cc_build_jobs(spark, monkeypatch, edges):
+    """(Spark jobs, eager localCheckpoint calls) submitted while building
+    ``connected_components`` over ``edges``, AQE off so that each eager
+    checkpoint is exactly one job."""
+    from etl_cascalog_spark.operators.dedup import connected_components
+    from etl_cascalog_spark.plans.lint import count_build_jobs
+    from etl_cascalog_spark.session import release_all_blocks
+
+    df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
+    checkpoints = []
+    cls = type(df)
+    orig = cls.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        checkpoints.append(1)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counted)
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, n_jobs = count_build_jobs(spark, lambda: connected_components(df), "cc")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prior)
+        release_all_blocks(spark)
+    return n_jobs, len(checkpoints)
+
+
+def test_star_cc_star_forest_converges_in_one_round(spark, monkeypatch):
+    """A star forest centered on the component minima is the fixpoint:
+    both rewire counts are 0 on round 1, so the build is the setup
+    checkpoint plus ONE round checkpoint."""
+    star_forest = [(1, 2), (1, 3), (4, 1), (10, 11), (10, 12), (20, 21)]
+    assert _cc_build_jobs(spark, monkeypatch, star_forest) == (2, 2)
+
+
+def test_star_cc_build_jobs_are_setup_and_round_checkpoints(spark, monkeypatch):
+    """The build submits the setup checkpoint and one checkpoint per
+    round, nothing else: convergence is read off the round job, with no
+    probe job at the fixpoint. An empty edge set runs no round."""
+    n_jobs, n_checkpoints = _cc_build_jobs(
+        spark, monkeypatch, [(i, i + 1) for i in range(40)]
+    )
+    assert n_jobs == n_checkpoints > 2
+    assert _cc_build_jobs(spark, monkeypatch, [(3, 3), (5, 5)]) == (1, 1)
+    assert _cc_build_jobs(spark, monkeypatch, []) == (1, 1)
 
 
 @given(
