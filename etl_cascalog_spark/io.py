@@ -47,8 +47,8 @@ TABLES = (
 #: immutable driver fixtures, so the footer-read schema inference (one
 #: Spark job per `spark.read.parquet` call) is paid ONCE per path per
 #: process; every later plan construction passes the cached schema
-#: explicitly and submits ZERO jobs — the property tools/plan_audit.py's
-#: eager-jobs gate enforces. The key carries the path's stat fingerprint
+#: explicitly and submits ZERO jobs — the property bench.py's eager-jobs
+#: gate enforces. The key carries the path's stat fingerprint
 #: (ADVICE r10): a fixture REWRITTEN at the same path with a different
 #: schema re-infers instead of silently reading nulls through the stale
 #: one. At 100 TB the same discipline applies: a production catalog

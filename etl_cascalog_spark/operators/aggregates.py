@@ -303,7 +303,6 @@ def mad_outlier_hist(
     group_col: str,
     value_col: str,
     k_mad: int | float = 3,
-    cache: bool = True,
 ):
     """Per-group median, MAD (median absolute deviation), and count of
     rows beyond ``k_mad``·MAD — from ONE shuffle of the raw data.
@@ -343,12 +342,10 @@ def mad_outlier_hist(
     _require_discrete_dtype(df, value_col, "mad_outlier_hist")
     df = df.where(F.col(value_col).isNotNull())
     hist = df.groupBy(group_col, value_col).agg(F.count("*").alias("__c"))
-    if cache:
-        # hist feeds the median pick AND the absdev re-key; ah feeds the
-        # MAD pick AND the final aggregate — uncached, the raw shuffle
-        # re-runs per consumer. Caller releases via scoped_storage;
-        # ``cache=False`` for callers outside it.
-        hist = hist.cache()
+    # hist feeds the median pick AND the absdev re-key; ah feeds the
+    # MAD pick AND the final aggregate — uncached, the raw shuffle
+    # re-runs per consumer. Caller releases via scoped_storage.
+    hist = hist.cache()
     med = _hist_pick_rank(hist, group_col, value_col, "__c", 0.5).select(
         group_col, F.col(value_col).alias(f"median_{value_col}")
     )
@@ -364,8 +361,7 @@ def mad_outlier_hist(
         )
         .agg(F.sum("__c").alias("__c"))
     )
-    if cache:
-        ah = ah.cache()
+    ah = ah.cache()
     mad = _hist_pick_rank(ah, group_col, "__absdev", "__c", 0.5).select(
         group_col, F.col("__absdev").alias(f"mad_{value_col}")
     )
@@ -399,7 +395,6 @@ def winsorized_stats_hist(
     value_col: str,
     p_lo: float = 0.05,
     p_hi: float = 0.95,
-    cache: bool = True,
 ):
     """Per-group winsorization from ONE shuffle of the raw data — the
     discrete-domain fast path of :func:`winsorized_stats` (same output
@@ -427,9 +422,8 @@ def winsorized_stats_hist(
     _require_discrete_dtype(df, value_col, "winsorized_stats_hist")
     df = df.where(F.col(value_col).isNotNull())
     hist = df.groupBy(group_col, value_col).agg(F.count("*").alias("__c"))
-    if cache:
-        # hist feeds the bounds pick AND the clipped aggregate
-        hist = hist.cache()
+    # hist feeds the bounds pick AND the clipped aggregate
+    hist = hist.cache()
     picks = _hist_pick_ranks(hist, group_col, value_col, "__c", [p_lo, p_hi])
     bounds = picks.groupBy(group_col).agg(
         F.max(

@@ -25,14 +25,15 @@ array widths — see :func:`_lazy_query_guard`); ``max_queries`` /
 
 Cache lifecycle (every operator in this module): builders ``.cache()`` the
 encoded/normed corpus because it feeds BOTH sides of a self-join or both
-the candidate and re-rank stages; the returned frame is lazy, so the
-builder cannot unpersist after the caller's action. The contract —
-identical for ``cosine_topk`` and every newer operator — is that callers
-owning a long-lived session release storage once results are consumed:
-:func:`etl_cascalog_spark.session.release_all_blocks` (which also frees
-``localCheckpoint`` data that ``spark.catalog.clearCache()`` leaks).
-``bench.py`` and the CLI already do this per query; tests do it in their
-fixtures.
+the candidate and re-rank stages. The returned frame is lazy, so the
+builder cannot unpersist after the caller's action, and there is no
+opt-out: callers consume the result inside
+:func:`etl_cascalog_spark.session.scoped_storage`, which releases every
+block the build created (``localCheckpoint`` data included, which
+``spark.catalog.clearCache()`` misses). ``bench.py``, the CLI and the
+oracle loops do this per query. A build that never runs an action holds
+no blocks, only SQL cache entries; ``spark.catalog.clearCache()`` drops
+those.
 """
 
 from __future__ import annotations
@@ -214,7 +215,6 @@ def _lazy_count_guard(
     df: DataFrame,
     bound: int,
     message: str,
-    cache: bool = True,
     guard_col: str = "_bound_guard",
 ) -> DataFrame:
     """Attach a LAZY row-count bound to ``df``: a broadcast 1-row
@@ -225,14 +225,12 @@ def _lazy_count_guard(
     where the contract already IS a driver-side matrix) would run a Spark
     job at DataFrame-construction time, which the plan-audit zero-eager-jobs
     gate (R5) forbids for plan-only operators — the assert raises at action
-    time instead. ``df`` is cached (unless ``cache=False`` for callers that
-    cannot unpersist — the module's standard escape hatch) because it feeds
-    BOTH the guard's count and the guarded consumer; without the cache the
-    guard would be a second full pass over the input subtree (the ADVICE r7
-    lesson fixed in ``hard_negatives``, kept here).
+    time instead. ``df`` is cached because it feeds BOTH the guard's count
+    and the guarded consumer; without the cache the guard would be a second
+    full pass over the input subtree (the ADVICE r7 lesson fixed in
+    ``hard_negatives``, kept here).
     """
-    if cache:
-        df = df.cache()
+    df = df.cache()
     guard = F.broadcast(
         df.select(
             F.assert_true(
@@ -251,7 +249,6 @@ def _lazy_query_guard(
     q: DataFrame,
     max_queries: int | None,
     op_name: str,
-    cache: bool = True,
     fanout: int = 1,
     byte_budget: int = QUERY_BROADCAST_BUDGET_BYTES,
     max_rows: int | None = None,
@@ -305,10 +302,8 @@ def _lazy_query_guard(
             " design (eval/re-rank/anchor sets)." + _GUARD_ALT_FOR(
                 override_name
             ),
-            cache=cache,
         )
-    if cache:
-        q = q.cache()
+    q = q.cache()
     n = F.count(F.lit(1))
     est = F.coalesce(F.sum(_est_row_bytes(q)), F.lit(0).cast("long")) * F.lit(
         int(fanout)
@@ -345,7 +340,6 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Brute-force cosine top-k: for every query vector the k nearest corpus
     vectors (self-match excluded). Output: (query_id, neighbor_id, rank,
@@ -355,9 +349,7 @@ def cosine_topk(
     bytes ≤ 64 MB, width measured from the data), ``max_queries`` as the
     explicit row-count override — a corpus-sized or production-width query
     frame would bypass ``autoBroadcastJoinThreshold`` through the mandatory
-    hint and is refused instead. ``cache=False`` skips the internal
-    query/corpus caches for callers outside ``scoped_storage`` that cannot
-    unpersist them (same escape hatch as :func:`hard_negatives`).
+    hint and is refused instead.
     """
     from etl_cascalog_spark.io import ensure_min_parallelism
 
@@ -376,15 +368,13 @@ def cosine_topk(
         ),
         max_queries,
         "cosine_topk",
-        cache=cache,
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         norm(F.col(vec_col)).alias("ncv"),
     )
-    if cache:
-        c = c.cache()
+    c = c.cache()
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -409,7 +399,6 @@ def cosine_topk_blas(
     vec_col: str = "embedding",
     k: int = 5,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Vectorized exact cosine top-k — the PRODUCTION scorer (closes the
     interpreted-fold floor of :func:`cosine_topk`, which stays as the
@@ -459,9 +448,8 @@ def cosine_topk_blas(
         # materializes anything. The stats pass and the collect are TWO
         # actions over the same plan (ADVICE r11) — cache q_proj across
         # the pair (released below) so an expensive upstream query isn't
-        # recomputed; ``cache=False`` for callers outside scoped_storage.
-        if cache:
-            q_proj = q_proj.cache()
+        # recomputed.
+        q_proj = q_proj.cache()
         try:
             stats = q_proj.select(
                 F.count(F.lit(1)).alias("n"),
@@ -485,8 +473,7 @@ def cosine_topk_blas(
         finally:
             # both rows and bytes now live on the driver (or the guard
             # refused) — the executor-side copy is dead weight either way
-            if cache:
-                q_proj.unpersist()
+            q_proj.unpersist()
     else:
         # explicit override: the r9 fused single-job path — collect
         # max_queries+1 rows and refuse on overflow BEFORE materializing
@@ -596,7 +583,6 @@ def lsh_cosine_topk(
     dim: int = 64,
     seed: int = 7,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """LSH-bucketed cosine top-k: score only candidates in the query's
     hyperplane bucket — the equi-join replaces the cross join, so the
@@ -607,8 +593,7 @@ def lsh_cosine_topk(
     because a bare un-hinted join measurably flips the build side onto
     the cached corpus and serializes the probe (see
     :func:`_lazy_query_guard`); corpus-vs-corpus similarity belongs to
-    ``embedding_neardup`` / ``hard_negatives_lsh``. ``cache=False`` skips
-    the internal caches for callers outside ``scoped_storage``."""
+    ``embedding_neardup`` / ``hard_negatives_lsh``."""
     from etl_cascalog_spark.io import ensure_min_parallelism
 
     corpus = ensure_min_parallelism(corpus, id_col)
@@ -622,7 +607,6 @@ def lsh_cosine_topk(
         ),
         max_queries,
         "lsh_cosine_topk",
-        cache=cache,
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -630,8 +614,7 @@ def lsh_cosine_topk(
         norm(F.col(vec_col)).alias("ncv"),
         lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
-    if cache:
-        c = c.cache()  # per-row norms: once per side, not per candidate pair
+    c = c.cache()  # per-row norms: once per side, not per candidate pair
     scored = (
         c.join(F.broadcast(q), on="bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -730,7 +713,6 @@ def ivf_cosine_topk(
     seed: int = 11,
     nprobe: int = 1,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) cosine top-k — the second ANN scale path next to
     :func:`lsh_cosine_topk`: corpus vectors are assigned to their nearest
@@ -770,7 +752,6 @@ def ivf_cosine_topk(
             ),
             max_queries,
             "ivf_cosine_topk",
-            cache=cache,
         )
     else:
         q = _lazy_query_guard(
@@ -782,7 +763,6 @@ def ivf_cosine_topk(
             ),
             max_queries,
             "ivf_cosine_topk",
-            cache=cache,
             fanout=nprobe,
         ).select("query_id", "qv", "nq", F.explode("cells").alias("cell"))
     c = corpus.select(
@@ -791,8 +771,7 @@ def ivf_cosine_topk(
         norm(F.col(vec_col)).alias("ncv"),
         ivf_cell(F.col(vec_col), cents).alias("cell"),
     )
-    if cache:
-        c = c.cache()  # per-row norms: once per side, not per candidate pair
+    c = c.cache()  # per-row norms: once per side, not per candidate pair
     scored = (
         c.join(F.broadcast(q), on="cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -932,7 +911,6 @@ def quantized_dot_topk(
     vec_col: str = "embedding",
     k: int = 5,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Int8-quantized brute-force top-k by integer dot product — the
     SQ8 re-rank shape (FAISS-style scalar quantization): both sides are
@@ -956,7 +934,6 @@ def quantized_dot_topk(
         ),
         max_queries,
         "quantized_dot_topk",
-        cache=cache,
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), quantize_int8(F.col(vec_col)).alias("qc")
@@ -991,7 +968,6 @@ def hard_negatives(
     k: int = 3,
     anchor_filter: Column | None = None,
     max_anchors: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor, the
     ``k`` highest-cosine vectors with a DIFFERENT label — the near-boundary
@@ -1021,10 +997,6 @@ def hard_negatives(
     recall of the single hardest negative for a bucket-local candidate
     set; hard-negative mining tolerates that approximation by design
     (any sufficiently-hard negative works).
-
-    ``cache=False`` skips the internal anchor/corpus caches for callers
-    outside ``scoped_storage`` that cannot unpersist them (same escape
-    hatch as :func:`mmr_rerank` / ``global_token_offsets``).
     """
     from etl_cascalog_spark.io import ensure_min_parallelism
 
@@ -1035,7 +1007,7 @@ def hard_negatives(
     # explicit row override. The projection is cached inside the guard (it
     # feeds the guard's aggregate AND the broadcast), so the guard is
     # never a second full scan (ADVICE r7); lifecycle: scoped_storage at
-    # the call site, or cache=False
+    # the call site
     a_proj = anchors.select(
         F.col(id_col).alias("anchor_id"),
         F.col(vec_col).alias("av"),
@@ -1052,7 +1024,6 @@ def hard_negatives(
             " mining use hard_negatives_lsh (bucketed candidate join,"
             " nothing broadcast-unbounded), pass an anchor_filter, or"
             " raise max_anchors explicitly if you know the set fits.",
-            cache=cache,
         )
     else:
         # dual default bound: the 64 MB byte budget (wide anchors cannot
@@ -1063,7 +1034,6 @@ def hard_negatives(
             a_proj,
             None,
             "hard_negatives (anchor side)",
-            cache=cache,
             max_rows=DEFAULT_MAX_ANCHORS,
             override_name="max_anchors",
         )
@@ -1074,8 +1044,7 @@ def hard_negatives(
         norm(F.col(vec_col)).alias("nc"),
         F.col(label_col).alias("c_label"),
     )
-    if cache:
-        c = c.cache()
+    c = c.cache()
     scored = (
         c.crossJoin(a)
         .where(F.col("a_label") != F.col("c_label"))
@@ -1111,7 +1080,6 @@ def lsh_multiprobe_topk(
     seed: int = 7,
     n_probe_bits: int | None = None,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Multi-probe LSH cosine top-k: each query probes its own bucket PLUS
     every Hamming-1 neighbor bucket (one sign bit flipped) — the standard
@@ -1155,7 +1123,6 @@ def lsh_multiprobe_topk(
         ),
         max_queries,
         "lsh_multiprobe_topk",
-        cache=cache,
         fanout=1 + bits,
     ).select(
         "query_id",
@@ -1175,8 +1142,7 @@ def lsh_multiprobe_topk(
         norm(F.col(vec_col)).alias("ncv"),
         base.alias("bucket"),
     )
-    if cache:
-        c = c.cache()
+    c = c.cache()
     scored = (
         c.join(F.broadcast(q), on="bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -1255,7 +1221,6 @@ def pq_adc_topk(
     k_c: int = 4,
     seed: int = 13,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Product-quantization top-k by Asymmetric Distance Computation: the
     corpus is stored as ``m`` small integer codes (8 bytes/vector here vs
@@ -1288,8 +1253,7 @@ def pq_adc_topk(
             for j in range(m)
         ],
     )
-    if cache:
-        c = c.cache()
+    c = c.cache()
     q = _lazy_query_guard(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -1308,7 +1272,6 @@ def pq_adc_topk(
         ),
         max_queries,
         "pq_adc_topk",
-        cache=cache,
     )
     dist = None
     for j in range(m):
@@ -1345,7 +1308,6 @@ def ivfpq_topk(
     k_c: int = 4,
     pq_seed: int = 13,
     max_queries: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """IVF+PQ — the production ANN index shape (FAISS IVFPQ): candidates
     are pruned to the query's IVF cell (equi-join, no cross join), then
@@ -1375,8 +1337,7 @@ def ivfpq_topk(
             for j in range(m)
         ],
     )
-    if cache:
-        c = c.cache()
+    c = c.cache()
     q = _lazy_query_guard(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -1396,7 +1357,6 @@ def ivfpq_topk(
         ),
         max_queries,
         "ivfpq_topk",
-        cache=cache,
     )
     dist = None
     for j in range(m):
@@ -1430,7 +1390,6 @@ def hard_negatives_lsh(
     dim: int = 64,
     n_planes: int = 8,
     seed: int = 7,
-    cache: bool = True,
 ) -> DataFrame:
     """Corpus-scale hard-negative mining: the bucketed sibling of
     :func:`hard_negatives` — candidates come from the anchor's hyperplane
@@ -1444,9 +1403,6 @@ def hard_negatives_lsh(
     100 TB plan. Mining tolerates the bucket approximation by design
     (any sufficiently-hard different-label negative carries the
     contrastive gradient; the single hardest one is not required).
-
-    ``cache=False`` skips the internal corpus-side cache for callers
-    outside ``scoped_storage`` (same escape hatch as :func:`mmr_rerank`).
 
     Same output contract: (anchor_id, negative_id, rank, cos_sim)."""
     from etl_cascalog_spark.io import ensure_min_parallelism
@@ -1467,8 +1423,7 @@ def hard_negatives_lsh(
         F.col(label_col).alias("c_label"),
         lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
-    if cache:
-        c = c.cache()
+    c = c.cache()
     scored = (
         c.join(a, on="bucket")
         .where(F.col("a_label") != F.col("c_label"))
@@ -1501,7 +1456,6 @@ def mmr_rerank(
     n_candidates: int = 10,
     k: int = 3,
     lam: float = 0.5,
-    cache: bool = True,
     max_queries: int | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified re-rank (Carbonell &
@@ -1549,7 +1503,6 @@ def mmr_rerank(
         ),
         max_queries,
         "mmr_rerank",
-        cache=cache,  # same escape hatch as the other internal caches here
     )
     c = corpus.select(
         F.col(id_col).alias("cid"),
@@ -1573,9 +1526,7 @@ def mmr_rerank(
         .where(F.col("crank") <= n_candidates)
         .select("qid", "cid", "cv", "nc", "rel")
     )
-    if cache:
-        cands = cands.cache()  # feeds sims + every selection step
-        # (lifecycle: scoped_storage at the call site, or cache=False)
+    cands = cands.cache()  # feeds sims + every selection step
     a = cands.select(
         "qid", F.col("cid").alias("a"), F.col("cv").alias("av"), F.col("nc").alias("na")
     )

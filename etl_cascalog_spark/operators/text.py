@@ -399,7 +399,6 @@ def global_token_offsets(
     n_tokens_col: str = "n_tokens",
     ctx_tokens: int = 512,
     bucket_size: int = 4096,
-    cache: bool = True,
 ):
     """Sequence-packing offsets: the exclusive global token offset of every
     document in the id-ordered concatenated corpus, plus the context bin
@@ -435,10 +434,9 @@ def global_token_offsets(
     # lineage once per branch (measured: training_data_pipeline pays its
     # whole curation subtree twice, 13.2s -> 8s at sf0.1 with the cache).
     # Lifecycle: wrap the call in session.scoped_storage (bench/CLI/oracle
-    # loops do), or pass cache=False to keep the build storage-free.
+    # loops do).
     b = b.withColumn("__within", F.coalesce(F.sum(n).over(w_in), F.lit(0)))
-    if cache:
-        b = b.cache()
+    b = b.cache()
     totals = b.groupBy("__bkt").agg(F.sum(n).alias("__tot"))
     w_b = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
     bases = totals.withColumn("__base", F.coalesce(F.sum("__tot").over(w_b), F.lit(0)))

@@ -29,7 +29,6 @@ def resample_interpolate_daily(
     key_col: str,
     date_col: str,
     value_col: str,
-    cache: bool = True,
 ) -> DataFrame:
     """Densify (key, date, value) to EVERY day between each key's first and
     last observation, linearly interpolating the gaps.
@@ -42,14 +41,12 @@ def resample_interpolate_daily(
     # upstream lineage executes once per branch (the same double-execution
     # the packing prefix fix removed). Released by the callers'
     # scoped_storage epilogue. ≤ |keys × observed days| rows.
-    # cache=False lets a caller that already materialized `known` skip it.
     k = known.select(
         F.col(key_col).alias("key"),
         F.col(date_col).cast("date").alias("day"),
         F.col(value_col).cast("long").alias("v"),
     )
-    if cache:
-        k = k.cache()
+    k = k.cache()
     # per-key daily spine: one row per key → sequence() explode, map-side
     # after the (tiny) min/max agg
     spine = (

@@ -264,7 +264,7 @@ def lint_plan(df: DataFrame) -> PlanReport:
 #:       and pagerank are iteration-capped);
 #:   (c) file-source discovery (binaryFile listing) — budget 1-2.
 #: Anything NOT listed here must submit ZERO jobs while its plan is built —
-#: tools/plan_audit.py and tests/test_plan_lint.py both enforce it (count
+#: bench.py's audit pass and tests/test_plan_lint.py both enforce it (count
 #: AND budget), so a new eager collect (the round-8/9 zorder-bounds /
 #: blas-count defects) or a job-count blow-up fails loudly instead of
 #: shipping.

@@ -1122,7 +1122,7 @@ def build_reference_report(
     Sliding/button/trgx jobs need ``spine``; trgx jobs need the config
     ``skeleton`` (the reference fetched it from conf.trgx_cocacola at plan
     time, trgx.clj:198-201). ``compared`` (trgx jobs only) supplies a
-    precomputed :func:`trgx_compared_frame` — the shared-pivot fusion path
+    precomputed comparison frame — the shared-pivot fusion path
     of :func:`build_trgx_reports_shared`."""
     spec = REPORTS[name]
     if isinstance(spec, ReferenceReport):
@@ -1138,36 +1138,27 @@ def build_reference_report(
     raise KeyError(name)
 
 
-def trgx_compared_frame(spark: SparkSession, source_df: DataFrame,
-                        spine: tuple[str, str]) -> DataFrame:
-    """The comparison pass EVERY sliding trgx report shares (identical
-    dims/date/value/spine — ``_TRGX_DIMS`` is fixed by the score tap's
-    collect-kv group, m_cocacola_score_period.clj:45-48). Compute it once,
-    cache it, and feed N reports via ``build_reference_report(...,
-    compared=...)`` — the repeated-pivot fusion SURVEY §4.2/§7 deferred.
-
-    The reference ran each report as its own Hadoop job, so the pivot ran
-    once PER JOB over the full source (cascalog.sh:37-119); fused, the
-    scan + 4-way join + pivot + spine-lag window run once per FAMILY.
-    """
-    return _trgx_compared(spark, source_df, spine)
-
-
 def build_trgx_reports_shared(
     spark: SparkSession,
     source_df: DataFrame,
     names: Sequence[str],
     spine: tuple[str, str],
     skeleton: dict,
-    cache: bool = True,
 ) -> dict[str, DataFrame]:
     """Build several sliding trgx reports off ONE shared comparison frame.
-    With ``cache=True`` the shared frame is ``.cache()``'d — wrap the
-    consuming evaluation in ``session.scoped_storage`` so the blocks die
-    with the job (the engine-wide storage lifecycle convention)."""
-    shared = trgx_compared_frame(spark, source_df, spine)
-    if cache:
-        shared = shared.cache()
+
+    The comparison pass is the same for EVERY sliding trgx report
+    (identical dims/date/value/spine — ``_TRGX_DIMS`` is fixed by the score
+    tap's collect-kv group, m_cocacola_score_period.clj:45-48), so it runs
+    once, is ``.cache()``'d, and feeds N reports via
+    ``build_reference_report(..., compared=...)`` — the repeated-pivot
+    fusion SURVEY §4.2/§7 deferred. The reference ran each report as its
+    own Hadoop job, so the pivot ran once PER JOB over the full source
+    (cascalog.sh:37-119); fused, the scan + 4-way join + pivot + spine-lag
+    window run once per FAMILY. Wrap the consuming evaluation in
+    ``session.scoped_storage`` so the blocks die with the job (the
+    engine-wide storage lifecycle convention)."""
+    shared = _trgx_compared(spark, source_df, spine).cache()
     return {
         n: build_reference_report(
             spark, n, source_df, spine, skeleton, compared=shared
@@ -1222,10 +1213,3 @@ def _build_sliding_normalized(spark, name, spec, prepared, spine) -> DataFrame:
     )
     return build_report(spark, prepared, rspec)
 
-
-def build_achievement_rate(
-    spark: SparkSession, source_df: DataFrame, bg_all: bool = False
-) -> DataFrame:
-    """Back-compat wrapper over the registry achievement_rate entries."""
-    key = "score_achievement_rate_bg_all" if bg_all else "score_achievement_rate"
-    return build_reference_report(spark, key, source_df)

@@ -104,9 +104,7 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in ids.split(",") if k}
 
 
-def unpersist_rdd_ids(
-    spark: SparkSession, ids: set[int], blocking: bool = False
-) -> None:
+def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
     """Drop the blocks of specific persistent RDDs by id (no-op for ids
     already gone). Used by iterative operators to retire round ``N-1``'s
     ``localCheckpoint`` as soon as round ``N`` is materialized, so a
@@ -117,11 +115,11 @@ def unpersist_rdd_ids(
     for rid in ids:
         jrdd = jmap.get(rid)
         if jrdd is not None:
-            jrdd.unpersist(blocking)
+            jrdd.unpersist(False)
 
 
 @contextmanager
-def scoped_storage(spark: SparkSession, blocking: bool = False):
+def scoped_storage(spark: SparkSession):
     """Scope-bound storage lifecycle: every cache / ``localCheckpoint``
     block CREATED inside the ``with`` body is released on exit — the
     structural replacement for the "callers must remember
@@ -145,10 +143,10 @@ def scoped_storage(spark: SparkSession, blocking: bool = False):
         yield
     finally:
         created = persistent_rdd_ids(spark) - before
-        unpersist_rdd_ids(spark, created, blocking)
+        unpersist_rdd_ids(spark, created)
 
 
-def release_all_blocks(spark: SparkSession, blocking: bool = False) -> None:
+def release_all_blocks(spark: SparkSession) -> None:
     """Session-level storage reset between independent jobs: SQL cache
     + every persistent RDD, INCLUDING ``localCheckpoint`` blocks.
 
@@ -162,5 +160,5 @@ def release_all_blocks(spark: SparkSession, blocking: bool = False) -> None:
     collecting/writing them."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for jrdd in list(jmap.values()):
-        jrdd.unpersist(blocking)
+        jrdd.unpersist(False)
     spark.catalog.clearCache()

@@ -610,7 +610,7 @@ def test_achievement_rate_static_report(spark):
     """Static FR report shape (no sliding): snapshot dw_dt, 2-level payload
     of raw metrics, bg-all variant unioned (O3)."""
     from etl_cascalog_spark.io import from_rows
-    from etl_cascalog_spark.plans.reports_registry import build_achievement_rate
+    from etl_cascalog_spark.plans.reports_registry import build_reference_report
 
     rows = [
         ("2017-01-31", "SBL", "SBL", "GT", "kpiA", 80.0, 0.5, 40.0),
@@ -623,8 +623,8 @@ def test_achievement_rate_static_report(spark):
         "period string, bg string, bottler string, channel string, kpi string,"
         " c_total_score double, c_weight double, value double",
     )
-    out = build_achievement_rate(spark, df).unionByName(
-        build_achievement_rate(spark, df, bg_all=True)
+    out = build_reference_report(spark, "score_achievement_rate", df).unionByName(
+        build_reference_report(spark, "score_achievement_rate_bg_all", df)
     ).collect()
     assert all(str(r.dw_dt) == "9999-12-31" for r in out)
     plain = [r for r in out if r.selector == '{"bg":"SBL","channel":"GT","kpi":"kpiA"}']
@@ -973,11 +973,7 @@ def test_plan_audit_dedupes_cached_reprints():
     """audit_plan counts unique plan lines: the same Exchange reprinted
     inside an InMemoryRelation block is counted once; ReusedExchange and
     BroadcastExchange are never counted as shuffles."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from plan_audit import audit_plan
+    from bench import audit_plan
 
     plan = """
     *(3) SortMergeJoin [a#1], [b#2], FullOuter
@@ -1244,10 +1240,7 @@ def test_hist_fast_path_rejects_continuous_dtype(spark):
         winsorized_stats_hist(df, "grp", "v")
     # integral and decimal stay accepted (plan builds lazily, no job)
     mad_outlier_hist(
-        spark.createDataFrame([("a", 1)], "grp string, v long"),
-        "grp",
-        "v",
-        cache=False,
+        spark.createDataFrame([("a", 1)], "grp string, v long"), "grp", "v"
     )
     winsorized_stats_hist(
         spark.createDataFrame([("a", 1)], "grp string, v long").select(
@@ -1255,8 +1248,8 @@ def test_hist_fast_path_rejects_continuous_dtype(spark):
         ),
         "grp",
         "v",
-        cache=False,
     )
+    spark.catalog.clearCache()  # the builds' lazy .cache() entries
 
 
 def test_hist_pick_ranks_excludes_null_values(spark):
@@ -1574,38 +1567,24 @@ def test_flagship_plan_shapes(spark):
     joins must never SortMergeJoin (dims broadcast), selective scans must
     push filters into parquet, and the z-order bucketing must stay a
     single-Exchange aggregate. Uses the AQE-final executed plan, same
-    counting as tools/plan_audit.py."""
-    import sys
-    from pathlib import Path
+    counting as the bench.py audit pass."""
+    from tests.conftest import final_audit
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from plan_audit import audit_plan
-
-    from etl_cascalog_spark.catalog import QUERIES
-    from tests.conftest import SF_SMOKE
-
-    def final_audit(name):
-        df = QUERIES[name].build(spark, SF_SMOKE)
-        df.write.format("noop").mode("overwrite").save()
-        a = audit_plan(df._jdf.queryExecution().executedPlan().toString())
-        spark.catalog.clearCache()
-        return a
-
-    star = final_audit("star_join_revenue")
+    star = final_audit(spark, "star_join_revenue")
     assert star["smj"] == 0 and star["bhj"] >= 3 and star["push"] == "yes"
 
-    pricing = final_audit("pricing_summary")
+    pricing = final_audit(spark, "pricing_summary")
     assert pricing["smj"] == 0 and pricing["push"] == "yes"
     assert pricing["exch"] <= 1  # one grouped agg, nothing else
 
-    z = final_audit("zorder_layout_stats")
+    z = final_audit(spark, "zorder_layout_stats")
     # round 9: domain bounds became a LAZY broadcast 1-row aggregate
     # cross-joined onto the rows (zero plan-build jobs), so the intended
     # shape is one bounds-agg exchange + one broadcast nested loop for
     # the 1-row attach, plus the 16-group agg exchange — never an SMJ
     assert z["smj"] == 0 and z["bnlj"] == 1 and z["exch"] <= 2
 
-    recall = final_audit("ann_recall_eval")
+    recall = final_audit(spark, "ann_recall_eval")
     assert recall["smj"] == 0  # bounded top-k sides broadcast explicitly
 
 
@@ -2244,22 +2223,7 @@ def test_round5_plan_shapes(spark):
     anywhere (the k-means assignment is a broadcast nested-loop against
     the K-row centroid side — NOT a cartesian), no SortMergeJoin where
     broadcast is expected, pushdown intact on the scans."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from plan_audit import audit_plan
-
-    from etl_cascalog_spark.catalog import QUERIES
-    from etl_cascalog_spark.session import release_all_blocks
-    from tests.conftest import SF_SMOKE
-
-    def final_audit(name):
-        df = QUERIES[name].build(spark, SF_SMOKE)
-        df.write.format("noop").mode("overwrite").save()
-        a = audit_plan(df._jdf.queryExecution().executedPlan().toString())
-        release_all_blocks(spark)
-        return a
+    from tests.conftest import final_audit
 
     for name in (
         "semantic_dedup_kmeans",
@@ -2270,18 +2234,18 @@ def test_round5_plan_shapes(spark):
         "unpivot_metrics_long",
         "recursive_hierarchy_rollup",
     ):
-        a = final_audit(name)
+        a = final_audit(spark, name)
         assert a["cart"] == 0, (name, a)
 
     # resample: the spine-densify join MAY SortMergeJoin on (key, day) —
     # that sort is exactly the downstream windows' required (key, day)
     # ordering, so it's the fused plan, not a regression; what must never
     # appear is a cartesian or an unpartitioned window
-    r = final_audit("resample_interpolate_daily")
+    r = final_audit(spark, "resample_interpolate_daily")
     assert r["smj"] <= 1
 
     # unpivot is an Expand over one aggregate: at most one exchange
-    u = final_audit("unpivot_metrics_long")
+    u = final_audit(spark, "unpivot_metrics_long")
     assert u["smj"] == 0 and u["bhj"] == 0 and u["exch"] <= 1
 
 
@@ -2486,34 +2450,20 @@ def test_tpch_plan_shapes(spark):
     SCALE.md round-7 notes promise. Dims broadcast (no SortMergeJoin
     anywhere in these), no CartesianProduct, pushdown reaches the scans,
     and the agg-heavy queries keep their exchange budget."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from plan_audit import audit_plan
-
-    from etl_cascalog_spark.catalog import QUERIES
-    from tests.conftest import SF_SMOKE
-
-    def final_audit(name):
-        df = QUERIES[name].build(spark, SF_SMOKE)
-        df.write.format("noop").mode("overwrite").save()
-        a = audit_plan(df._jdf.queryExecution().executedPlan().toString())
-        spark.catalog.clearCache()
-        return a
+    from tests.conftest import final_audit
 
     for name in ("tpch_q3", "tpch_q5", "tpch_q8", "tpch_q10", "tpch_q21"):
-        a = final_audit(name)
+        a = final_audit(spark, name)
         assert a["smj"] == 0, f"{name}: dims must broadcast, got SMJ\n{a}"
         assert a["cart"] == 0, f"{name}: cartesian product\n{a}"
 
-    q6 = final_audit("tpch_q6")  # scan-side predicates, single-row agg
+    q6 = final_audit(spark, "tpch_q6")  # scan-side predicates, single-row agg
     assert q6["exch"] <= 1 and q6["bhj"] == 0 and q6["push"] == "yes"
 
-    q17 = final_audit("tpch_q17")  # per-part agg join-back, no window funnel
+    q17 = final_audit(spark, "tpch_q17")  # per-part agg join-back, no window funnel
     assert q17["smj"] == 0 and q17["exch"] <= 2
 
-    q18 = final_audit("tpch_q18")  # HAVING-pruned side joins broadcast
+    q18 = final_audit(spark, "tpch_q18")  # HAVING-pruned side joins broadcast
     assert q18["smj"] == 0 and q18["cart"] == 0
 
 
@@ -2687,33 +2637,19 @@ def test_new_operator_plan_shapes(spark):
     pass must stay join-keyed (no cartesian/SMJ surprises beyond the one
     hash-keyed dup join), and the binary tap must keep its decode as
     Arrow stages with no shuffle before the decode."""
-    import sys
-    from pathlib import Path
+    from tests.conftest import final_audit
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from plan_audit import audit_plan
-
-    from etl_cascalog_spark.catalog import QUERIES
-    from etl_cascalog_spark.session import scoped_storage
-    from tests.conftest import SF_SMOKE
-
-    def final_audit(name):
-        with scoped_storage(spark):
-            df = QUERIES[name].build(spark, SF_SMOKE)
-            df.write.format("noop").mode("overwrite").save()
-            return audit_plan(df._jdf.queryExecution().executedPlan().toString())
-
-    spans = final_audit("substring_dup_spans")
+    spans = final_audit(spark, "substring_dup_spans")
     assert spans["cart"] == 0 and spans["bnlj"] == 0
     # window sort (id), gram-hash agg, dup join back, interval merge,
     # totals join: bounded exchange count, not a per-branch blowup
     assert spans["exch"] <= 8, spans
 
-    tap = final_audit("binaryfile_image_ingest")
+    tap = final_audit(spark, "binaryfile_image_ingest")
     assert tap["cart"] == 0 and tap["smj"] == 0
     assert tap["exch"] <= 2, tap  # the small doc_id join only
 
-    keep = final_audit("neardup_keep_best")
+    keep = final_audit(spark, "neardup_keep_best")
     assert keep["cart"] == 0
 
 
