@@ -8921,11 +8921,12 @@ _MMR_NORM = "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x A
     """,
     doc="MMR diversified top-k (Carbonell-Goldstein maximal marginal "
     "relevance, lambda=0.5): greedy selection of 3 from each query's "
-    "top-10 cosine candidates, UNROLLED into 3 declarative argmax steps "
-    "(similarity.mmr_rerank) — the khop discipline applied to a "
-    "sequential retrieval heuristic, no pandas state, candidate-pair "
-    "sims bounded at |C|^2 per query. Selections AND scores hash-match "
-    "DuckDB running the same algebra (sequential-fold dots, one "
+    "top-10 cosine candidates as ONE grouped fold (similarity.mmr_rerank): "
+    "a groupBy(qid) collects the candidate structs and a 3-step SQL "
+    "aggregate over sequence(1, 3) takes each step's argmax, so the "
+    "sequential heuristic runs inside one row, no pandas state, no "
+    "per-step job. Selections AND scores hash-match DuckDB running the "
+    "same algebra as hand-unrolled CTE steps (sequential-fold dots, one "
     "multiply-subtract per step — bit-portable). This is the RAG "
     "context-assembly de-dup step downstream of every ann_*_topk "
     "retriever.",

@@ -90,28 +90,6 @@ def grouped_pivot(
     return df.groupBy(*group_cols).agg(collect_kv(key, value).alias(out_col))
 
 
-def grouped_agg_pandas_example():
-    """§2.10 UDAF escape hatch: a GROUPED_AGG pandas_udf (Arrow-batched)
-    for aggregations no built-in composition can express. The reference's
-    defaggregatefn triples (init/accumulate/finish, trgx.clj:45,63-77)
-    all mapped to built-ins here — this exists to document the pattern
-    (and is tested) for genuinely custom cases.
-
-    Returns a (fn, example) pair: a trimmed-mean aggregate (drop the top
-    and bottom 10% before averaging — not expressible as one built-in).
-    """
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def trimmed_mean(v: pd.Series) -> float:
-        lo, hi = v.quantile(0.1), v.quantile(0.9)
-        kept = v[(v >= lo) & (v <= hi)]
-        return float(kept.mean()) if len(kept) else float("nan")
-
-    return trimmed_mean
-
-
 def exact_group_percentiles(
     df,
     group_col: str,

@@ -28,6 +28,7 @@ pipelines cap posting lists.
 from __future__ import annotations
 
 import random
+from decimal import Decimal
 from itertools import count as _itercount
 
 from pyspark.sql import Column, DataFrame, Window
@@ -239,8 +240,16 @@ def prefix_filter_jaccard_pairs(
             ).alias("ord")
         )
     )
+    # ⌈t·sz⌉ in exact decimal arithmetic: in double, 25 · 0.56 is
+    # 14.000000000000002, which shortens the prefix and fails the length
+    # filter for a pair whose Jaccard is exactly t
+    t = F.lit(Decimal(repr(threshold)))
+
+    def min_overlap(sz: Column) -> Column:
+        return F.ceil(t * sz)
+
     size = F.size("ord")
-    p = (size - F.ceil(F.lit(threshold) * size) + 1).cast("int")
+    p = (size - min_overlap(size) + 1).cast("int")
     pref = ordered.select(
         "doc",
         size.alias("sz"),
@@ -248,14 +257,13 @@ def prefix_filter_jaccard_pairs(
     ).select("doc", "sz", F.col("e.s").alias("shingle"))
     a = pref.toDF("doc_a", "sz_a", "shingle")
     b = pref.toDF("doc_b", "sz_b", "shingle")
-    t = F.lit(threshold)
     candidates = (
         a.join(b, on="shingle")
         .where(
             (F.col("doc_a") < F.col("doc_b"))
-            # length filter: t·|A| ≤ |B| AND t·|B| ≤ |A| (symmetric form)
-            & (F.col("sz_a") * t <= F.col("sz_b"))
-            & (F.col("sz_b") * t <= F.col("sz_a"))
+            # length filter: |B| ≥ ⌈t·|A|⌉ AND |A| ≥ ⌈t·|B|⌉ (symmetric form)
+            & (F.col("sz_b") >= min_overlap(F.col("sz_a")))
+            & (F.col("sz_a") >= min_overlap(F.col("sz_b")))
         )
         .select("doc_a", "doc_b")
         .distinct()

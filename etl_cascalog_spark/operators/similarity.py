@@ -1464,30 +1464,29 @@ def mmr_rerank(
     ``rel - lam * max_sim_to_already_selected`` — the standard retrieval
     trick for de-duplicating near-identical hits in RAG/context assembly.
 
-    The greedy loop is SEQUENTIAL by nature, but ``k`` is a plan-time
-    constant and the candidate set is bounded, so — same discipline as
-    ``graph.khop_min_dist`` — the selection UNROLLS into ``k`` declarative
-    steps (argmax via rank-1 window, next step's diversity term via a
-    ``greatest`` over joins to the already-picked rows). No Python loop
-    over data, no pandas state; candidate-pair sims are |C|² per query,
-    bounded by construction.
+    The greedy loop is SEQUENTIAL by nature, but the candidate set is
+    bounded per query, so it runs inside ONE row: a ``groupBy(qid)``
+    collects the candidates as a ``pool`` of (cid, cv, nc, rel, maxsim)
+    structs, then a ``k``-step ``aggregate`` fold over
+    ``sequence(1, k)`` does the selection. Each step takes the pool's
+    argmax of ``rel`` (first step, ``maxsim`` null) or
+    ``rel - lam * maxsim`` — an inner ``aggregate`` with the total order
+    (mmr desc, cid asc), so ``collect_list`` order cannot matter —
+    appends (cid, mmr) to ``picks``, drops the pick from the pool and
+    raises every remaining ``maxsim`` to its cosine with the pick; an
+    empty pool (``n_candidates < k``) leaves the state unchanged. One
+    shuffle (the candidate window's, reused by the groupBy), no
+    candidate self-join, no per-step job.
 
     All float math (sequential-fold dot products, one multiply-subtract
     per step) is bit-portable, so a SQL engine running the same algebra
     reproduces the SELECTIONS exactly — catalog.mmr_diversified_topk
-    hash-matches selections and scores against DuckDB.
+    hash-matches selections and scores against DuckDB's hand-unrolled
+    greedy steps.
 
     Output: (query_id, rank 1..k, neighbor_id, score) — score is the
     relevance for rank 1 and the MMR value for later ranks, rounded 4dp
     at the edge only (selection compares raw doubles).
-
-    ``k`` is fully parametric: the selection stages are GENERATED in a
-    Python loop over plan-builder steps (the ``graph.khop_min_dist``
-    unroll discipline) — each step is one rank-1 window pick, one
-    broadcast join of the picked row, and a running ``greatest`` update
-    of the max-similarity-to-selected column. Plan depth grows linearly
-    in ``k``; candidate sets are bounded by ``n_candidates``, so every
-    per-step join is broadcast-sized by construction.
     """
     if k < 1:
         raise ValueError("mmr_rerank: k must be >= 1")
@@ -1521,82 +1520,67 @@ def mmr_rerank(
         )
     )
     wq = Window.partitionBy("qid").orderBy(F.col("rel").desc(), F.col("cid"))
-    cands = (
+    pools = (
         scored.withColumn("crank", F.row_number().over(wq))
         .where(F.col("crank") <= n_candidates)
-        .select("qid", "cid", "cv", "nc", "rel")
-    )
-    cands = cands.cache()  # feeds sims + every selection step
-    a = cands.select(
-        "qid", F.col("cid").alias("a"), F.col("cv").alias("av"), F.col("nc").alias("na")
-    )
-    b = cands.select(
-        "qid", F.col("cid").alias("b"), F.col("cv").alias("bv"), F.col("nc").alias("nb")
-    )
-    sims = (
-        a.join(b, "qid")
-        .where(F.col("a") != F.col("b"))
-        .select(
-            "qid",
-            "a",
-            "b",
-            (dot(F.col("av"), F.col("bv")) / (F.col("na") * F.col("nb"))).alias("sim"),
+        .groupBy("qid")
+        .agg(
+            F.collect_list(
+                F.struct(
+                    "cid", "cv", "nc", "rel", F.lit(None).cast("double").alias("maxsim")
+                )
+            ).alias("pool")
         )
     )
 
-    # generated selection stages: `state` holds the still-selectable
-    # candidates with a running max-sim-to-selected column; each step
-    # picks the per-query argmax of the current MMR objective, then
-    # rewrites state for the next step. Step arithmetic matches the old
-    # unrolled k=3 form bit-for-bit: maxsim after step i is the plain
-    # `greatest` chain over the selected rows' sims.
-    state = cands.select("qid", "cid", "rel").withColumn("mmr", F.col("rel"))
-    picked_outs = []
-    has_maxsim = False
-    for i in range(1, k + 1):
-        w_i = Window.partitionBy("qid").orderBy(F.col("mmr").desc(), F.col("cid"))
-        pick = (
-            state.withColumn("r", F.row_number().over(w_i))
-            .where(F.col("r") == 1)
-            .select("qid", F.col("cid").alias("sel"), F.col("mmr").alias("pscore"))
+    def mmr(x: Column) -> Column:
+        return F.when(x["maxsim"].isNull(), x["rel"]).otherwise(
+            x["rel"] - lam_c * x["maxsim"]
         )
-        picked_outs.append(
-            pick.select(
-                "qid",
-                F.col("sel").alias("neighbor_id"),
-                F.lit(i).alias("rank"),
-                F.col("pscore").alias("score"),
+
+    def better(x: Column, b: Column) -> Column:
+        return (mmr(x) > mmr(b)) | ((mmr(x) == mmr(b)) & (x["cid"] < b["cid"]))
+
+    def step(acc: Column, _i: Column) -> Column:
+        pool = acc["pool"]
+
+        def take(best: Column) -> Column:
+            return F.struct(
+                F.transform(
+                    F.filter(pool, lambda x: x["cid"] != best["cid"]),
+                    lambda x: x.withField(
+                        "maxsim",
+                        F.greatest(
+                            x["maxsim"],
+                            dot(best["cv"], x["cv"]) / (best["nc"] * x["nc"]),
+                        ),
+                    ),
+                ).alias("pool"),
+                F.concat(
+                    acc["picks"],
+                    F.array(F.struct(best["cid"].alias("cid"), mmr(best).alias("score"))),
+                ).alias("picks"),
             )
-        )
-        if i == k:
-            break
-        sim_i = (
-            sims.join(F.broadcast(pick.select("qid", "sel")), "qid")
-            .where(F.col("a") == F.col("sel"))
-            .select("qid", F.col("b").alias("cid"), F.col("sim").alias("__sim_i"))
-        )
-        nxt = (
-            state.join(F.broadcast(pick.select("qid", "sel")), "qid")
-            .where(F.col("cid") != F.col("sel"))
-            .join(F.broadcast(sim_i), ["qid", "cid"])
-        )
-        new_maxsim = (
-            F.greatest("maxsim", "__sim_i") if has_maxsim else F.col("__sim_i")
-        )
-        state = nxt.select(
-            "qid",
-            "cid",
-            "rel",
-            new_maxsim.alias("maxsim"),
-        ).withColumn("mmr", F.col("rel") - lam_c * F.col("maxsim"))
-        has_maxsim = True
 
-    out = picked_outs[0]
-    for p in picked_outs[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        F.col("qid").alias("query_id"),
-        F.col("rank").cast("int").alias("rank"),
-        "neighbor_id",
-        F.round("score", 4).alias("score"),
+        argmax = F.aggregate(
+            pool, pool[0], lambda b, x: F.when(better(x, b), x).otherwise(b), take
+        )
+        return F.when(F.size(pool) == 0, acc).otherwise(argmax)
+
+    cid_t = corpus.schema[id_col].dataType.simpleString()
+    picks = F.aggregate(
+        F.sequence(F.lit(1), F.lit(k)),
+        F.struct(
+            F.col("pool").alias("pool"),
+            F.array().cast(f"array<struct<cid:{cid_t},score:double>>").alias("picks"),
+        ),
+        step,
+    )["picks"]
+    return pools.select(
+        F.col("qid").alias("query_id"), F.posexplode(picks).alias("pos", "p")
+    ).select(
+        "query_id",
+        (F.col("pos") + 1).cast("int").alias("rank"),
+        F.col("p.cid").alias("neighbor_id"),
+        F.round("p.score", 4).alias("score"),
     )

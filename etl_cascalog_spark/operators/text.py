@@ -962,8 +962,8 @@ def remove_duplicate_spans(
     deterministic under any shuffle. Docs whose every token was removed
     surface with empty ``clean_text`` (n_kept = 0); docs that had NO
     tokens at all are omitted from the output (no token row exists).
-    ``spans`` must be non-overlapping per doc — what the marker emits
-    (merged intervals); overlapping spans would fan the left join out.
+    Overlapping spans are allowed: span positions are de-duplicated per
+    (id, pos) before the join, so a token covered twice is cut once.
     """
     toks = docs.select(
         F.col(id_col).alias("__id"),
@@ -976,7 +976,7 @@ def remove_duplicate_spans(
         F.explode(
             F.sequence(F.col("span_start"), F.col("span_end"))
         ).alias("pos"),
-    ).withColumn("__cut", F.lit(1))
+    ).distinct().withColumn("__cut", F.lit(1))
     keep_struct = F.when(
         F.col("__cut").isNull(), F.struct("pos", "tok")
     )

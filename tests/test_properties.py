@@ -786,3 +786,44 @@ def test_kmeans_fused_equals_distributed(spark, pts, k, iters):
     }
     release_all_blocks(spark)
     assert fast == slow
+
+
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from(["a", "b", "c", "dd"]), min_size=0, max_size=8).map(" ".join),
+        min_size=1,
+        max_size=4,
+    ),
+    spans=st.lists(
+        # (doc, span_start, span length - 1): spans may overlap, nest,
+        # repeat, or run past the end of the doc
+        st.tuples(st.integers(0, 3), st.integers(1, 9), st.integers(0, 4)),
+        max_size=6,
+    ),
+)
+@example(texts=["a b c d e f"], spans=[(0, 1, 2), (0, 2, 2)])
+@_settings
+def test_remove_duplicate_spans_overlapping_equals_anti_join(spark, texts, spans):
+    """Overlapping spans cut each covered token once: the output equals
+    the anti-join semantics (a token is kept iff its position lies in no
+    span), with n_tokens counting each token once."""
+    from etl_cascalog_spark.operators.text import remove_duplicate_spans
+
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    span_df = spark.createDataFrame(
+        [(d, s, s + e) for d, s, e in spans],
+        "doc_id long, span_start int, span_end int",
+    )
+    got = {
+        r.doc_id: (r.clean_text, r.n_tokens, r.n_removed)
+        for r in remove_duplicate_spans(docs, span_df).collect()
+    }
+    want = {}
+    for d, text in enumerate(texts):
+        toks = [(p, t) for p, t in enumerate(text.lower().split(" "), 1) if t]
+        if not toks:
+            continue
+        cut = {p for sd, s, e in spans if sd == d for p in range(s, s + e + 1)}
+        kept = [t for p, t in toks if p not in cut]
+        want[d] = (" ".join(kept), len(toks), len(toks) - len(kept))
+    assert got == want
