@@ -36,10 +36,7 @@ from etl_cascalog_spark.operators.joins import (
     star_join,
 )
 from etl_cascalog_spark.operators.periods import with_period_comparisons
-from etl_cascalog_spark.operators.surrogate import (
-    assign_dense_ids,
-    assign_dense_ids_scaled,
-)
+from etl_cascalog_spark.operators.surrogate import assign_dense_ids_scaled
 
 
 @dataclass(frozen=True)
@@ -7011,7 +7008,7 @@ def unpivot_metrics_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register(
     "neardup_clusters_star",
     oracle=f"""
     WITH {_SHINGLE_CTE},
@@ -7026,20 +7023,7 @@ def unpivot_metrics_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     "between 4 rounds and 10⁷ rounds on a chain-shaped component at "
     "100 TB. The oracle is unrolled self-verifying label propagation; "
     "the equivalence is also property-tested on random graphs.",
-)
-def neardup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_cascalog_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.7
-    )
-    return connected_components(pairs).select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
+)(neardup_clusters)
 
 
 # ---------------------------------------------------------------------------

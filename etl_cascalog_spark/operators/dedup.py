@@ -111,61 +111,19 @@ def jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.7,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs ≥ threshold, via the inverted
     shingle index (no N² cross join): pairs sharing ≥1 shingle get a common
-    count; |A∪B| = |A|+|B|-common.
-
-    ``max_df`` is the survivability cap for the exact path: shingles whose
-    document frequency exceeds it are dropped from the *pair-generation*
-    join only; the surviving candidate pairs are then re-verified against
-    the FULL shingle sets (``array_intersect``), so every emitted Jaccard
-    value is exact — a pair is missed only if ALL its shared shingles are
-    ultra-common. This mirrors ``max_bucket`` in :func:`minhash_lsh_pairs`:
-    candidate volume is O(Σ_{df≤cap} df²) instead of detonating on one
-    boilerplate shingle. ``None`` (default, the oracle baseline) joins
-    every shingle and skips the verification pass.
+    count; |A∪B| = |A|+|B|-common. Every shared shingle generates a
+    candidate, so one boilerplate shingle fans out quadratically in its
+    document frequency; :func:`prefix_filter_jaccard_pairs` is the exact
+    path that prunes it (length and prefix filters, as in *Highly
+    Efficient String Similarity Search and Join over Compressed Indexes*,
+    ICDE 2022).
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
     sh = shingle_sets(df, id_col, text_col, n).cache()
-    if max_df is not None:
-        from pyspark.sql import Window
-
-        # one count-over-window on shingle; the equi-join below reuses the
-        # same hash partitioning, so the cap costs no extra exchange
-        capped = (
-            sh.withColumn("__df", F.count("*").over(Window.partitionBy("shingle")))
-            .where(F.col("__df") <= max_df)
-            .drop("__df")
-        )
-        a = capped.toDF("doc_a", "shingle")
-        b = capped.toDF("doc_b", "shingle")
-        candidates = (
-            a.join(b, on="shingle")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        # exact verification on the full sets — identical shape to
-        # minhash_lsh_pairs' verification stage: the candidate pair list
-        # scales with the corpus near-dup population, so it attaches via
-        # a bare doc-key equi-join (AQE broadcast-converts from the REAL
-        # shuffle size while it fits — SCALE.md "never force-broadcast
-        # the dup population")
-        sets = shingle_arrays(df, id_col, text_col, n).cache()
-        sa = sets.toDF("doc_a", "sh_a")
-        sb = sets.toDF("doc_b", "sh_b")
-        common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - common
-        jx = common.cast("double") / union.cast("double")
-        return (
-            sa.join(candidates, "doc_a")
-            .join(sb, "doc_b")
-            .where(jx >= threshold)
-            .select("doc_a", "doc_b", F.round(jx, 4).alias("jaccard"))
-        )
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     a = sh.toDF("doc_a", "shingle")
     b = sh.toDF("doc_b", "shingle")
@@ -210,7 +168,7 @@ def prefix_filter_jaccard_pairs(
     naive index join is, by construction, last in every prefix-ordering
     and almost never inside a prefix). Candidates are then verified
     exactly on the full sets, so recall is 100% — no banding probability,
-    no ``max_df`` survivability cap.
+    no document-frequency cap.
 
     Candidates additionally pass the published LENGTH filter before the
     dedup shuffle (round 13): ``J(A,B) ≥ t`` forces ``t·|A| ≤ |B| ≤
@@ -1130,9 +1088,8 @@ def connected_components(
     """
     from pyspark.sql import Observation
 
-    from etl_cascalog_spark.session import persistent_rdd_ids, unpersist_rdd_ids
+    from etl_cascalog_spark.session import checkpoint_round
 
-    spark = pairs.sparkSession
     run_tag = next(_CC_OBS_SEQ)
     # setup: the symmetric closure INCLUDING self-loops in one job (one
     # pass over the pair lineage, distinct dedups). The working edge set
@@ -1151,7 +1108,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     edges = sym.where(F.col("s") != F.col("t"))
-    edge_ids: set[int] = set()  # round-1 edges live on sym's blocks
+    edge_ids: frozenset[int] = frozenset()  # round-1 edges live on sym's blocks
 
     def large_star(e: DataFrame, obs) -> DataFrame:
         w = Window.partitionBy("s")
@@ -1193,14 +1150,11 @@ def connected_components(
     for round_i in range(max_iter if n_edges.get["n"] else 0):
         large = Observation(f"cc_large_star_{run_tag}_{round_i}")
         small = Observation(f"cc_small_star_{run_tag}_{round_i}")
-        seen = persistent_rdd_ids(spark)
-        edges = small_star(large_star(edges, large), small).localCheckpoint(
-            eager=True
-        )
         # retire round N-1's edge blocks; sym's stay (the label attach
         # reads them)
-        unpersist_rdd_ids(spark, edge_ids)
-        edge_ids = persistent_rdd_ids(spark) - seen
+        edges, edge_ids = checkpoint_round(
+            small_star(large_star(edges, large), small), retire=edge_ids
+        )
         if large.get["n"] == 0 and small.get["n"] == 0:
             break
     # surviving edges are (node, min) stars; the label attach is ONE

@@ -14,12 +14,15 @@ float PageRank fundamentally cannot promise across partitionings.
 
 100 TB shape: one shuffle per iteration (groupBy dst over the edge list,
 map-side combinable longs), degrees computed once and carried ON the edge
-row (no per-iteration degree join); iteration count is FIXED (unrollable
-into the oracle, bounded wall time). Hub skew is the usual PageRank skew —
+row (no per-iteration degree join); the iteration count is CAPPED
+(unrollable into the oracle, bounded wall time) and stops early at the
+exact integer fixpoint. Hub skew is the usual PageRank skew —
 partial aggregation absorbs it (contributions combine before the shuffle).
 """
 
 from __future__ import annotations
+
+from itertools import count as _itercount
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -28,13 +31,15 @@ from pyspark.sql import functions as F
 #: whole in-neighborhood)
 RANK_SCALE = 1_000_000_000_000
 
+#: per-build suffix for the convergence ``Observation`` names (a name is
+#: registered once per session)
+_PR_OBS_SEQ = _itercount()
+
 
 def pagerank_int(
     edges: DataFrame,
     iters: int = 3,
     damping_pct: int = 85,
-    early_exit: bool = True,
-    probe_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
     """Integer PageRank over a directed edge list (src, dst).
@@ -52,33 +57,27 @@ def pagerank_int(
     distinct) is the expensive input — it is ``localCheckpoint``-ed ONCE
     and every iteration joins against the materialized rows; without
     this, iteration i's DAG re-runs the fan-out i times. Per-round rank
-    frames are checkpointed and retired N-1-style (the
+    frames go through ``session.checkpoint_round`` (the
     ``connected_components`` discipline); the returned frame's
     checkpoint stays alive for the caller to release.
 
-    ``early_exit`` (VERDICT r8 #5, the fixed-iteration scaling
-    mitigation): the recurrence is EXACT integer arithmetic, so if round
-    N's ranks equal round N-1's bit-for-bit, every further round is the
-    identity — stopping is result-IDENTICAL to running out ``iters``
-    (no oracle change, unlike float PageRank where an epsilon exit
-    changes values). The probe is a limit-1 anti-match on two already-
-    checkpointed frames (cheap next to the contribs shuffle), run only
-    every ``probe_every`` rounds (ADVICE r9: a per-round probe taxes
-    non-converging workloads with a join+isEmpty job each iteration for
-    no payoff — amortizing it halves that cost at the price of at most
-    ``probe_every - 1`` extra identity rounds on a converged graph,
-    which change nothing by exactness). Payoff is that ``iters`` becomes
-    a CAP rather than a spend — on a converged or shallow graph the
-    edge-bound per-iteration cost stops scaling with the requested
-    iteration count. ``stats`` (optional caller-owned dict) receives
-    ``rounds_run`` so tests can assert the exit actually fired.
+    ``iters`` is a cap, not a spend. The recurrence is exact integer
+    arithmetic, so once a round's ranks equal its input bit-for-bit
+    every further round is the identity, and stopping there gives the
+    same result as running out ``iters``. That test rides on the round's
+    checkpoint job: each node's self row carries its input rank as
+    ``prev``, and an ``Observation`` counts the nodes whose new rank
+    differs from it; a count of 0 ends the loop. No probe job is run. The
+    setup checkpoint counts the edges, and an empty edge set runs no
+    round (an ``Observation`` over an empty AQE stage never reports).
+    ``stats`` (optional caller-owned dict) receives ``rounds_run``.
     """
-    from pyspark.sql import Window
+    from pyspark.sql import Observation, Window
 
-    from etl_cascalog_spark.session import persistent_rdd_ids, unpersist_rdd_ids
+    from etl_cascalog_spark.session import checkpoint_round, unpersist_rdd_ids
 
-    spark = edges.sparkSession
-    before = persistent_rdd_ids(spark)
+    run_tag = next(_PR_OBS_SEQ)
+    n_edges = Observation(f"pr_edges_{run_tag}")
     # degree rides on the edge row via ONE window over the src-shuffled
     # edges (round 12; was groupBy-agg + join back). The agg+join form
     # evaluates the upstream edge fan-out TWICE (once into the aggregate,
@@ -89,14 +88,13 @@ def pagerank_int(
     # edge list by src exactly once; src cardinality = |V|, so there is
     # no low-cardinality funnel. Measured 0.71× at sf0.1, results
     # bit-identical (integer arithmetic untouched).
-    contrib_edges = (
+    contrib_edges, static_ids = checkpoint_round(
         edges.withColumn(
             "out_deg", F.count("*").over(Window.partitionBy("src"))
         )
         .select("src", "dst", "out_deg")
-        .localCheckpoint(eager=True)
+        .observe(n_edges, F.count("*").alias("n"))
     )
-    static_ids = persistent_rdd_ids(spark) - before
     # both endpoints in one pass over the checkpointed edges (round 13;
     # the union form scanned the blocks twice)
     nodes = (
@@ -113,27 +111,26 @@ def pagerank_int(
     # base rides as a column on the (checkpointed) rank frame — same exact
     # integer arithmetic, identical results.
     n_df = nodes.agg(F.count("*").alias("__n"))
-    seen = persistent_rdd_ids(spark)
-    ranks = (
+    ranks, rank_ids = checkpoint_round(
         nodes.crossJoin(F.broadcast(n_df))
         .select(
             "node",
             F.expr(f"{RANK_SCALE}L div greatest(__n, 1L)").alias("base"),
         )
         .withColumn("rank_units", F.col("base"))
-        .localCheckpoint(eager=True)
     )
-    prev_ids = persistent_rdd_ids(spark) - seen
 
     rounds_run = 0
-    for _ in range(iters):
+    for round_i in range(iters if n_edges.get["n"] else 0):
         rounds_run += 1
+        changed = Observation(f"pr_changed_{run_tag}_{round_i}")
         # per-edge contributions; the per-node in-sum AND the damping
         # update fuse into ONE groupBy over contributions ∪ self rows
         # (round 13; was groupBy(in_sum) + left join back onto ranks —
         # the join re-sorted/re-exchanged the rank side every round).
-        # The self row carries (base, c=0): max(base) recovers the
-        # per-node constant, sum(c) is exactly the old
+        # The self row carries (base, prev = input rank, c=0); message
+        # rows carry nulls there. max(base) and max(prev) recover the
+        # per-node constants, sum(c) is exactly the old
         # coalesce(in_sum, 0) — nodes with no in-edges sum their lone 0.
         # Same exact integer arithmetic, one exchange per round.
         msgs = contrib_edges.join(
@@ -141,55 +138,46 @@ def pagerank_int(
         ).select(
             F.col("dst").alias("node"),
             F.lit(None).cast("long").alias("base"),
+            F.lit(None).cast("long").alias("prev"),
             F.expr("rank_units div out_deg").alias("c"),
         )
-        prev_ranks = ranks
-        seen = persistent_rdd_ids(spark)
-        ranks = (
-            ranks.select("node", "base", F.lit(0).cast("long").alias("c"))
+        ranks, rank_ids = checkpoint_round(
+            ranks.select(
+                "node",
+                "base",
+                F.col("rank_units").alias("prev"),
+                F.lit(0).cast("long").alias("c"),
+            )
             .unionByName(msgs)
             .groupBy("node")
-            .agg(F.max("base").alias("base"), F.sum("c").alias("in_sum"))
+            .agg(
+                F.max("base").alias("base"),
+                F.max("prev").alias("prev"),
+                F.sum("c").alias("in_sum"),
+            )
             .select(
                 "node",
                 "base",
+                "prev",
                 F.expr(
                     f"({100 - damping_pct} * base"
                     f" + {damping_pct} * in_sum) div 100"
                 ).cast("long").alias("rank_units"),
             )
-            .localCheckpoint(eager=True)
-        )
-        new_ids = persistent_rdd_ids(spark) - seen
-        # amortized probe: only every probe_every rounds (never on the
-        # final round — exiting there saves nothing). The cadence clamps
-        # to iters-1 so small iteration counts still probe at least once
-        # (ADVICE r10: iters=2 with probe_every=2 never probed, silently
-        # losing the iters-is-a-CAP property; results stayed exact).
-        cadence = max(1, min(probe_every, iters - 1))
-        probe = (
-            early_exit
-            and rounds_run % cadence == 0
-            and rounds_run < iters
-        )
-        converged = probe and (
-            ranks.alias("n")
-            .join(
-                prev_ranks.select(
-                    "node", F.col("rank_units").alias("__prev_units")
+            .observe(
+                changed,
+                F.count(F.when(F.col("rank_units") != F.col("prev"), 1)).alias(
+                    "n"
                 ),
-                "node",
             )
-            .where(F.col("rank_units") != F.col("__prev_units"))
-            .isEmpty()
+            .select("node", "base", "rank_units"),
+            retire=rank_ids,
         )
-        unpersist_rdd_ids(spark, prev_ids)
-        prev_ids = new_ids
-        if converged:
+        if changed.get["n"] == 0:
             break  # exact integer fixpoint: further rounds are identity
     if stats is not None:
         stats["rounds_run"] = rounds_run
-    unpersist_rdd_ids(spark, static_ids)  # result lineage truncated: safe
+    unpersist_rdd_ids(edges.sparkSession, static_ids)  # result lineage truncated: safe
     return ranks.select("node", "rank_units")
 
 

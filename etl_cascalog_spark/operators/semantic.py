@@ -24,15 +24,14 @@ plan-time centroid constant (k·dim int64, driver-resident by construction,
 the FAISS-training contract) — and the only exchange carries k·(dim+2)
 longs of partial sums per task into the collected centroid update. The
 corpus is never shuffled and never re-checkpointed inside the recurrence.
-(:func:`kmeans_fit_distributed` keeps the broadcast-join + groupBy-argmin
-formulation as the equivalence twin.) Within-cluster pair scoring is
-quadratic only in the largest cluster (cap clusters via K, exactly like IVF
-cell sizing: K ≈ √N keeps E[|cluster|²] ≈ N).
+Within-cluster pair scoring is quadratic only in the largest cluster (cap
+clusters via K, exactly like IVF cell sizing: K ≈ √N keeps E[|cluster|²]
+≈ N).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: fixed-point grid for embedding coordinates (micro-units)
@@ -66,56 +65,6 @@ def _sq_dist(a, b):
     )
 
 
-def assign_clusters(points: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: (id, units, cluster, dist).
-
-    ``centroids`` is (cid, cunits) with K rows — broadcast; the join is a
-    BroadcastNestedLoopJoin (K·N pairs, map-side), and the argmin groupBy
-    is min-by-struct, which combines map-side. Ties → lower cid.
-    """
-    scored = points.join(F.broadcast(centroids)).select(
-        "id",
-        "units",
-        F.struct(
-            _sq_dist(F.col("units"), F.col("cunits")).alias("dist"),
-            F.col("cid").alias("cid"),
-        ).alias("cand"),
-    )
-    # units is constant within each id-group, so first() is
-    # value-deterministic and the argmin needs NO join back to `points`
-    # (one shuffle per iteration, not two)
-    return scored.groupBy("id").agg(
-        F.first("units").alias("units"), F.min("cand").alias("best")
-    ).select(
-        "id",
-        "units",
-        F.col("best.cid").alias("cluster"),
-        F.col("best.dist").alias("dist"),
-    )
-
-
-def recompute_centroids(assigned: DataFrame, dim: int) -> DataFrame:
-    """(cid, cunits) — per-cluster integer mean, one dim-wide aggregate.
-
-    ``dim`` explicit sums (no posexplode: a 64-dim corpus would otherwise
-    64× its row count through the shuffle); each is ``sum div count`` in
-    int64. Empty clusters simply vanish (K shrinks), matching the oracle.
-    """
-    sums = [
-        F.sum(F.col("units")[i]).alias(f"s{i}") for i in range(dim)
-    ]
-    return (
-        assigned.groupBy(F.col("cluster").alias("cid"))
-        .agg(F.count("*").alias("n"), *sums)
-        .select(
-            "cid",
-            F.array(
-                *[F.expr(f"s{i} div n").cast("long") for i in range(dim)]
-            ).alias("cunits"),
-        )
-    )
-
-
 def _trunc_div(s: int, n: int) -> int:
     """Exact BIGINT ``div`` (truncation toward zero) on Python ints —
     ``//`` alone FLOORS, which differs on negative sums."""
@@ -134,9 +83,8 @@ def _assign_best_expr(
     before codegen; the non-foldable part is a ~30-node HOF tree
     (``transform`` + the exact :func:`_sq_dist` fold), so per-round
     plan/codegen stays O(1) in k·dim. ``array_min`` over the
-    ``struct<dist,cid>`` candidates uses the same lexicographic ordering
-    as :func:`assign_clusters`'s ``F.min(struct)`` — ties break on the
-    lower cid identically. ``cid`` rides a parallel literal id array
+    ``struct<dist,cid>`` candidates orders by dist, then cid, so ties
+    break on the lower cid. ``cid`` rides a parallel literal id array
     (``element_at``), NOT the transform index: empty clusters vanish
     between rounds, so positions shift while ids must not.
     """
@@ -181,9 +129,9 @@ def kmeans_fit(
     k·(dim+2) longs of partial sums per task. Eager build jobs drop
     12 → 8; 2.5×/2.2× at sf0.1 on semantic_dedup_kmeans /
     kmeans_cluster_profile (isolated min-of-N, old vs new at the same
-    HEAD), bit-identical — the collected longs round-trip exactly,
-    :func:`_trunc_div` reproduces `div`, and the equivalence twin
-    :func:`kmeans_fit_distributed` is property-tested against this form.
+    HEAD), bit-identical — the collected longs round-trip exactly and
+    :func:`_trunc_div` reproduces `div` (property-tested against the
+    broadcast-join + groupBy-argmin recurrence in the tests).
 
     Two rejected variants, kept as regression knowledge (guide §1.1):
     per-round centroid literals built from py4j Column calls or one
@@ -206,22 +154,18 @@ def kmeans_fit(
     assign+update collects + 1 final checkpoint.
     """
     from etl_cascalog_spark.io import ensure_min_parallelism
-    from etl_cascalog_spark.session import persistent_rdd_ids, unpersist_rdd_ids
+    from etl_cascalog_spark.session import checkpoint_round
 
-    spark = points.sparkSession
-    before = persistent_rdd_ids(spark)
     # parallelism guard BEFORE the checkpoint: a small single-file scan is
     # ONE partition, and the checkpoint freezes that layout — every round
     # scan, the final assignment, and (round 12's measured case) the
     # Σ|cluster|² candidate fold in semantic_dedup_pairs would then run
     # as a single task on an idle 32-core box (guide §2.6). No-op at real
     # scale (file-count heuristic), one tiny keyed shuffle locally.
-    points = ensure_min_parallelism(points, "id")
-    # materialize the point prep ONCE: every round's assignment (and the
-    # seed selection) reads these rows — uncached, each of the `iters`
-    # rounds re-executed the corpus scan + unit conversion
-    points = points.localCheckpoint(eager=True)
-    pts_ids = persistent_rdd_ids(spark) - before
+    # The point prep is materialized ONCE: every round's assignment (and
+    # the seed selection) reads these rows — uncached, each of the
+    # `iters` rounds re-executed the corpus scan + unit conversion.
+    points, pts_ids = checkpoint_round(ensure_min_parallelism(points, "id"))
     # seed: the k lowest-id points, cid = rank in id order (bounded
     # driver transfer: k rows of dim longs)
     seed = points.orderBy("id").limit(k).select("units").collect()
@@ -249,7 +193,7 @@ def kmeans_fit(
             .collect()
         )
         # integer mean with the exact `sum div count` truncating
-        # semantics of :func:`recompute_centroids`
+        # semantics of the oracle's centroid update
         centroids = sorted(
             (
                 int(r["cid"]),
@@ -258,7 +202,8 @@ def kmeans_fit(
             for r in rows
         )
     best = _assign_best_expr(centroids)
-    assigned = (
+    # the final assignment is materialized, so the points retire
+    assigned, _ = checkpoint_round(
         points.select("id", "units", best.alias("__b"))
         # two-step select: CollapseProject refuses to inline the
         # non-cheap HOF into two field extractions, so `best` is
@@ -268,57 +213,9 @@ def kmeans_fit(
             "units",
             F.col("__b.cid").alias("cluster"),
             F.col("__b.dist").alias("dist"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        retire=pts_ids,
     )
-    unpersist_rdd_ids(spark, pts_ids)  # final assignment is materialized
-    return assigned
-
-
-def kmeans_fit_distributed(
-    points: DataFrame, dim: int, k: int = 8, iters: int = 3
-) -> DataFrame:
-    """The pre-round-12 distributed Lloyd recurrence — kept as the
-    independent equivalence twin for :func:`kmeans_fit` (property test
-    pins bit-identical assignments) and as the shape to reach for if a
-    single round's centroid aggregate ever exceeded driver bounds
-    (k·dim int64 would have to approach ``spark.driver.maxResultSize``,
-    i.e. millions of clusters × high dim — not a SemDeDup regime).
-
-    Per iteration: broadcast-join the centroid FRAME (K rows), shuffle
-    the full (id, units, best) corpus through a groupBy(id) argmin, and
-    ``localCheckpoint`` the round's assignment. Round N-1's blocks retire
-    as soon as round N is materialized; the RETURNED frame's checkpoint
-    stays alive — callers release it via ``session.release_all_blocks``
-    once consumed.
-    """
-    from etl_cascalog_spark.session import persistent_rdd_ids, unpersist_rdd_ids
-
-    spark = points.sparkSession
-    before = persistent_rdd_ids(spark)
-    points = points.localCheckpoint(eager=True)
-    pts_ids = persistent_rdd_ids(spark) - before
-    centroids = (
-        points.orderBy("id")
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy("id")) - 1).alias("cid"),
-            F.col("units").alias("cunits"),
-        )
-    )
-    seen = persistent_rdd_ids(spark)
-    assigned = assign_clusters(points, centroids).localCheckpoint(eager=True)
-    prev_ids = persistent_rdd_ids(spark) - seen
-    for _ in range(iters - 1):
-        centroids = recompute_centroids(assigned, dim)
-        seen = persistent_rdd_ids(spark)
-        assigned = assign_clusters(points, centroids).localCheckpoint(
-            eager=True
-        )
-        new_ids = persistent_rdd_ids(spark) - seen
-        unpersist_rdd_ids(spark, prev_ids)
-        prev_ids = new_ids
-    unpersist_rdd_ids(spark, pts_ids)  # final assignment is materialized
     return assigned
 
 

@@ -5,18 +5,14 @@ the current max (``load-max-dw-id`` trgx.clj:166-170) but forces a **single
 global group** — ``(identity 0 :> ?prt-no)`` at ods/d_bolome_show.clj:51 — a
 serialized reduce through one reducer. At 100 TB that is the whole job.
 
-Spark-first replacement, three tiers:
+Spark-first replacement, two tiers:
 
-- :func:`assign_dense_ids` — single no-partition window ``row_number``.
-  Correct and simplest, but WindowExec with no PARTITION BY moves every row
-  to ONE reducer: fine for dimension deltas (thousands of rows), the wrong
-  shape for fact volume.
 - :func:`assign_dense_ids_scaled` — the 100 TB shape: range-repartition on
   the sort keys (parallel sort, equal keys co-located), per-partition
   ``row_number``, then rebase each partition by the broadcast running sum
   of earlier partitions' counts. Two parallel shuffles, zero single-reducer
-  stages; bit-identical to the window version whenever ``order_by`` is a
-  total order.
+  stages; bit-identical to a no-partition window ``row_number`` (which
+  moves every row to ONE reducer) whenever ``order_by`` is a total order.
 - :func:`assign_sparse_ids` — gap-tolerant ``monotonically_increasing_id``
   rebase, zero shuffle, when density doesn't matter.
 """
@@ -27,23 +23,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def assign_dense_ids(
-    df: DataFrame,
-    order_by: Sequence[str],
-    id_col: str = "dw_id",
-    start_at: int = 1,
-) -> DataFrame:
-    """Dense, deterministic, gap-free ids continuing from ``start_at``.
-
-    Matches the reference semantics (contiguous dw_id from max+1,
-    d_bolome_show.clj:52-53). NOTE: this is a no-partition window — one
-    reducer sorts everything. Use for dimension deltas only; fact-scale
-    inputs take :func:`assign_dense_ids_scaled`.
-    """
-    w = Window.orderBy(*[F.col(c) for c in order_by])
-    return df.withColumn(id_col, F.row_number().over(w) + F.lit(start_at - 1))
 
 
 def assign_dense_ids_scaled(

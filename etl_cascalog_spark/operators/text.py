@@ -743,10 +743,9 @@ def boilerplate_sentence_stats(
     100 TB shape: one explode (map-side), one sentence-keyed distinct-doc
     agg (partial aggregation combines map-side; the per-sentence key is
     the normalized sentence string here for oracle bit-parity — at real
-    scale key on ``xxhash64(sent)`` so the shuffle carries 8 bytes, with
-    an optional df-cap like jaccard_pairs' ``max_df``), one join back on
-    the same key (shuffle reuse), one doc-keyed count agg. No windows,
-    no Python, no driver loops.
+    scale key on ``xxhash64(sent)`` so the shuffle carries 8 bytes), one
+    join back on the same key (shuffle reuse), one doc-keyed count agg.
+    No windows, no Python, no driver loops.
     """
     sent = (
         docs.select(

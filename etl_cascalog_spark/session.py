@@ -10,9 +10,10 @@ code works at local[32]/sf0.1 and on a 1000-executor cluster at 100 TB.
 from __future__ import annotations
 
 import os
+from collections.abc import Set
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -104,11 +105,9 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in ids.split(",") if k}
 
 
-def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
+def unpersist_rdd_ids(spark: SparkSession, ids: Set[int]) -> None:
     """Drop the blocks of specific persistent RDDs by id (no-op for ids
-    already gone). Used by iterative operators to retire round ``N-1``'s
-    ``localCheckpoint`` as soon as round ``N`` is materialized, so a
-    bounded-iteration build holds at most one round of blocks."""
+    already gone)."""
     if not ids:
         return
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -116,6 +115,24 @@ def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
         jrdd = jmap.get(rid)
         if jrdd is not None:
             jrdd.unpersist(False)
+
+
+def checkpoint_round(
+    df: DataFrame, retire: Set[int] = frozenset()
+) -> tuple[DataFrame, frozenset[int]]:
+    """One round of an iterative operator (connected components,
+    PageRank, k-means): an eager ``localCheckpoint`` of ``df`` that cuts
+    the lineage, then the ``retire`` blocks (the round before, which the
+    new blocks no longer need) are unpersisted. Returns the checkpointed
+    frame and the ids of the blocks it created, to be retired a round
+    later, so a bounded-iteration build holds at most one round of
+    blocks. ``Observation`` metrics on ``df`` report on the checkpoint's
+    job, so a convergence test needs no job of its own."""
+    spark = df.sparkSession
+    seen = persistent_rdd_ids(spark)
+    out = df.localCheckpoint(eager=True)
+    unpersist_rdd_ids(spark, retire)
+    return out, frozenset(persistent_rdd_ids(spark) - seen)
 
 
 @contextmanager

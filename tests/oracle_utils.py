@@ -11,18 +11,7 @@ import os
 import duckdb
 import pandas as pd
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from etl_cascalog_spark.io import TABLES
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -50,8 +39,12 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, float_exact: bool = True) -> None:
-    got = normalize(spark_df.toPandas())
-    want = normalize(con.execute(sql).df())
+    compare_frames(normalize(spark_df.toPandas()), normalize(con.execute(sql).df()), float_exact)
+
+
+def compare_frames(got: pd.DataFrame, want: pd.DataFrame, float_exact: bool = True) -> None:
+    """The value comparison of two ``normalize``-d frames; raises
+    ``AssertionError`` naming the first difference."""
     assert list(got.columns) == list(want.columns), f"columns differ: {list(got.columns)} vs {list(want.columns)}"
     assert len(got) == len(want), f"row counts differ: {len(got)} vs {len(want)}"
     for c in got.columns:

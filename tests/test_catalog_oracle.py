@@ -33,3 +33,17 @@ def test_query_matches_oracle(spark, con, name):
             compare(df, con, spec.oracle)
     leaked = persistent_rdd_ids(spark) - before
     assert not leaked, f"{name} leaked storage blocks: rdd ids {leaked}"
+
+
+def test_catalog_md_matches_registry():
+    """CATALOG.md is generated from the registrations
+    (``python tools/catalog_doc.py > CATALOG.md``) and must not drift
+    from them."""
+    import runpy
+
+    from tests.conftest import REPO
+
+    render = runpy.run_path(str(REPO / "tools" / "catalog_doc.py"))["render"]
+    assert render() == (REPO / "CATALOG.md").read_text(), (
+        "CATALOG.md is stale: regenerate it with tools/catalog_doc.py"
+    )

@@ -536,15 +536,14 @@ def test_star_cc_equals_label_propagation(spark, edges):
     assert got == want
 
 
-def _cc_build_jobs(spark, monkeypatch, edges):
-    """(Spark jobs, eager localCheckpoint calls) submitted while building
-    ``connected_components`` over ``edges``, AQE off so that each eager
+def _build_jobs(spark, monkeypatch, build, rows, schema):
+    """(Spark jobs, eager localCheckpoint calls) submitted while running
+    ``build`` over a frame of ``rows``, AQE off so that each eager
     checkpoint is exactly one job."""
-    from etl_cascalog_spark.operators.dedup import connected_components
     from etl_cascalog_spark.plans.lint import count_build_jobs
     from etl_cascalog_spark.session import release_all_blocks
 
-    df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
+    df = spark.createDataFrame(rows, schema)
     checkpoints = []
     cls = type(df)
     orig = cls.localCheckpoint
@@ -557,11 +556,19 @@ def _cc_build_jobs(spark, monkeypatch, edges):
     prior = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        _, n_jobs = count_build_jobs(spark, lambda: connected_components(df), "cc")
+        _, n_jobs = count_build_jobs(spark, lambda: build(df), "recurrence")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prior)
         release_all_blocks(spark)
     return n_jobs, len(checkpoints)
+
+
+def _cc_build_jobs(spark, monkeypatch, edges):
+    from etl_cascalog_spark.operators.dedup import connected_components
+
+    return _build_jobs(
+        spark, monkeypatch, connected_components, edges, "doc_a: long, doc_b: long"
+    )
 
 
 def test_star_cc_star_forest_converges_in_one_round(spark, monkeypatch):
@@ -582,6 +589,32 @@ def test_star_cc_build_jobs_are_setup_and_round_checkpoints(spark, monkeypatch):
     assert n_jobs == n_checkpoints > 2
     assert _cc_build_jobs(spark, monkeypatch, [(3, 3), (5, 5)]) == (1, 1)
     assert _cc_build_jobs(spark, monkeypatch, []) == (1, 1)
+
+
+def test_pagerank_build_jobs_are_setup_and_round_checkpoints(spark, monkeypatch):
+    """PageRank runs no probe job: the build submits the edge and
+    initial-rank checkpoints, one checkpoint per round and the broadcast
+    of the node count, nothing else. The fixpoint test rides on the round
+    job (the 2-cycle stops after round 1), and an empty edge set runs no
+    round."""
+    from etl_cascalog_spark.operators.graph import pagerank_int
+
+    for edges, rounds in (
+        ([(i, i + 1) for i in range(10)], 3),
+        ([(0, 1), (1, 0)], 1),
+        ([], 0),
+    ):
+        stats: dict = {}
+        n_jobs, n_checkpoints = _build_jobs(
+            spark,
+            monkeypatch,
+            lambda df, stats=stats: pagerank_int(df, iters=3, stats=stats),
+            edges,
+            "src: long, dst: long",
+        )
+        assert stats["rounds_run"] == rounds
+        assert n_checkpoints == 2 + rounds
+        assert n_jobs == n_checkpoints + 1
 
 
 @given(
@@ -742,6 +775,69 @@ def test_minhash_lsh_pairs_contract(spark, texts):
             assert (a, b) in got
 
 
+def _kmeans_distributed(points, dim: int, k: int, iters: int):
+    """The broadcast-join + groupBy-argmin Lloyd recurrence: the
+    independent twin of ``semantic.kmeans_fit``, whose centroids are
+    driver-resident plan constants. Per round it broadcast-joins the
+    centroid FRAME (K rows), takes the min-by-struct argmin over a
+    groupBy(id) (ties go to the lower cid) and checkpoints the round's
+    assignment; the next round's centroids are the per-cluster ``sum div
+    count`` means, with empty clusters vanishing. Returns (id, units,
+    cluster, dist). Blocks are left to ``release_all_blocks``."""
+    from pyspark.sql import Window
+
+    from etl_cascalog_spark.operators.semantic import _sq_dist
+    from etl_cascalog_spark.session import checkpoint_round
+
+    def assign(pts, cents):
+        best = (
+            pts.join(F.broadcast(cents))
+            .groupBy("id")
+            .agg(
+                F.first("units").alias("units"),
+                F.min(
+                    F.struct(
+                        _sq_dist(F.col("units"), F.col("cunits")).alias("dist"),
+                        F.col("cid").alias("cid"),
+                    )
+                ).alias("best"),
+            )
+        )
+        return best.select(
+            "id",
+            "units",
+            F.col("best.cid").alias("cluster"),
+            F.col("best.dist").alias("dist"),
+        )
+
+    points, _ = checkpoint_round(points)
+    centroids = (
+        points.orderBy("id")
+        .limit(k)
+        .select(
+            (F.row_number().over(Window.orderBy("id")) - 1).alias("cid"),
+            F.col("units").alias("cunits"),
+        )
+    )
+    assigned, ids = checkpoint_round(assign(points, centroids))
+    for _ in range(iters - 1):
+        centroids = (
+            assigned.groupBy(F.col("cluster").alias("cid"))
+            .agg(
+                F.count("*").alias("n"),
+                *[F.sum(F.col("units")[i]).alias(f"s{i}") for i in range(dim)],
+            )
+            .select(
+                "cid",
+                F.array(
+                    *[F.expr(f"s{i} div n").cast("long") for i in range(dim)]
+                ).alias("cunits"),
+            )
+        )
+        assigned, ids = checkpoint_round(assign(points, centroids), retire=ids)
+    return assigned
+
+
 @given(
     pts=st.lists(
         st.lists(
@@ -760,14 +856,11 @@ def test_minhash_lsh_pairs_contract(spark, texts):
 )
 def test_kmeans_fused_equals_distributed(spark, pts, k, iters):
     """kmeans_fit (round-12 driver-resident centroid recurrence, fused
-    assign+update rounds) is BIT-identical to kmeans_fit_distributed (the
+    assign+update rounds) is BIT-identical to _kmeans_distributed (the
     broadcast-join + groupBy-argmin + per-round-checkpoint twin) — same
     seeds, same truncating `div` centroid means (negative sums included),
     same lower-cid tie-break. Duplicate points exercise argmin ties."""
-    from etl_cascalog_spark.operators.semantic import (
-        kmeans_fit,
-        kmeans_fit_distributed,
-    )
+    from etl_cascalog_spark.operators.semantic import kmeans_fit
     from etl_cascalog_spark.session import release_all_blocks
 
     # duplicate every first point so ties are guaranteed present
@@ -782,7 +875,7 @@ def test_kmeans_fused_equals_distributed(spark, pts, k, iters):
     release_all_blocks(spark)
     slow = {
         (r.id, r.cluster, r.dist)
-        for r in kmeans_fit_distributed(df, dim=4, k=k, iters=iters).collect()
+        for r in _kmeans_distributed(df, dim=4, k=k, iters=iters).collect()
     }
     release_all_blocks(spark)
     assert fast == slow

@@ -13,24 +13,26 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def main() -> None:
+def render() -> str:
+    """The text of CATALOG.md, from the registry."""
     from etl_cascalog_spark.catalog import QUERIES
 
-    print("# Query catalog\n")
-    print(
+    lines = [
+        "# Query catalog\n",
         f"{len(QUERIES)} named queries, each a `(spark, sf_dir) -> DataFrame` "
         "builder over the engine's operator library. `oracle` = hash-compared "
         "against DuckDB by the driver at sf0.01 and by "
-        "`tests/test_catalog_oracle.py` at sf0.001.\n"
-    )
-    print("| query | oracle | design note |")
-    print("|---|---|---|")
+        "`tests/test_catalog_oracle.py` at sf0.001.\n",
+        "| query | oracle | design note |",
+        "|---|---|---|",
+    ]
     for name in sorted(QUERIES):
         spec = QUERIES[name]
         oracle = "yes" if spec.oracle else "rows-only"
         doc = " ".join((spec.doc or "").split()).replace("|", "\\|")
-        print(f"| {name} | {oracle} | {doc} |")
+        lines.append(f"| {name} | {oracle} | {doc} |")
+    return "\n".join(lines) + "\n"
 
 
 if __name__ == "__main__":
-    main()
+    sys.stdout.write(render())

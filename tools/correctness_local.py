@@ -25,7 +25,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from etl_cascalog_spark.session import get_spark, scoped_storage  # noqa: E402
 from etl_cascalog_spark.catalog import QUERIES  # noqa: E402
-from tests.oracle_utils import duckdb_con, normalize  # noqa: E402
+from tests.oracle_utils import compare_frames, duckdb_con, normalize  # noqa: E402
 from tests.test_plan_lint import (  # noqa: E402
     GLOBAL_WINDOW_OK,
     RUNTIME_GLOBAL_WINDOW_OK,
@@ -161,20 +161,11 @@ def main() -> int:
                 row["oracle_rows"] = int(len(want))
                 row["rows_match"] = len(got) == len(want)
                 row["schema_match"] = list(got.columns) == list(want.columns)
-                if row["rows_match"] and row["schema_match"]:
-                    ok = True
-                    for c in got.columns:
-                        g, w = got[c], want[c]
-                        if g.dtype.kind == "f" or w.dtype.kind == "f":
-                            g, w = g.astype(float), w.astype(float)
-                            eq = (g == w) | (g.isna() & w.isna())
-                        else:
-                            eq = (g == w) | (g.isna() & w.isna())
-                        if not bool(eq.all()):
-                            ok = False
-                            row["err"] = f"values differ in column {c}"
-                            break
-                    row["hash_match"] = ok
+                try:
+                    compare_frames(got, want)
+                    row["hash_match"] = True
+                except AssertionError as e:
+                    row["err"] = str(e)[:500]
         except Exception as e:  # noqa: BLE001 — report, don't abort the sweep
             row["err"] = f"{type(e).__name__}: {e}"[:500]
         good = row["rows_match"] and row["schema_match"] in (True, None) and row[
