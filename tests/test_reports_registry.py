@@ -500,3 +500,78 @@ def test_trgx_shared_pivot_matches_separate_builds(spark):
             want = sorted(map(tuple, solo.collect()))
             assert got == want, f"{name}: fused output diverges"
             assert len(got) > 0, f"{name}: empty report"
+
+
+# --- output pin: every registry job, byte for byte --------------------------
+
+#: sha256 (first 16 hex) of each job's sorted sink rows on its
+#: ``_fixture_for`` fixture — any change to a builder, prepare() or the JSON
+#: assembly that moves a single output byte moves its digest
+REGISTRY_DIGESTS = {
+    "activation_brand": "1a87ba70b147908c",
+    "activation_period_trend": "87a28703cd4ab9ca",
+    "activation_period_trend_sub": "87a28703cd4ab9ca",
+    "activation_sub_brand": "0439018330f82407",
+    "anal_rep_kpis": "c11117d84d72e3fa",
+    "availability_brand": "95df924733cebc88",
+    "availability_period_trend": "967bb74e4219e648",
+    "availability_rural": "4720898c849f5f16",
+    "cooler_brand": "eb83db9f7eabcc40",
+    "cooler_period_trend": "5ec9bd160abf54fd",
+    "core_sku": "425e06d46d316682",
+    "core_sku_bg_all": "75ed427971d24263",
+    "core_sku_bottler_all": "ba77418a1343a6c3",
+    "gt_score_deep_dive": "3e705d5b111af923",
+    "gt_score_deep_dive_with_ko": "93a18d644764c353",
+    "gt_score_deep_dive_without_ko": "722df4154dfa656a",
+    "score_achievement_rate": "4ca1c131221f7078",
+    "score_achievement_rate_bg_all": "6889b453bc44e2de",
+    "score_bottler_ranking": "661e3b598fac2216",
+    "score_by_bg": "b3f25b962b074ca4",
+    "score_channel": "d14386187a972d26",
+    "score_channel_bg": "bc4a454e0d4c8931",
+    "score_channel_metrics_opportunity": "ec8252af3e6aa15e",
+    "score_details": "cd5586ef6018afde",
+    "score_gt_rural": "d88d67442b2aef58",
+    "score_gt_rural_bg": "7cde6c3e27ce20e0",
+    "score_gt_rural_period_bg": "c3ef3086cfad1b34",
+    "score_kpi": "4cbc57d2dfa08c95",
+    "score_kpi_bg": "edf980f3ba5c2673",
+    "score_opportunity": "5bb290cde203f537",
+    "score_overall": "e6f4d32f1ee3d3c1",
+    "score_period": "03931b021413cc4b",
+    "score_period_months": "84e587b6a958cef1",
+    "score_tier": "11cbaa2ab97fdaeb",
+    "score_top_bottom5_ranking": "eca623392a1ef371",
+    "sku6_bg": "27d8e1cf35c02277",
+    "sku6_bottler": "7b9261bd234dff5f",
+    "sku6_period_bg": "6ce3c5e7d555737c",
+    "skus": "01211894825946a0",
+    "sovi_brand": "1058f67a7af6574e",
+    "sovi_period_trend": "d1680e3348d0e6ea",
+    "sovi_period_trend6": "138b8afca7f83e0a",
+}
+
+
+def test_registry_output_digests(spark):
+    """Every REPORTS entry, built on its family fixture with SPINE and
+    TRGX_TEST_SKELETON, hashes to its pinned digest: the whole registry's
+    output is byte-identical across refactors of the report pipeline."""
+    import hashlib
+    import json
+
+    assert set(REGISTRY_DIGESTS) == set(REPORTS)
+    got = {}
+    for name in sorted(REPORTS):
+        out = build_reference_report(
+            spark, name, _fixture_for(spark, name), SPINE,
+            skeleton=TRGX_TEST_SKELETON,
+        )
+        text = "\n".join(
+            sorted(
+                json.dumps([str(v) for v in r], ensure_ascii=False)
+                for r in out.collect()
+            )
+        )
+        got[name] = hashlib.sha256(text.encode()).hexdigest()[:16]
+    assert got == REGISTRY_DIGESTS
