@@ -1096,27 +1096,24 @@ def shift_cut_trgx_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sliding pipeline; one grouped pass per payload level.",
 )
 def static_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_cascalog_spark.plans.report import StaticReportSpec, build_static_report
+    from etl_cascalog_spark.plans.reports_registry import StaticReference, build_static
 
-    orders = read_table(spark, sf_dir, "orders")
-    base = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderstatus").alias("status"),
-        F.year(F.col("o_orderdate").cast("date")).cast("string").alias("yr"),
-    ).agg(
-        dround(F.sum(money(F.col("o_totalprice")))).cast("decimal(18,2)").alias("revenue"),
-        F.count("*").cast("decimal(18,2)").alias("n"),
+    def by_status_year(orders: DataFrame) -> DataFrame:
+        return orders.groupBy(
+            F.col("o_orderpriority").alias("priority"),
+            F.col("o_orderstatus").alias("status"),
+            F.year(F.col("o_orderdate").cast("date")).cast("string").alias("yr"),
+        ).agg(
+            dround(F.sum(money(F.col("o_totalprice")))).cast("decimal(18,2)").alias("revenue"),
+            F.count("*").cast("decimal(18,2)").alias("n"),
+        )
+
+    spec = StaticReference(
+        by_status_year, ["priority"], ["status", "yr"], ["revenue", "n"],
+        "orders", "m_cocacola_score_achievement_rate.clj:43-49",
+        category="demo", project="tpch",
     )
-    spec = StaticReportSpec(
-        report="m_static_orders",
-        project="tpch",
-        category="demo",
-        source="orders",
-        selector_dims=["priority"],
-        payload_dims=["status", "yr"],
-        metrics=["revenue", "n"],
-    )
-    return build_static_report(spark, base, spec)
+    return build_static(spec, "m_static_orders", read_table(spark, sf_dir, "orders"))
 
 
 @register(
@@ -1274,33 +1271,29 @@ def running_window_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="THE reference workload: the full 38-report pipeline shape "
     "(SURVEY Appendix A / m_cocacola_score_overall.clj:60-74) as one "
-    "declarative ReportSpec — scan → pivot → spine → calendar lags → "
+    "registry ReferenceReport spec — scan → pivot → spine → calendar lags → "
     "null-safe deltas → nested payload JSON → ms.report sink rows. Even "
     "the JSON columns hash-match the oracle (deterministic assembly).",
 )
 def report_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_cascalog_spark.plans.report import ReportSpec, build_report
+    from etl_cascalog_spark.plans.reports_registry import ReferenceReport, build_sliding
 
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderstatus").alias("status"),
-        F.last_day(F.col("o_orderdate").cast("date")).alias("dw_dt"),
-    ).agg(dround(F.sum(money(F.col("o_totalprice")))).alias("value"))
-    spec = ReportSpec(
-        report="m_orders_by_status",
-        project="tpch",
-        category="demo",
-        source="orders",
-        date_col="dw_dt",
-        value_col="value",
-        selector_dims=["priority"],
-        payload_dims=["status"],
-        spine_start="1996-01-01",
-        spine_end="1997-12-31",
-        metrics=["value", "pp_delta", "yoy_delta"],
+    def monthly(orders: DataFrame) -> DataFrame:
+        return orders.groupBy(
+            F.col("o_orderpriority").alias("priority"),
+            F.col("o_orderstatus").alias("status"),
+            F.last_day(F.col("o_orderdate").cast("date")).alias("dw_dt"),
+        ).agg(dround(F.sum(money(F.col("o_totalprice")))).alias("value"))
+
+    spec = ReferenceReport(
+        monthly, ["priority"], ["status"],
+        "orders", "m_cocacola_score_overall.clj:60-74",
+        category="demo", project="tpch", metrics=["value", "pp_delta", "yoy_delta"],
     )
-    return build_report(spark, monthly, spec)
+    return build_sliding(
+        spark, spec, "m_orders_by_status", read_table(spark, sf_dir, "orders"),
+        ("1996-01-01", "1997-12-31"),
+    )
 
 
 #: plan-time skeleton for the trgx_report_period query — the reference's

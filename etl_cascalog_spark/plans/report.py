@@ -1,42 +1,32 @@
-"""Declarative report pipeline — the framework behind the reference's 38
-``src/cocacola/rpt/`` jobs (SURVEY.md Appendix A).
+"""Deterministic JSON assembly for the report pipeline — the framework
+behind the reference's 38 ``src/cocacola/rpt/`` jobs (SURVEY.md Appendix A).
 
 Every report job in the reference is the same pipeline with different
-parameters (source tap, filters, selector dims, payload dims → metrics,
-refresh mode):
+parameters (source tap, filters, selector dims, payload dims → metrics):
 
   scan → filters → group-pivot (A4) → month spine (W5/J4) → calendar lags
   (W1/W2, trgx.clj:30-32) → null-safe deltas (X6) → nested payload (A7,
   tr-dimension-metrics trgx.clj:72-77) → JSON → append to ``ms.report``
-  with watermark (I1) or full-refresh (I5)
 
-Here that is one :class:`ReportSpec` + :func:`build_report`. The sink row
-shape matches the reference's generic report table
-(m_cocacola_score_overall.clj:40): dw_dt, project, category, report,
-selector (JSON), selector_desc, dimension_metrics (JSON).
+The spec types (one per report shape) and their builders live in
+:mod:`plans.reports_registry`; the sink row shape matches the reference's
+generic report table (m_cocacola_score_overall.clj:40): dw_dt, project,
+category, report, selector (JSON), selector_desc, dimension_metrics (JSON).
 
 JSON output is built with deterministic string assembly
 (:func:`plans.trgx.metrics_json` / :func:`json_object`): fixed key order,
 decimal-string numbers — byte-identical across engines, so even the JSON
 columns are oracle-checkable.
-
-Scale: one shuffle for the pivot (on selector+payload dims), a broadcast
-spine join, one grouped pass per payload level for the nested JSON. The
-reference ran each report as its own serial Hadoop job (cascalog.sh:37-119);
-here reports are lazy DataFrames — schedule N of them concurrently and
-Spark shares the scans.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
-from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from etl_cascalog_spark.operators.periods import with_period_comparisons
-from etl_cascalog_spark.plans.trgx import metrics_json, nest_json
+from etl_cascalog_spark.plans.trgx import metrics_json
 
 
 def json_object(pairs: dict[str, Column]) -> Column:
@@ -54,51 +44,18 @@ def json_object(pairs: dict[str, Column]) -> Column:
     return F.concat(F.lit("{"), *parts, F.lit("}"))
 
 
-@dataclass
-class ReportSpec:
-    """Parameters of one report job (one row of SURVEY.md Appendix A)."""
-
-    report: str
-    project: str
-    category: str
-    source: str
-    date_col: str
-    value_col: str
-    selector_dims: Sequence[str]
-    payload_dims: Sequence[str]
-    spine_start: str
-    spine_end: str
-    filters: Sequence[Column] = field(default_factory=list)
-    #: which period-comparison metrics go into the payload leaf — either a
-    #: sequence of column names (JSON key = column name) or a mapping
-    #: {json_key: column_name} for reference-faithful metric labels
-    #: (score/pp_score/… , m_cocacola_score_channel.clj:82)
-    metrics: Sequence[str] | Mapping[str, str] = ("value", "pp_delta", "yoy_delta")
-    #: metric json keys emitted as quoted JSON strings, not decimals — the
-    #: reference ships sort keys/labels inside the leaf (``:abbr``
-    #: m_cocacola_skus.clj:67, ``:bg`` m_cocacola_availability_period_trend.clj:68)
-    string_metrics: Sequence[str] = ()
-    #: metric json keys whose column is ALREADY a JSON document — embedded
-    #: raw (``:period_value`` m_cocacola_anal_rep_kpis.clj:48)
-    raw_json_metrics: Sequence[str] = ()
-    #: extra grouping dims that feed string metrics (``abbr`` sort keys) but
-    #: are neither selector nor payload levels
-    carry_dims: Sequence[str] = ()
-    #: FR jobs that pin the report row key (``(identity "9999-12-31" :>
-    #: ?dw-dt)``, m_cocacola_sovi_period_trend.clj:71): the sliding pipeline
-    #: still runs, periods move into the payload, dw_dt is the snapshot
-    snapshot_dt: str | None = None
-    refresh: str = "wm"  # "wm" (I1 watermark) | "full" (I5)
-
-
 def metric_leaf(
     metrics: Sequence[str] | Mapping[str, str],
     string_metrics: Sequence[str] = (),
     raw_json_metrics: Sequence[str] = (),
 ) -> Column:
-    """Leaf JSON from a metrics declaration: decimal(18,2) numbers by
-    default, quoted strings for ``string_metrics``, raw embedding for
-    ``raw_json_metrics``."""
+    """Leaf JSON from a metrics declaration — a sequence of column names
+    (JSON key = column name) or a mapping {json_key: column_name}:
+    decimal(18,2) numbers by default, quoted strings for
+    ``string_metrics`` (the reference ships sort keys/labels inside the
+    leaf, ``:abbr`` m_cocacola_skus.clj:67), raw embedding for
+    ``raw_json_metrics`` (columns that already hold a JSON document,
+    ``:period_value`` m_cocacola_anal_rep_kpis.clj:48)."""
     mapping = metrics if isinstance(metrics, Mapping) else {m: m for m in metrics}
     cols: dict[str, Column] = {}
     for key, name in mapping.items():
@@ -110,103 +67,3 @@ def metric_leaf(
         else:
             cols[key] = c.cast("decimal(18,2)")
     return metrics_json(cols)
-
-
-def build_report(spark: SparkSession, source_df: DataFrame, spec: ReportSpec) -> DataFrame:
-    """Compose the full report pipeline for ``spec``; returns the sink-shaped
-    DataFrame (not written — callers append via io.jdbc_append /
-    io.overwrite_logical_partition per refresh mode)."""
-    df = source_df
-    for f in spec.filters:
-        df = df.where(f)
-
-    dims = [
-        d
-        for d in dict.fromkeys(
-            [*spec.selector_dims, *spec.payload_dims, *spec.carry_dims]
-        )
-        if d != "period"
-    ]
-    compared = with_period_comparisons(
-        spark,
-        df,
-        dims=dims,
-        date_col=spec.date_col,
-        value_col=spec.value_col,
-        spine_start=spec.spine_start,
-        spine_end=spec.spine_end,
-    ).withColumn("period", F.col("dw_dt").cast("string"))
-
-    snapshot = spec.snapshot_dt is not None
-    group_cols = ([] if snapshot else ["dw_dt"]) + list(spec.selector_dims)
-    leaf = metric_leaf(spec.metrics, spec.string_metrics, spec.raw_json_metrics)
-    if spec.payload_dims:
-        nested = nest_json(
-            compared,
-            group_cols=group_cols,
-            level_cols=list(spec.payload_dims),
-            leaf_json=leaf,
-        )
-    else:
-        nested = compared.withColumn("tree_json", leaf).select(
-            *group_cols, "tree_json"
-        )
-
-    selector = json_object({d: F.col(d) for d in spec.selector_dims})
-    dw = (
-        F.lit(spec.snapshot_dt).cast("date") if snapshot else F.col("dw_dt")
-    )
-    return nested.select(
-        dw.alias("dw_dt"),
-        F.lit(spec.project).alias("project"),
-        F.lit(spec.category).alias("category"),
-        F.lit(spec.report).alias("report"),
-        selector.alias("selector"),
-        F.concat_ws("-", *[F.col(d) for d in spec.selector_dims]).alias("selector_desc"),
-        F.col("tree_json").alias("dimension_metrics"),
-    )
-
-
-@dataclass
-class StaticReportSpec:
-    """Full-refresh (I5) report WITHOUT period comparisons: raw metric
-    columns nested under payload dims, dw_dt pinned to the snapshot key —
-    the m_cocacola_score_achievement_rate / anal_rep_kpis / core_sku shape
-    (achievement_rate.clj:43-49: dw-dt = "9999-12-31", payload
-    [bottler, period] → [c_total_score, c_weight, value])."""
-
-    report: str
-    project: str
-    category: str
-    source: str
-    selector_dims: Sequence[str]
-    payload_dims: Sequence[str]
-    metrics: Sequence[str] | Mapping[str, str]
-    string_metrics: Sequence[str] = ()
-    raw_json_metrics: Sequence[str] = ()
-    snapshot_dt: str = "9999-12-31"
-
-
-def build_static_report(
-    spark: SparkSession, source_df: DataFrame, spec: StaticReportSpec
-) -> DataFrame:
-    """Compose a static (no-sliding) report: nested payload JSON per
-    selector group, one row per selector combination at the snapshot key.
-    One grouped pass per payload level — no pivot, no spine."""
-    leaf = metric_leaf(spec.metrics, spec.string_metrics, spec.raw_json_metrics)
-    nested = nest_json(
-        source_df,
-        group_cols=list(spec.selector_dims),
-        level_cols=list(spec.payload_dims),
-        leaf_json=leaf,
-    )
-    selector = json_object({d: F.col(d) for d in spec.selector_dims})
-    return nested.select(
-        F.lit(spec.snapshot_dt).cast("date").alias("dw_dt"),
-        F.lit(spec.project).alias("project"),
-        F.lit(spec.category).alias("category"),
-        F.lit(spec.report).alias("report"),
-        selector.alias("selector"),
-        F.concat_ws("-", *[F.col(d) for d in spec.selector_dims]).alias("selector_desc"),
-        F.col("tree_json").alias("dimension_metrics"),
-    )

@@ -44,14 +44,7 @@ from pyspark.sql import functions as F
 
 from etl_cascalog_spark.operators.filters import regex_guard, require_non_null
 from etl_cascalog_spark.operators.periods import with_period_comparisons
-from etl_cascalog_spark.plans.report import (
-    ReportSpec,
-    StaticReportSpec,
-    build_report,
-    build_static_report,
-    json_object,
-    metric_leaf,
-)
+from etl_cascalog_spark.plans.report import json_object, metric_leaf
 from etl_cascalog_spark.plans.trgx import (
     attach_kv,
     branch_subtree,
@@ -265,14 +258,16 @@ def _prep_availability_rural(df: DataFrame) -> DataFrame:
     ).withColumnRenamed("item", "product")
 
 
-def _prep_trend(brand_filter: str | None, value_col: str = "value"):
-    """Shared *_period_trend prep: market not China-Tier (+ brand pin)."""
+def _prep_trend(kpi: str, brand: str | None = None):
+    """Shared *_period_trend prep: market not China-Tier (+ brand pin); the
+    ``kpi_const`` selector is the literal kpi label the job pins
+    (m_cocacola_availability_period_trend.clj:67)."""
 
     def prep(df: DataFrame) -> DataFrame:
         out = _not_tier_market(df)
-        if brand_filter is not None:
-            out = out.where(F.col("brand") == brand_filter)
-        return out
+        if brand is not None:
+            out = out.where(F.col("brand") == brand)
+        return out.withColumn("kpi_const", F.lit(kpi))
 
     return prep
 
@@ -299,7 +294,8 @@ def _prep_sovi_period_trend6(df: DataFrame) -> DataFrame:
 
 @dataclass(frozen=True)
 class ReferenceReport:
-    """One sliding-shape job: prepare() + the declarative spec skeleton."""
+    """One sliding-shape job: prepare() + the declarative spec skeleton
+    (scan → pivot → spine → calendar lags → nested payload JSON)."""
 
     prepare: Callable[[DataFrame], DataFrame]
     selector_dims: Sequence[str]
@@ -308,16 +304,23 @@ class ReferenceReport:
     cite: str
     category: str = "score"
     label: str | None = None
-    metrics: Mapping[str, str] = field(default_factory=lambda: SCORE_METRICS)
+    project: str = "cocacola"
+    #: leaf metrics: {json_key: comparison column}, or a sequence of
+    #: comparison columns keyed by their own names
+    metrics: Mapping[str, str] | Sequence[str] = field(
+        default_factory=lambda: SCORE_METRICS
+    )
     string_metrics: Sequence[str] = ()
     carry_dims: Sequence[str] = ()  # extra grouping dims feeding string metrics
-    refresh: str = "wm"
     snapshot_dt: str | None = None  # FR jobs that pin the report row key
 
 
 @dataclass(frozen=True)
 class StaticReference:
-    """Full-refresh snapshot job (no sliding): achievement_rate family."""
+    """Full-refresh snapshot job (no sliding): raw metric columns nested
+    under payload dims, dw_dt pinned to :data:`SNAPSHOT_DT` — the
+    achievement_rate / anal_rep_kpis / core_sku family
+    (m_cocacola_score_achievement_rate.clj:43-49)."""
 
     prepare: Callable[[DataFrame], DataFrame]
     selector_dims: Sequence[str]
@@ -327,9 +330,9 @@ class StaticReference:
     cite: str
     category: str = "score"
     label: str | None = None
+    project: str = "cocacola"
     string_metrics: Sequence[str] = ()
     raw_json_metrics: Sequence[str] = ()
-    refresh: str = "full"
 
 
 @dataclass(frozen=True)
@@ -350,7 +353,7 @@ class ButtonReference:
     carry_dims: Sequence[str] = ()
     category: str = "score"
     label: str | None = None
-    refresh: str = "wm"
+    project: str = "cocacola"
     snapshot_dt: str | None = None
 
 
@@ -358,7 +361,8 @@ class ButtonReference:
 class TrgxReference:
     """Config-skeleton job: sliding (or raw-period) node metrics grafted
     onto conf.trgx_cocacola via kv->trgx, emitted as whole tree /
-    leaf nodes / path nodes."""
+    leaf nodes / path nodes. ``payload_dims`` name the node-frame columns
+    the payload nests on."""
 
     kind: str  # "tree" | "leaf_nodes" | "path_nodes"
     skeleton_mode: str  # "merge" (latest-trgx-merge) | "kpi" (latest-trgx-kpi)
@@ -370,11 +374,10 @@ class TrgxReference:
     string_metrics: Sequence[str] = ()
     required: Sequence[str] = ("c_total_score", "c_weight", "value")
     sliding: bool = True
-    year_split: bool = False  # period_months: payload [year, period]
     wrap_key: str | None = None  # opportunity: {"trgx-data": tree}
     category: str = "score"
     label: str | None = None
-    refresh: str = "wm"
+    project: str = "cocacola"
     snapshot_dt: str | None = None
 
 
@@ -397,51 +400,96 @@ _TRGX_DIMS = (
 )
 
 
+#: the row key of full-refresh snapshot reports (``(identity "9999-12-31"
+#: :> ?dw-dt)``, m_cocacola_score_achievement_rate.clj:43)
+SNAPSHOT_DT = "9999-12-31"
+
+
 def _with_period(compared: DataFrame) -> DataFrame:
     return compared.withColumn("period", F.col("dw_dt").cast("string"))
 
 
-def _selector_json(spec, cols: Mapping[str, Column]) -> Column:
-    return json_object({d: cols[d] for d in spec.selector_dims})
-
-
-def _sink_select(spec, name, frame, selector, dw_dt) -> DataFrame:
-    label = spec.label or name
+def _sink(frame, spec, report, dw_dt, selector, selector_desc) -> DataFrame:
+    """The generic ``ms.report`` row (m_cocacola_score_overall.clj:40):
+    dw_dt, project, category, report, selector JSON (``selector`` maps
+    each key to its column), selector_desc, dimension_metrics (the
+    frame's ``tree_json``)."""
     return frame.select(
         dw_dt.cast("date").alias("dw_dt"),
-        F.lit("cocacola").alias("project"),
+        F.lit(spec.project).alias("project"),
         F.lit(spec.category).alias("category"),
-        F.lit(label).alias("report"),
-        selector.alias("selector"),
-        F.lit("").alias("selector_desc"),
+        F.lit(report).alias("report"),
+        json_object(selector).alias("selector"),
+        selector_desc.alias("selector_desc"),
         F.col("tree_json").alias("dimension_metrics"),
     )
 
 
-def _build_static(spark, name, spec: StaticReference, df) -> DataFrame:
-    sspec = StaticReportSpec(
-        report=spec.label or name,
-        project="cocacola",
-        category=spec.category,
-        source=spec.source,
-        selector_dims=list(spec.selector_dims),
-        payload_dims=list(spec.payload_dims),
-        metrics=spec.metrics,
-        string_metrics=list(spec.string_metrics),
-        raw_json_metrics=list(spec.raw_json_metrics),
+def _dims_sink(frame, spec, report, dw_dt) -> DataFrame:
+    """Sliding/static sink: the selector is the selector dims' own columns,
+    selector_desc their '-'-join."""
+    cols = [F.col(d) for d in spec.selector_dims]
+    return _sink(
+        frame, spec, report, dw_dt,
+        dict(zip(spec.selector_dims, cols)), F.concat_ws("-", *cols),
     )
-    return build_static_report(spark, spec.prepare(df), sspec)
 
 
-def _build_button(spark, name, spec: ButtonReference, df, spine) -> DataFrame:
+def build_sliding(
+    spark: SparkSession,
+    spec: ReferenceReport,
+    report: str,
+    source_df: DataFrame,
+    spine: tuple[str, str],
+) -> DataFrame:
+    """The sliding report pipeline: prepare → (dims, dw_dt, value) → pivot
+    → month spine → calendar lags → null-safe deltas → nested payload JSON
+    → sink rows named ``report``. ``prepare`` must emit ``dw_dt``, ``value``
+    and every selector / payload / carry dim."""
+    dims = [
+        d
+        for d in dict.fromkeys(
+            [*spec.selector_dims, *spec.payload_dims, *spec.carry_dims]
+        )
+        if d != "period"
+    ]
+    prepared = spec.prepare(source_df).select(
+        *dims, F.col("dw_dt").cast("date").alias("dw_dt"), "value"
+    )
+    compared = _with_period(
+        with_period_comparisons(spark, prepared, dims, "dw_dt", "value", *spine)
+    )
+    snapshot = spec.snapshot_dt is not None
+    group_cols = ([] if snapshot else ["dw_dt"]) + list(spec.selector_dims)
+    leaf = metric_leaf(spec.metrics, spec.string_metrics)
+    if spec.payload_dims:
+        nested = nest_json(compared, group_cols, list(spec.payload_dims), leaf)
+    else:
+        nested = compared.withColumn("tree_json", leaf).select(
+            *group_cols, "tree_json"
+        )
+    dw = F.lit(spec.snapshot_dt) if snapshot else F.col("dw_dt")
+    return _dims_sink(nested, spec, report, dw)
+
+
+def build_static(spec: StaticReference, report: str, source_df: DataFrame) -> DataFrame:
+    """The static (no-sliding) report: nested payload JSON per selector
+    group, one row per selector combination at :data:`SNAPSHOT_DT`. One
+    grouped pass per payload level — no pivot, no spine."""
+    leaf = metric_leaf(spec.metrics, spec.string_metrics, spec.raw_json_metrics)
+    nested = nest_json(
+        spec.prepare(source_df), list(spec.selector_dims), list(spec.payload_dims), leaf
+    )
+    return _dims_sink(nested, spec, report, F.lit(SNAPSHOT_DT))
+
+
+def _build_button(spark, spec: ButtonReference, report, df, spine) -> DataFrame:
     prepared = spec.prepare(df).withColumn("dw_dt", F.col("dw_dt").cast("date"))
     plain_sel = [d for d in spec.selector_dims if d not in ("period", "button")]
     plain_payload = [d for d in spec.payload_dims if d != "period"]
     dims = list(dict.fromkeys([*plain_sel, *plain_payload, *spec.carry_dims]))
     compared = _with_period(
-        with_period_comparisons(
-            spark, prepared, dims, "dw_dt", "value", spine[0], spine[1]
-        )
+        with_period_comparisons(spark, prepared, dims, "dw_dt", "value", *spine)
     )
     fan = F.array(
         *[
@@ -463,7 +511,7 @@ def _build_button(spark, name, spec: ButtonReference, df, spine) -> DataFrame:
         nested = nested.withColumn("period", F.col("dw_dt").cast("string"))
     sel_cols = {d: F.col(d) for d in spec.selector_dims}
     dw = F.lit(spec.snapshot_dt) if snapshot else F.col("dw_dt")
-    return _sink_select(spec, name, nested, _selector_json(spec, sel_cols), dw)
+    return _sink(nested, spec, report, dw, sel_cols, F.lit(""))
 
 
 def _trgx_skeleton_frame(spark, spec: TrgxReference, skeleton: dict):
@@ -477,7 +525,7 @@ def _trgx_skeleton_frame(spark, spec: TrgxReference, skeleton: dict):
 def _trgx_compared(spark, df, spine) -> DataFrame:
     compared = with_period_comparisons(
         spark, df.withColumn("dw_dt", F.col("dw_dt").cast("date")),
-        list(_TRGX_DIMS), "dw_dt", "value", spine[0], spine[1],
+        list(_TRGX_DIMS), "dw_dt", "value", *spine,
     )
     # max over the group's whole dw-dt map (m_cocacola_score_period.clj:49)
     w = Window.partitionBy(*[F.col(d) for d in _TRGX_DIMS])
@@ -487,8 +535,25 @@ def _trgx_compared(spark, df, spine) -> DataFrame:
     )
 
 
+#: trgx selector key → node-frame column
+_TRGX_SELECTOR = {
+    "channel": "path_channel",
+    "kpi": "path_kpi",
+    "metrics": "path_metrics",
+    "bottler": "bottler_sort",
+    "bg": "bg_sort",
+    "period": "period",
+}
+
+
+def _trgx_sink(frame, spec: TrgxReference, report) -> DataFrame:
+    dw = F.lit(spec.snapshot_dt) if spec.snapshot_dt else F.col("dw_dt")
+    sel = {d: F.col(_TRGX_SELECTOR[d]) for d in spec.selector_dims}
+    return _sink(frame, spec, report, dw, sel, F.lit(""))
+
+
 def _build_trgx(
-    spark, name, spec: TrgxReference, df, spine, skeleton, precomputed=None
+    spark, spec: TrgxReference, report, df, spine, skeleton, precomputed=None
 ) -> DataFrame:
     skel, sdf = _trgx_skeleton_frame(spark, spec, skeleton)
     max_depth = max(len(p) for p, _ in skeleton_paths(skel))
@@ -554,15 +619,9 @@ def _build_trgx(
                 "tree_json",
                 F.concat(F.lit(f'{{"{spec.wrap_key}":'), F.col("tree_json"), F.lit("}")),
             )
-        sel = {
-            "period": F.col("period") if spec.sliding else None,
-            "bg": F.col("bg_sort"),
-            "bottler": F.col("bottler_sort"),
-        }
         if spec.sliding:
             tree = tree.withColumn("period", F.col("dw_dt").cast("string"))
-        dw = F.lit(spec.snapshot_dt) if spec.snapshot_dt else F.col("dw_dt")
-        return _sink_select(spec, name, tree, _selector_json(spec, sel), dw)
+        return _trgx_sink(tree, spec, report)
 
     compared = (
         precomputed if precomputed is not None else _trgx_compared(spark, df, spine)
@@ -589,13 +648,7 @@ def _build_trgx(
             list(spec.payload_dims),
             leaf,
         )
-        sel = {
-            "period": F.col("period"),
-            "bg": F.col("bg_sort"),
-            "bottler": F.col("bottler_sort"),
-        }
-        dw = F.lit(spec.snapshot_dt) if spec.snapshot_dt else F.col("dw_dt")
-        return _sink_select(spec, name, nested, _selector_json(spec, sel), dw)
+        return _trgx_sink(nested, spec, report)
 
     # path_nodes: trgx-take-last 3 → trgx-split-at 4 → pad 4 "TOTAL"
     # (m_cocacola_score_period.clj:70-79)
@@ -630,36 +683,20 @@ def _build_trgx(
         nodes = nodes.where(F.col(r).isNotNull())
     leaf = metric_leaf(spec.metrics, spec.string_metrics)
     snapshot = spec.snapshot_dt is not None
-    sel_source = {
-        "channel": F.col("path_channel"),
-        "kpi": F.col("path_kpi"),
-        "metrics": F.col("path_metrics"),
-        "bottler": F.col("bottler_sort"),
-        "bg": F.col("bg_sort"),
-        "period": F.col("period"),
-    }
     group_cols = ([] if snapshot else ["dw_dt", "period"]) + [
         "path_channel",
         "path_kpi",
         "path_metrics",
     ]
-    # payload level columns by name
-    level_map = {
-        "bottler": "bottler_sort" if name != "score_bottler_ranking" else "bottler",
-        "bg": "bg_sort",
-        "period": "period",
-        "year": "year",
-    }
     extra_groups = []
     if "bottler" in spec.selector_dims:
         extra_groups.append("bottler_sort")
     if "bg" in spec.selector_dims:
         extra_groups.append("bg_sort")
-    levels = [level_map[d] for d in spec.payload_dims]
-    nested = nest_json(nodes, group_cols + extra_groups, levels, leaf)
-    sel = {d: sel_source[d] for d in spec.selector_dims}
-    dw = F.lit(spec.snapshot_dt) if snapshot else F.col("dw_dt")
-    return _sink_select(spec, name, nested, _selector_json(spec, sel), dw)
+    nested = nest_json(
+        nodes, group_cols + extra_groups, list(spec.payload_dims), leaf
+    )
+    return _trgx_sink(nested, spec, report)
 
 
 # ---------------------------------------------------------------------------
@@ -714,7 +751,7 @@ REPORTS: dict[str, object] = {
         {"test": SCORE_METRICS_ABBR},
         "model.d_cocacola_sku", "m_cocacola_sku6_period_bg.clj:62-69",
         selector_dims=("channel", "button"), carry_dims=("abbr",),
-        refresh="full", snapshot_dt="9999-12-31",
+        snapshot_dt=SNAPSHOT_DT,
     ),
     # --- availability ----------------------------------------------------
     "availability_brand": ReferenceReport(
@@ -724,11 +761,11 @@ REPORTS: dict[str, object] = {
         string_metrics=("brand",), carry_dims=("brand", "order"),
     ),
     "availability_period_trend": ReferenceReport(
-        _prep_trend(None), ["channel", "kpi_const", "sku_type", "bottler"],
+        _prep_trend("AVAILABILITY"), ["channel", "kpi_const", "sku_type", "bottler"],
         ["bottler", "period"],
         "model.d_cocacola_sku_mapping", "m_cocacola_availability_period_trend.clj:62-68",
         metrics=TREND_METRICS, string_metrics=("bg",), carry_dims=("bg",),
-        refresh="full", snapshot_dt="9999-12-31",
+        snapshot_dt=SNAPSHOT_DT,
     ),
     "availability_rural": ReferenceReport(
         _prep_availability_rural, ["bg", "bottler"], ["product_group", "product", "channel"],
@@ -743,17 +780,17 @@ REPORTS: dict[str, object] = {
         category="sovi",
     ),
     "sovi_period_trend": ReferenceReport(
-        _prep_trend("KO"), ["channel", "kpi_const", "juice_sovi_type", "bottler"],
+        _prep_trend("SOVI", "KO"), ["channel", "kpi_const", "juice_sovi_type", "bottler"],
         ["bottler", "period"],
         "model.d_cocacola_sovi", "m_cocacola_sovi_period_trend.clj:70-77",
         metrics=TREND_METRICS, string_metrics=("bg",), carry_dims=("bg",),
-        refresh="full", snapshot_dt="9999-12-31",
+        snapshot_dt=SNAPSHOT_DT,
     ),
     "sovi_period_trend6": ReferenceReport(
         _prep_sovi_period_trend6, ["bg", "bottler", "channel"],
         ["period", "brand", "juice_type", "sovi_type"],
         "model.d_cocacola_sovi", "m_cocacola_sovi_period_trend6.clj:71-96",
-        refresh="full", snapshot_dt="9999-12-31",
+        snapshot_dt=SNAPSHOT_DT,
     ),
     # --- cooler ----------------------------------------------------------
     "cooler_brand": ReferenceReport(
@@ -761,38 +798,37 @@ REPORTS: dict[str, object] = {
         "model.d_cocacola_cooler", "m_cocacola_cooler_brand.clj:60-66",
     ),
     "cooler_period_trend": ReferenceReport(
-        _prep_trend("KO"), ["channel", "kpi_const", "cooler_type", "bottler"],
+        _prep_trend("COOLER", "KO"), ["channel", "kpi_const", "cooler_type", "bottler"],
         ["bottler", "period"],
         "model.d_cocacola_cooler", "m_cocacola_cooler_period_trend.clj:63-69",
         metrics=TREND_METRICS, string_metrics=("bg",), carry_dims=("bg",),
-        refresh="full", snapshot_dt="9999-12-31",
+        snapshot_dt=SNAPSHOT_DT,
     ),
     # --- activation ------------------------------------------------------
     "activation_brand": ReferenceReport(
         _prep_cooler_brand, ["bg", "bottler", "channel"], ["activation_type", "brand"],
         "model.d_cocacola_activation_summary", "m_cocacola_activation_brand.clj:63-68",
-        refresh="full",
     ),
     "activation_sub_brand": ReferenceReport(
         _prep_activation_sub_brand, ["bg", "bottler", "channel"],
         ["activation_type", "activation_type_sub", "brand"],
         "model.d_cocacola_activation_detail", "m_cocacola_activation_sub_brand.clj:66-72",
-        label="activation_brand_sub", refresh="full",
+        label="activation_brand_sub",
     ),
     "activation_period_trend": ReferenceReport(
-        _prep_trend("KO"), ["channel", "kpi_const", "activation_type", "bottler"],
+        _prep_trend("ACTIVATION", "KO"), ["channel", "kpi_const", "activation_type", "bottler"],
         ["bottler", "period"],
         "model.d_cocacola_activation_summary", "m_cocacola_activation_period_trend.clj:79-87",
         metrics=TREND_METRICS, string_metrics=("bg",), carry_dims=("bg",),
-        refresh="full", snapshot_dt="9999-12-31",
+        snapshot_dt=SNAPSHOT_DT,
     ),
     "activation_period_trend_sub": ReferenceReport(
-        _prep_trend("KO"), ["channel", "kpi_const", "activation_type", "bottler"],
+        _prep_trend("ACTIVATION", "KO"), ["channel", "kpi_const", "activation_type", "bottler"],
         ["bottler", "period"],
         "model.d_cocacola_activation_detail", "m_cocacola_activation_period_trend.clj:91-120",
         label="activation_period_trend",
         metrics=TREND_METRICS, string_metrics=("bg",), carry_dims=("bg",),
-        refresh="full", snapshot_dt="9999-12-31",
+        snapshot_dt=SNAPSHOT_DT,
     ),
     # --- buttons ---------------------------------------------------------
     "score_top_bottom5_ranking": None,  # filled below (needs _prep_top_bottom5)
@@ -894,7 +930,7 @@ REPORTS["score_gt_rural_period_bg"] = ButtonReference(
     _prep_gt_rural_bg, ["period", "bg"], {"test": SCORE_METRICS},
     "model.d_cocacola_score_rural", "m_cocacola_score_gt_rural_period_bg.clj:62-69",
     selector_dims=("channel", "button"), string_metrics=(),
-    label="GT_Rural_period_bg", refresh="full", snapshot_dt="9999-12-31",
+    label="GT_Rural_period_bg", snapshot_dt=SNAPSHOT_DT,
 )
 
 
@@ -1037,7 +1073,6 @@ for _key, _src in (
         ["bg_sort", "bottler_sort"], ["item_key", "period"],
         {"value": "value"},
         _src, "m_cocacola_gt_score_deep_dive.clj:41-60",
-        label=_key.replace("gt_score_deep_dive", "gt_score_deep_dive"),
     )
 
 # --- trgx specs ------------------------------------------------------------
@@ -1051,25 +1086,25 @@ REPORTS["score_period"] = TrgxReference(
     "path_nodes", "merge",
     ["channel", "kpi", "metrics", "bottler"],
     "model.d_cocacola_score", "m_cocacola_score_period.clj:59-101",
-    payload_dims=["bottler", "period"],
+    payload_dims=["bottler_sort", "period"],
     metrics=_TRGX_7,
     required=("c_total_score", "c_weight", "value", "max_value"),
-    label="period", refresh="full", snapshot_dt="9999-12-31",
+    label="period", snapshot_dt=SNAPSHOT_DT,
 )
 REPORTS["score_period_months"] = TrgxReference(
     "path_nodes", "merge",
     ["bg", "bottler", "channel", "kpi", "metrics"],
     "model.d_cocacola_score", "m_cocacola_score_period_months.clj:70-117",
     payload_dims=["year", "period"],
-    metrics=_TRGX_7, year_split=True,
+    metrics=_TRGX_7,
     required=("c_total_score", "c_weight", "value", "max_value"),
-    label="period_months", refresh="full", snapshot_dt="9999-12-31",
+    label="period_months", snapshot_dt=SNAPSHOT_DT,
 )
 REPORTS["score_bottler_ranking"] = TrgxReference(
     "path_nodes", "merge",
     ["period", "channel", "kpi", "metrics"],
     "model.d_cocacola_score", "m_cocacola_score_bottler_ranking.clj:62-92",
-    payload_dims=["bg", "bottler"],
+    payload_dims=["bg_sort", "bottler"],
     metrics={
         "c_total_score": "c_total_score", "c_weight": "c_weight",
         "value": "value", "pp_value": "pp_value", "last_dec_value": "last_dec_value",
@@ -1101,7 +1136,7 @@ REPORTS["score_details"] = TrgxReference(
     "tree", "kpi",
     ["bg", "bottler"],
     "model.d_cocacola_score", "m_cocacola_score_details.clj:34-67",
-    sliding=False, label="details", refresh="full", snapshot_dt="9999-12-31",
+    sliding=False, label="details", snapshot_dt=SNAPSHOT_DT,
 )
 
 
@@ -1125,17 +1160,16 @@ def build_reference_report(
     precomputed comparison frame — the shared-pivot fusion path
     of :func:`build_trgx_reports_shared`."""
     spec = REPORTS[name]
+    report = spec.label or name
     if isinstance(spec, ReferenceReport):
-        return _build_sliding_normalized(spark, name, spec, spec.prepare(source_df), spine)
+        return build_sliding(spark, spec, report, source_df, spine)
     if isinstance(spec, StaticReference):
-        return _build_static(spark, name, spec, source_df)
+        return build_static(spec, report, source_df)
     if isinstance(spec, ButtonReference):
-        return _build_button(spark, name, spec, source_df, spine)
-    if isinstance(spec, TrgxReference):
-        if skeleton is None:
-            raise ValueError(f"report {name!r} needs the config skeleton")
-        return _build_trgx(spark, name, spec, source_df, spine, skeleton, compared)
-    raise KeyError(name)
+        return _build_button(spark, spec, report, source_df, spine)
+    if skeleton is None:
+        raise ValueError(f"report {name!r} needs the config skeleton")
+    return _build_trgx(spark, spec, report, source_df, spine, skeleton, compared)
 
 
 def build_trgx_reports_shared(
@@ -1165,51 +1199,4 @@ def build_trgx_reports_shared(
         )
         for n in names
     }
-
-
-def _build_sliding_normalized(spark, name, spec, prepared, spine) -> DataFrame:
-    """Sliding build with the kpi_const / period_sel conveniences:
-    ``kpi_const`` selector entries are the literal kpi labels the trend
-    jobs pin ("AVAILABILITY"/"SOVI"/"COOLER"/"ACTIVATION",
-    m_cocacola_availability_period_trend.clj:67)."""
-    consts = {
-        "availability_period_trend": "AVAILABILITY",
-        "sovi_period_trend": "SOVI",
-        "cooler_period_trend": "COOLER",
-        "activation_period_trend": "ACTIVATION",
-        "activation_period_trend_sub": "ACTIVATION",
-    }
-    if "kpi_const" in spec.selector_dims:
-        prepared = prepared.withColumn("kpi_const", F.lit(consts[name]))
-    prepared = prepared.select(
-        F.col("dw_dt").cast("date").alias("dw_dt"),
-        *[
-            F.col(c)
-            for c in dict.fromkeys(
-                [
-                    *spec.selector_dims,
-                    *[d for d in spec.payload_dims if d != "period"],
-                    *spec.carry_dims,
-                ]
-            )
-        ],
-        "value",
-    )
-    rspec = ReportSpec(
-        report=spec.label or name,
-        project="cocacola",
-        category=spec.category,
-        source=spec.source,
-        date_col="dw_dt",
-        value_col="value",
-        selector_dims=list(spec.selector_dims),
-        payload_dims=list(spec.payload_dims),
-        spine_start=spine[0],
-        spine_end=spine[1],
-        metrics=spec.metrics,
-        string_metrics=list(spec.string_metrics),
-        carry_dims=list(spec.carry_dims),
-        snapshot_dt=spec.snapshot_dt,
-    )
-    return build_report(spark, prepared, rspec)
 

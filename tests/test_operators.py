@@ -449,7 +449,7 @@ def test_score_overall_report_golden_cjk(spark):
     CJK), empty payload dims, calendar pp-delta (W1), deterministic JSON."""
     from etl_cascalog_spark.io import from_rows
     from etl_cascalog_spark.operators.filters import regex_drop
-    from etl_cascalog_spark.plans.report import ReportSpec, build_report
+    from etl_cascalog_spark.plans.reports_registry import ReferenceReport, build_sliding
 
     rows = [
         ("2017-01-31", "SBL", "SBL 辽宁", "Total / 所有渠道", None, 50.0),
@@ -470,20 +470,14 @@ def test_score_overall_report_golden_cjk(spark):
         .where(regex_drop(F.col("bottler"), "全国总体|Tier"))
     )
     monthly = src.select(F.col("dw_dt").cast("date").alias("dw_dt"), "bg", "bottler", "value")
-    spec = ReportSpec(
-        report="m_score_overall",
-        project="cocacola",
-        category="score",
-        source="score",
-        date_col="dw_dt",
-        value_col="value",
-        selector_dims=["bg", "bottler"],
-        payload_dims=[],
-        spine_start="2017-01-01",
-        spine_end="2017-02-28",
+    spec = ReferenceReport(
+        lambda d: d, ["bg", "bottler"], [],
+        "score", "m_cocacola_score_overall.clj:60-74",
         metrics=["value", "pp_delta"],
     )
-    out = build_report(spark, monthly, spec).collect()
+    out = build_sliding(
+        spark, spec, "m_score_overall", monthly, ("2017-01-01", "2017-02-28")
+    ).collect()
     by_dt = {str(r.dw_dt): r for r in out}
     assert set(by_dt) == {"2017-01-31", "2017-02-28"}
     jan, feb = by_dt["2017-01-31"], by_dt["2017-02-28"]
