@@ -3766,10 +3766,10 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node AS doc_id, label AS cluster_id FROM cc_labels
     """,
     doc="Near-dup CLUSTERS from verified MinHash pairs via connected "
-    "components — DEFAULT algorithm is alternating large-star/small-star "
-    "(O(log n) rounds regardless of component diameter; "
-    "localCheckpoint-bounded lineage), with min-label propagation kept "
-    "as the property-tested twin. The step pairwise dedup gets wrong on "
+    "components — alternating large-star/small-star (O(log n) rounds "
+    "regardless of component diameter; localCheckpoint-bounded lineage), "
+    "property-tested against a min-label propagation twin that lives in "
+    "tests/. The step pairwise dedup gets wrong on "
     "chains: keep one doc per component, not per pair. Oracle: unrolled "
     "self-verifying min-label propagation over the exact-Jaccard pair "
     "set (sf1-affordable, unlike the quadratic recursive closure).",

@@ -26,21 +26,17 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from etl_cascalog_spark.plans.trgx import metrics_json
+from etl_cascalog_spark.plans.trgx import json_key, json_string, metrics_json
 
 
 def json_object(pairs: dict[str, Column]) -> Column:
     """Deterministic ``{"k":"v",...}`` JSON from string columns — fixed key
-    order, values escaped as plain strings (dims in report data are
-    identifier-ish; full escaping would go through to_json)."""
+    order, every value a JSON string escaped by :func:`json_string` (NULL
+    → ``""``)."""
     parts: list[Column] = []
     for i, (name, col) in enumerate(pairs.items()):
-        prefix = ("," if i else "") + f'"{name}":"'
-        parts.append(
-            F.concat(
-                F.lit(prefix), F.coalesce(col.cast("string"), F.lit("")), F.lit('"')
-            )
-        )
+        parts.append(F.lit(("," if i else "") + json_key(name)))
+        parts.append(json_string(F.coalesce(col.cast("string"), F.lit(""))))
     return F.concat(F.lit("{"), *parts, F.lit("}"))
 
 
@@ -63,7 +59,7 @@ def metric_leaf(
         if key in raw_json_metrics:
             cols[key] = c
         elif key in string_metrics:
-            cols[key] = F.concat(F.lit('"'), c.cast("string"), F.lit('"'))
+            cols[key] = json_string(c)
         else:
             cols[key] = c.cast("decimal(18,2)")
     return metrics_json(cols)

@@ -1,19 +1,28 @@
-"""Registry of ALL 38 reference report jobs as declarative specs.
+"""The report pipeline's spec types and builders, and ALL 38 reference
+report jobs as declarative specs.
 
-Each entry re-states one ``src/cocacola/rpt/`` job (SURVEY.md Appendix A)
-as a prepare() (the job's filters + column normalization, cited) plus a
-spec of one of four shapes:
+Every ``src/cocacola/rpt/`` job (SURVEY.md Appendix A) is one pipeline run
+with different parameters. Each entry re-states one job as a prepare()
+(the job's filters + column normalization, cited) plus a spec of one of
+four shapes, each with one builder:
 
-- :class:`ReferenceReport`  — the sliding period-comparison shape
-  (scan → pivot → spine → calendar lags → nested payload JSON);
-- :class:`StaticReference`  — full-refresh snapshot shape (no sliding,
-  raw metrics nested under payload dims, dw_dt pinned);
+- :class:`ReferenceReport` / :func:`build_sliding` — the sliding
+  period-comparison shape (scan → pivot → spine → calendar lags → nested
+  payload JSON);
+- :class:`StaticReference` / :func:`build_static` — full-refresh snapshot
+  shape (no sliding, raw metrics nested under payload dims, dw_dt pinned);
 - :class:`ButtonReference`  — the button family (one sliding pass fanned
   into per-button metric subsets, unioned into one sink — the reference
   ran three ``?-`` appends; here one explode, no re-execution);
 - :class:`TrgxReference`    — the config-skeleton family (kv->trgx attach
   onto ``conf.trgx_cocacola``, then whole-tree / leaf-node / path-node
   payloads).
+
+All four end in one ``ms.report`` sink projection (:func:`_sink`). No
+builder reads a job's name: the name (or the spec's ``label``) is only
+the emitted ``report`` value. The catalog's demo reports
+(``report_pipeline``, ``static_report``) build through the same specs and
+builders with ``project="tpch"``.
 
 Running one::
 
@@ -27,6 +36,12 @@ The source DataFrame must follow the FIXTURES.md schema for the job's tap.
 Column convention: prepare() emits ALREADY-normalized columns — selector /
 payload dims carry the value the reference ships (usually the ``*_sort``
 display keys), so the specs read uniformly.
+
+Scale: one shuffle for the pivot (on selector+payload dims), a broadcast
+spine join, one grouped pass per payload level for the nested JSON. The
+reference ran each report as its own serial Hadoop job
+(cascalog.sh:37-119); here reports are lazy DataFrames — schedule N of
+them concurrently and Spark shares the scans.
 
 ``REPORTS`` lists every Appendix-A job key (38). The seven bolome/hadoop
 jobs are warehouse pipelines, not report specs — they live in
@@ -50,6 +65,7 @@ from etl_cascalog_spark.plans.trgx import (
     branch_subtree,
     code_item_col,
     conf_json,
+    json_key,
     merge_branches,
     metrics_json,
     nest_json,
@@ -508,7 +524,7 @@ def _build_button(spark, spec: ButtonReference, report, df, spine) -> DataFrame:
     level_cols = list(spec.payload_dims)
     nested = nest_json(rows, group_cols, level_cols, F.col("leaf"))
     if not snapshot:
-        nested = nested.withColumn("period", F.col("dw_dt").cast("string"))
+        nested = _with_period(nested)
     sel_cols = {d: F.col(d) for d in spec.selector_dims}
     dw = F.lit(spec.snapshot_dt) if snapshot else F.col("dw_dt")
     return _sink(nested, spec, report, dw, sel_cols, F.lit(""))
@@ -579,9 +595,9 @@ def _build_trgx(
         else:
             # details (m_cocacola_score_details.clj:34-53): raw per-period
             # value map per node, no sliding
-            base = df.withColumn(
+            base = _with_period(df.withColumn(
                 "__id", node_id_col(code_item_col(F.col("code"), F.col("item")))
-            ).withColumn("period", F.col("dw_dt").cast("string"))
+            ))
             group = ["bg", "bottler", "bg_sort", "bottler_sort"]
             leaf = metrics_json({"value": F.col("value").cast("decimal(18,2)")})
             folded = nest_json(
@@ -617,10 +633,10 @@ def _build_trgx(
         if spec.wrap_key:
             tree = tree.withColumn(
                 "tree_json",
-                F.concat(F.lit(f'{{"{spec.wrap_key}":'), F.col("tree_json"), F.lit("}")),
+                F.concat(F.lit("{" + json_key(spec.wrap_key)), F.col("tree_json"), F.lit("}")),
             )
         if spec.sliding:
-            tree = tree.withColumn("period", F.col("dw_dt").cast("string"))
+            tree = _with_period(tree)
         return _trgx_sink(tree, spec, report)
 
     compared = (
@@ -941,7 +957,7 @@ def _static_period_prep(extra):
     """Shared static prep: dw_dt → period string + per-job extras."""
 
     def prep(df: DataFrame) -> DataFrame:
-        out = df.withColumn("period", F.col("dw_dt").cast("string"))
+        out = _with_period(df)
         return extra(out) if extra else out
 
     return prep
@@ -996,7 +1012,7 @@ def _prep_core_sku(variant: str | None):
     sink report name."""
 
     def prep(df: DataFrame) -> DataFrame:
-        out = df.withColumn("period", F.col("dw_dt").cast("string"))
+        out = _with_period(df)
         if variant == "bg_all":
             out = out.where(F.col("bottler").isin(list(CORE_SKU_BG_ALL)))
             out = out.withColumn("bg_sort", F.lit("0.2_BGs"))
@@ -1025,7 +1041,7 @@ def _prep_anal_rep_kpis(df: DataFrame) -> DataFrame:
     """m_cocacola_anal_rep_kpis.clj:37-48: fold the per-period value map
     FIRST (tr-dimension-metrics [:period] [:value] at :41), then ship it as
     a raw-JSON leaf metric next to c_sort/level."""
-    base = df.withColumn("period", F.col("dw_dt").cast("string"))
+    base = _with_period(df)
     dims = [
         "bg_sort", "bottler_sort", "channel_sort", "kpi", "kpi_details", "item",
         "product", "xorder", "level",
@@ -1058,7 +1074,7 @@ def _prep_deep_dive(df: DataFrame) -> DataFrame:
             "total_score": F.col("total_score"),
         }
     )
-    return df.withColumn("period", F.col("dw_dt").cast("string")).withColumn(
+    return _with_period(df).withColumn(
         "item_key", item_json
     )
 

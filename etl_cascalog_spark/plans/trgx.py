@@ -32,6 +32,7 @@ Reference op → long-format mapping:
 
 from __future__ import annotations
 
+import json
 import re
 from collections.abc import Sequence
 
@@ -214,13 +215,27 @@ def attach_kv(
     )
 
 
+def json_key(name: str) -> str:
+    """``"name":`` — a plan-time JSON object key, escaped like
+    :func:`json_string` (CJK passes through)."""
+    return json.dumps(name, ensure_ascii=False) + ":"
+
+
+def json_string(col: Column) -> Column:
+    """``col`` as a JSON string literal, escaped per RFC 8259 by Spark's own
+    JSON writer: ``"``, ``\\`` and control characters are escaped, every
+    other character (CJK included) passes through, so values without them
+    keep their plain ``"value"`` bytes. NULL → JSON ``null``."""
+    return F.btrim(F.to_json(F.array(col.cast("string"))), F.lit("[]"))
+
+
 def metrics_json(metrics: dict[str, Column]) -> Column:
     """Deterministic leaf JSON ``{"m":1.23,...}`` — numbers embedded via
     decimal-string casts (no scientific notation, engine-portable), keys in
     given order. NULL metric → JSON null."""
     parts: list[Column] = []
     for i, (name, col) in enumerate(metrics.items()):
-        prefix = ("," if i else "") + f'"{name}":'
+        prefix = ("," if i else "") + json_key(name)
         parts.append(F.concat(F.lit(prefix), F.coalesce(col.cast("string"), F.lit("null"))))
     return F.concat(F.lit("{"), *parts, F.lit("}"))
 
@@ -248,25 +263,29 @@ def nest_json(
             F.collect_list(F.struct(F.col(level).alias("k"), F.col("__json").alias("v")))
         )
         out = out.groupBy(*[F.col(k) for k in keys]).agg(
-            F.concat(F.lit("{"), _fold_entries(entries), F.lit("}")).alias("__json")
+            _json_map(entries).alias("__json")
         )
     return out.withColumnRenamed("__json", "tree_json")
 
 
 def _fold_entries(entries: Column) -> Column:
-    """Fold a sorted array<struct<k,v>> into ``"k1":v1,"k2":v2`` (v already
-    JSON)."""
-    return F.aggregate(
-        entries,
-        F.lit("").cast("string"),
-        lambda acc, e: F.concat(
-            acc,
-            F.when(acc == "", F.lit("")).otherwise(F.lit(",")),
-            F.lit('"'),
-            e["k"],
-            F.lit('":'),
-            e["v"],
-        ),
+    """Join a sorted array<struct<k,v>> into ``"k1":v1,"k2":v2`` (v already
+    JSON, k escaped by :func:`json_string`). An entry with a NULL key or
+    value is dropped on its own — DuckDB ``string_agg`` semantics, which
+    the oracles use — instead of nulling the whole body."""
+    keyed = F.filter(entries, lambda e: e["k"].isNotNull())
+    return F.array_join(
+        F.transform(keyed, lambda e: F.concat(json_string(e["k"]), F.lit(":"), e["v"])),
+        ",",
+    )
+
+
+def _json_map(entries: Column) -> Column:
+    """``{`` + :func:`_fold_entries` + ``}``; NULL when every key is NULL,
+    as ``'{' || string_agg(...) || '}'`` is."""
+    return F.when(
+        F.exists(entries, lambda e: e["k"].isNotNull()),
+        F.concat(F.lit("{"), _fold_entries(entries), F.lit("}")),
     )
 
 
@@ -282,9 +301,7 @@ def conf_json(conf: Column, conf_str: Column) -> Column:
     txt = F.array_sort(
         F.transform(
             F.map_entries(conf_str),
-            lambda e: F.struct(
-                e["key"].alias("k"), F.concat(F.lit('"'), e["value"], F.lit('"')).alias("v")
-            ),
+            lambda e: F.struct(e["key"].alias("k"), json_string(e["value"]).alias("v")),
         )
     )
     return _fold_entries(F.concat(num, txt))
@@ -329,7 +346,7 @@ def nest_trgx_json(
             children = (
                 cur.withColumn("__parent", F.slice(F.col("__path"), 1, depth))
                 .groupBy(*[F.col(c) for c in g], F.col("__parent"))
-                .agg(F.concat(F.lit("{"), _fold_entries(entries), F.lit("}")).alias("__ch"))
+                .agg(_json_map(entries).alias("__ch"))
                 .withColumnRenamed("__parent", "__path")
             )
             nodes = nodes.join(children, on=[*g, "__path"], how="left")
@@ -351,6 +368,4 @@ def nest_trgx_json(
             F.struct(F.element_at(F.col("__path"), 1).alias("k"), F.col("__json").alias("v"))
         )
     )
-    return cur.groupBy(*[F.col(c) for c in g]).agg(
-        F.concat(F.lit("{"), _fold_entries(roots), F.lit("}")).alias("tree_json")
-    )
+    return cur.groupBy(*[F.col(c) for c in g]).agg(_json_map(roots).alias("tree_json"))

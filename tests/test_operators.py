@@ -222,6 +222,72 @@ def test_kv_trgx_skeleton_attach(spark):
     assert out[("g2", ("[R]root", "[B]beta"))] == 20.0
 
 
+def test_nest_json_null_key_drops_only_its_entry(spark):
+    """A NULL level key drops its own entry, as DuckDB's ``string_agg``
+    (the oracles' form) does — not the whole group's tree; a group with no
+    non-NULL key folds to NULL, like ``'{' || string_agg(...) || '}'``."""
+    import duckdb
+
+    from etl_cascalog_spark.plans.trgx import metrics_json, nest_json
+
+    rows = [("g", "a", 1.0), ("g", None, 2.0), ("g", "b", 3.0), ("h", None, 4.0)]
+    df = spark.createDataFrame(rows, "g string, k string, v double")
+    leaf = metrics_json({"v": F.col("v").cast("decimal(18,2)")})
+    got = {r.g: r.tree_json for r in nest_json(df, ["g"], ["k"], leaf).collect()}
+    con = duckdb.connect()
+    want = dict(
+        con.execute(
+            """
+            SELECT g, '{' || string_agg('"' || k || '":{"v":' || CAST(CAST(v AS DECIMAL(18,2)) AS VARCHAR) || '}',
+                                        ',' ORDER BY k) || '}'
+            FROM (VALUES ('g', 'a', 1.0), ('g', NULL, 2.0), ('g', 'b', 3.0), ('h', NULL, 4.0)) t(g, k, v)
+            GROUP BY g
+            """
+        ).fetchall()
+    )
+    assert got == want
+    assert got == {"g": '{"a":{"v":1.00},"b":{"v":3.00}}', "h": None}
+
+
+def test_report_json_escapes_strings(spark):
+    """Every data string the report JSON embeds — json_object values,
+    nest_json / nest_trgx_json keys, metric_leaf string metrics, conf_json
+    string values — is escaped per RFC 8259: a value holding ``"``, ``\\``
+    and a newline round-trips through ``json.loads``. Plain and CJK values
+    keep their unescaped bytes."""
+    import json
+
+    from etl_cascalog_spark.plans.report import json_object, metric_leaf
+    from etl_cascalog_spark.plans.trgx import (
+        conf_json,
+        nest_json,
+        nest_trgx_json,
+        skeleton_df,
+    )
+
+    nasty = 'q"x\\y\nz'
+    df = spark.createDataFrame(
+        [("g", nasty, nasty, 1.0)], "g string, k string, s string, v double"
+    )
+    sel = df.select(json_object({"lvl": F.col("s"), "cjk": F.lit("全体")}).alias("j"))
+    assert json.loads(sel.first().j) == {"lvl": nasty, "cjk": "全体"}
+    assert df.select(json_object({"cjk": F.lit("全体 / 渠道")}).alias("j")).first().j == (
+        '{"cjk":"全体 / 渠道"}'
+    )
+
+    leaf = metric_leaf({"label": "s", "v": "v"}, string_metrics=("label",))
+    tree = nest_json(df, ["g"], ["k"], leaf).first().tree_json
+    assert json.loads(tree) == {nasty: {"label": nasty, "v": 1.0}}
+
+    paths = df.select("g", F.array(F.col("k")).alias("path"), F.lit("{}").alias("data_json"))
+    trgx = nest_trgx_json(paths, ["g"], 1).first().tree_json
+    assert json.loads(trgx) == {nasty: {"DATA": {}, "CHILDREN": {}}}
+
+    sdf = skeleton_df(spark, {"[A]a": {"DATA": {"w": 0.5, "abbr": nasty}}})
+    body = sdf.select(conf_json(F.col("conf"), F.col("conf_str")).alias("c")).first().c
+    assert json.loads("{" + body + "}") == {"w": 0.5, "abbr": nasty}
+
+
 def test_prefix_filter_keeps_exact_threshold_pair(spark):
     """A pair whose Jaccard equals the threshold exactly survives the
     prefix and length filters. At t=0.56 the double product 25 · 0.56 is

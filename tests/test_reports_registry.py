@@ -506,7 +506,10 @@ def test_trgx_shared_pivot_matches_separate_builds(spark):
 
 #: sha256 (first 16 hex) of each job's sorted sink rows on its
 #: ``_fixture_for`` fixture — any change to a builder, prepare() or the JSON
-#: assembly that moves a single output byte moves its digest
+#: assembly that moves a single output byte moves its digest. The three
+#: gt_score_deep_dive digests pin the escaped payload key (the key is itself
+#: a JSON object, m_cocacola_gt_score_deep_dive.clj:36-37, and must be
+#: escaped to keep the payload valid JSON)
 REGISTRY_DIGESTS = {
     "activation_brand": "1a87ba70b147908c",
     "activation_period_trend": "87a28703cd4ab9ca",
@@ -521,9 +524,9 @@ REGISTRY_DIGESTS = {
     "core_sku": "425e06d46d316682",
     "core_sku_bg_all": "75ed427971d24263",
     "core_sku_bottler_all": "ba77418a1343a6c3",
-    "gt_score_deep_dive": "3e705d5b111af923",
-    "gt_score_deep_dive_with_ko": "93a18d644764c353",
-    "gt_score_deep_dive_without_ko": "722df4154dfa656a",
+    "gt_score_deep_dive": "d065b324fd8cd9dd",
+    "gt_score_deep_dive_with_ko": "ef5555aa8b310b8d",
+    "gt_score_deep_dive_without_ko": "d75691fa27961030",
     "score_achievement_rate": "4ca1c131221f7078",
     "score_achievement_rate_bg_all": "6889b453bc44e2de",
     "score_bottler_ranking": "661e3b598fac2216",
@@ -575,3 +578,18 @@ def test_registry_output_digests(spark):
         )
         got[name] = hashlib.sha256(text.encode()).hexdigest()[:16]
     assert got == REGISTRY_DIGESTS
+
+
+def test_deep_dive_payload_is_valid_json(spark):
+    """The deep-dive payload's level-1 key is itself a JSON object (item +
+    attrs); nesting must escape it, so the whole payload parses and the key
+    round-trips to the item JSON."""
+    import json
+
+    rows = build_reference_report(
+        spark, "gt_score_deep_dive", _fixture_for(spark, "gt_score_deep_dive")
+    ).collect()
+    payload = json.loads(rows[0].dimension_metrics)
+    (item_key,) = payload
+    assert json.loads(item_key)["item"] == "item1"
+    assert payload[item_key]["2017-02-28"] == {"value": 60.0}
