@@ -55,7 +55,7 @@ def metric_leaf(
     mapping = metrics if isinstance(metrics, Mapping) else {m: m for m in metrics}
     cols: dict[str, Column] = {}
     for key, name in mapping.items():
-        c = name if isinstance(name, Column) else F.col(name)
+        c = F.col(name)
         if key in raw_json_metrics:
             cols[key] = c
         elif key in string_metrics:

@@ -273,9 +273,13 @@ def _fold_entries(entries: Column) -> Column:
     JSON, k escaped by :func:`json_string`). An entry with a NULL key or
     value is dropped on its own — DuckDB ``string_agg`` semantics, which
     the oracles use — instead of nulling the whole body."""
-    keyed = F.filter(entries, lambda e: e["k"].isNotNull())
     return F.array_join(
-        F.transform(keyed, lambda e: F.concat(json_string(e["k"]), F.lit(":"), e["v"])),
+        F.transform(
+            entries,
+            lambda e: F.when(
+                e["k"].isNotNull(), F.concat(json_string(e["k"]), F.lit(":"), e["v"])
+            ),
+        ),
         ",",
     )
 
@@ -284,7 +288,7 @@ def _json_map(entries: Column) -> Column:
     """``{`` + :func:`_fold_entries` + ``}``; NULL when every key is NULL,
     as ``'{' || string_agg(...) || '}'`` is."""
     return F.when(
-        F.exists(entries, lambda e: e["k"].isNotNull()),
+        F.array_max(entries["k"]).isNotNull(),
         F.concat(F.lit("{"), _fold_entries(entries), F.lit("}")),
     )
 
