@@ -2863,12 +2863,23 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_oracle_sql() -> str:
-    """DuckDB oracle for ann_lsh_topk: the hyperplanes are plain literals
-    (seeded, fixed), so the exact bucketing is reproducible in SQL."""
-    from etl_cascalog_spark.operators.similarity import hyperplanes
+from etl_cascalog_spark.operators.similarity import (  # noqa: E402
+    hyperplanes,
+    ivf_centroids,
+    pq_centroids,
+)
 
-    planes = hyperplanes(dim=64, n_planes=8, seed=7)
+#: the ANN catalog's seeded indexes, each built ONCE: a builder and its
+#: oracle SQL read the same object, so the plan and the oracle cannot
+#: bucket, assign or encode against different literals
+_LSH_PLANES = hyperplanes(dim=64, n_planes=8, seed=7)
+_IVF_CENTROIDS = ivf_centroids(dim=64, n_cells=8, seed=11)
+_PQ_CODEBOOK = pq_centroids(dim=64, m=8, k_c=4, seed=13)
+
+
+def _lsh_bucket_sql(planes: list[list[float]]) -> str:
+    """DuckDB text of similarity.lsh_bucket over ``embedding``: one
+    sign bit per literal hyperplane, the dot product folded in double."""
     terms = []
     for p_idx, plane in enumerate(planes):
         arr = "[" + ",".join(repr(x) for x in plane) + "]"
@@ -2877,7 +2888,61 @@ def _lsh_oracle_sql() -> str:
             "p -> CAST(p[1] AS DOUBLE) * p[2]))"
         )
         terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p_idx} ELSE 0 END)")
-    bucket = " + ".join(terms)
+    return " + ".join(terms)
+
+
+def _ivf_scores_sql(cents: list[list[float]]) -> str:
+    """DuckDB list of similarity.ivf_cell's per-centroid scores over
+    ``embedding``: dot(v, c) / ||c||, with ||c|| precomputed as a literal
+    and ||v|| dropped (argmax-invariant) — must mirror ivf_cell exactly."""
+    import math
+
+    cos_terms = []
+    for cent in cents:
+        arr = "[" + ",".join(repr(x) for x in cent) + "]"
+        d = (
+            f"list_sum(list_transform(list_zip(embedding, {arr}), "
+            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
+        )
+        nc = repr(math.sqrt(sum(x * x for x in cent)))
+        cos_terms.append(f"{d} / {nc}")
+    return "[" + ", ".join(cos_terms) + "]"
+
+
+def _pq_sql(
+    codebook: list[list[list[float]]],
+) -> tuple[list[str], list[str], str]:
+    """DuckDB text of similarity's PQ encoding over ``embedding``: per
+    subspace j the select items ``code_j`` (first-match argmin via
+    list_position(min)) and ``lut_j`` (the centroid distances), and the
+    ADC distance Σ_j lut_j[code_j]."""
+    d_sub = len(codebook[0][0])
+
+    def l2(sub_expr: str, cent: list[float]) -> str:
+        arr = "[" + ",".join(repr(x) for x in cent) + "]"
+        return (
+            f"list_sum(list_transform(list_zip({sub_expr}, {arr}), "
+            "p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2])))"
+        )
+
+    code_cols, lut_cols = [], []
+    for j, sub_book in enumerate(codebook):
+        sub = f"list_slice(embedding, {j * d_sub + 1}, {j * d_sub + d_sub})"
+        dists = "[" + ", ".join(l2(sub, c) for c in sub_book) + "]"
+        code_cols.append(
+            f"CAST(list_position({dists}, list_min({dists})) - 1 AS INT) AS code_{j}"
+        )
+        lut_cols.append(f"{dists} AS lut_{j}")
+    adc = " + ".join(
+        f"list_extract(lut_{j}, code_{j} + 1)" for j in range(len(codebook))
+    )
+    return code_cols, lut_cols, adc
+
+
+def _lsh_oracle_sql(planes: list[list[float]]) -> str:
+    """DuckDB oracle for ann_lsh_topk: the hyperplanes are plain literals
+    (seeded, fixed), so the exact bucketing is reproducible in SQL."""
+    bucket = _lsh_bucket_sql(planes)
     return f"""
     WITH b AS (
       SELECT vec_id, embedding, CAST({bucket} AS BIGINT) AS bucket FROM embeddings
@@ -2905,7 +2970,7 @@ def _lsh_oracle_sql() -> str:
 
 @register(
     "ann_lsh_topk",
-    oracle=_lsh_oracle_sql(),
+    oracle=_lsh_oracle_sql(_LSH_PLANES),
     doc="Hyperplane-LSH cosine top-k — the corpus-scale ANN path: bucket "
     "equi-join replaces the cross join (shuffle keyed on sign-bucket). "
     "The seeded hyperplanes are literals, so even the bucketing is "
@@ -2916,30 +2981,14 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return lsh_cosine_topk(queries, emb, k=5, n_planes=8, dim=64, seed=7)
+    return lsh_cosine_topk(queries, emb, _LSH_PLANES, k=5)
 
 
-def _ivf_oracle_sql() -> str:
+def _ivf_oracle_sql(cents: list[list[float]]) -> str:
     """DuckDB oracle for ann_ivf_topk: the centroids are seeded literals,
     so the cell assignment (argmax cosine, ties → lower cell) reproduces
     exactly; both engines fold the dot product left-to-right in double."""
-    from etl_cascalog_spark.operators.similarity import ivf_centroids
-
-    import math
-
-    cents = ivf_centroids(dim=64, n_cells=8, seed=11)
-    cos_terms = []
-    for cent in cents:
-        arr = "[" + ",".join(repr(x) for x in cent) + "]"
-        d = (
-            f"list_sum(list_transform(list_zip(embedding, {arr}), "
-            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        # ||c|| precomputed as a literal; ||vec|| dropped (argmax-invariant)
-        # — must mirror similarity.ivf_cell exactly
-        nc = repr(math.sqrt(sum(x * x for x in cent)))
-        cos_terms.append(f"{d} / {nc}")
-    cs = "[" + ", ".join(cos_terms) + "]"
+    cs = _ivf_scores_sql(cents)
     return f"""
     WITH cells AS (
       SELECT vec_id, embedding,
@@ -2969,7 +3018,7 @@ def _ivf_oracle_sql() -> str:
 
 @register(
     "ann_ivf_topk",
-    oracle=_ivf_oracle_sql(),
+    oracle=_ivf_oracle_sql(_IVF_CENTROIDS),
     doc="IVF (inverted-file) cosine top-k — the second ANN scale path: "
     "corpus assigned to nearest-centroid cells map-side, query scans only "
     "its cell (equi-join on cell id). Centroids are seeded literals here; "
@@ -2980,29 +3029,15 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return ivf_cosine_topk(queries, emb, k=5, n_cells=8, dim=64, seed=11)
+    return ivf_cosine_topk(queries, emb, _IVF_CENTROIDS, k=5)
 
 
-def _ivf_nprobe_oracle_sql(nprobe: int = 2) -> str:
+def _ivf_nprobe_oracle_sql(cents: list[list[float]], nprobe: int) -> str:
     """DuckDB oracle for ann_ivf_nprobe_topk: corpus cells by argmax as in
     _ivf_oracle_sql; the query side probes its ``nprobe`` best cells
     (score DESC, ties → lower cell — the same order ivf_cells_topn's
     struct sort produces)."""
-    import math
-
-    from etl_cascalog_spark.operators.similarity import ivf_centroids
-
-    cents = ivf_centroids(dim=64, n_cells=8, seed=11)
-    cos_terms = []
-    for cent in cents:
-        arr = "[" + ",".join(repr(x) for x in cent) + "]"
-        d = (
-            f"list_sum(list_transform(list_zip(embedding, {arr}), "
-            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        nc = repr(math.sqrt(sum(x * x for x in cent)))
-        cos_terms.append(f"{d} / {nc}")
-    cs = "[" + ", ".join(cos_terms) + "]"
+    cs = _ivf_scores_sql(cents)
     return f"""
     WITH cells AS (
       SELECT vec_id, embedding, {cs} AS scores FROM embeddings
@@ -3017,7 +3052,7 @@ def _ivf_nprobe_oracle_sql(nprobe: int = 2) -> str:
         SELECT query_id, qv, CAST(g.cell AS INT) AS cell,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY scores[g.cell + 1] DESC, g.cell) AS rn
-        FROM qs CROSS JOIN (SELECT unnest(range(8)) AS cell) g
+        FROM qs CROSS JOIN (SELECT unnest(range({len(cents)})) AS cell) g
       ) WHERE rn <= {nprobe}
     ), scored AS (
       SELECT query_id, neighbor_id,
@@ -3039,7 +3074,7 @@ def _ivf_nprobe_oracle_sql(nprobe: int = 2) -> str:
 
 @register(
     "ann_ivf_nprobe_topk",
-    oracle=_ivf_nprobe_oracle_sql(2),
+    oracle=_ivf_nprobe_oracle_sql(_IVF_CENTROIDS, 2),
     doc="IVF cosine top-k with nprobe=2 — the recall dial of the IVF scale "
     "path: each query row explodes to its 2 best cells (one sorted "
     "scored-struct array, each centroid score evaluated once), same cell "
@@ -3050,25 +3085,14 @@ def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return ivf_cosine_topk(queries, emb, k=5, n_cells=8, dim=64, seed=11, nprobe=2)
+    return ivf_cosine_topk(queries, emb, _IVF_CENTROIDS, k=5, nprobe=2)
 
 
-def _neardup_oracle_sql() -> str:
+def _neardup_oracle_sql(planes: list[list[float]]) -> str:
     """DuckDB oracle for embedding_neardup: planted scaled duplicates
     (×2.0 is exact in binary fp, cosine-invariant) + the same literal
     hyperplane bucketing as ann_lsh_topk."""
-    from etl_cascalog_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim=64, n_planes=8, seed=7)
-    terms = []
-    for p_idx, plane in enumerate(planes):
-        arr = "[" + ",".join(repr(x) for x in plane) + "]"
-        dot = (
-            f"list_sum(list_transform(list_zip(embedding, {arr}), "
-            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p_idx} ELSE 0 END)")
-    bucket = " + ".join(terms)
+    bucket = _lsh_bucket_sql(planes)
     return f"""
     WITH corpus AS (
       SELECT vec_id, embedding FROM embeddings
@@ -3095,7 +3119,7 @@ def _neardup_oracle_sql() -> str:
 
 @register(
     "embedding_neardup",
-    oracle=_neardup_oracle_sql(),
+    oracle=_neardup_oracle_sql(_LSH_PLANES),
     doc="Fifth dedup tier (beyond-reference): embedding-cosine near-dup "
     "pairs via hyperplane-LSH bucket join — semantic duplicates that share "
     "no n-grams. Planted ×2-scaled copies (cosine exactly 1) make recall "
@@ -3113,7 +3137,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
     )
     corpus = emb.unionByName(planted)
-    return embedding_neardup_pairs(corpus, threshold=0.99)
+    return embedding_neardup_pairs(corpus, _LSH_PLANES, threshold=0.99)
 
 
 @register(
@@ -5493,8 +5517,9 @@ def boilerplate_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per anchor the 3 highest-cosine DIFFERENT-label vectors — broadcast "
     "anchors, streamed corpus, per-row norms, anchor-partitioned window "
     "top-k. This dense path is the bounded-anchor tool (lazy-enforced "
-    "max_anchors); at corpus scale the anchor_filter here would cross the "
-    "bound and the query is the sibling hard_negative_mining_lsh (bucket "
+    "byte budget and 10k-anchor cap); at corpus scale the anchor_filter "
+    "here would cross the bound and the query is the sibling "
+    "hard_negative_mining_lsh (bucket "
     "equi-join, first-class oracled entry), acceptable because any "
     "sufficiently-hard negative works.",
 )
@@ -5510,23 +5535,12 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hard_neg_lsh_oracle_sql() -> str:
+def _hard_neg_lsh_oracle_sql(planes: list[list[float]]) -> str:
     """DuckDB oracle for hard_negative_mining_lsh: seeded hyperplanes are
     literals (same trick as _lsh_oracle_sql), so the bucket assignment,
     bucket join, different-label filter, and per-anchor top-3 all
     reproduce exactly."""
-    from etl_cascalog_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim=64, n_planes=8, seed=7)
-    terms = []
-    for p_idx, plane in enumerate(planes):
-        arr = "[" + ",".join(repr(x) for x in plane) + "]"
-        dot = (
-            f"list_sum(list_transform(list_zip(embedding, {arr}), "
-            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p_idx} ELSE 0 END)")
-    bucket = " + ".join(terms)
+    bucket = _lsh_bucket_sql(planes)
     return f"""
     WITH b AS (
       SELECT vec_id, embedding, label, CAST({bucket} AS BIGINT) AS bucket
@@ -5557,12 +5571,12 @@ def _hard_neg_lsh_oracle_sql() -> str:
 
 @register(
     "hard_negative_mining_lsh",
-    oracle=_hard_neg_lsh_oracle_sql(),
+    oracle=_hard_neg_lsh_oracle_sql(_LSH_PLANES),
     doc="Hard-negative mining on the CORPUS-SCALE path (VERDICT r7 #5): "
     "candidates come from the anchor's hyperplane bucket, so the plan is "
     "a bucket equi-join — no broadcast of an unbounded anchor set, no "
     "anchors x corpus cross. This is the variant the dense "
-    "hard_negative_mining raises toward past max_anchors; mining "
+    "hard_negative_mining's refusal names past its anchor bound; mining "
     "tolerates the bucket approximation by design (any sufficiently-hard "
     "different-label negative carries the contrastive gradient). Seeded "
     "hyperplanes are literals, so the oracle reproduces the bucketing.",
@@ -5572,7 +5586,7 @@ def hard_negative_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_table(spark, sf_dir, "embeddings")
     return hard_negatives_lsh(
-        emb, anchor_filter=(F.col("vec_id") % 25 == 0), k=3
+        emb, _LSH_PLANES, anchor_filter=(F.col("vec_id") % 25 == 0), k=3
     ).select(
         "anchor_id",
         "negative_id",
@@ -5650,22 +5664,11 @@ def recency_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "keep_rate")
 
 
-def _ann_recall_oracle_sql(k: int = 5) -> str:
+def _ann_recall_oracle_sql(planes: list[list[float]], k: int = 5) -> str:
     """DuckDB oracle for ann_recall_eval: brute-force top-k and LSH top-k
     (seeded-literal hyperplanes, as in _lsh_oracle_sql) built side by side,
     then per-query hit counting — the whole eval harness reproduces."""
-    from etl_cascalog_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim=64, n_planes=8, seed=7)
-    terms = []
-    for p_idx, plane in enumerate(planes):
-        arr = "[" + ",".join(repr(x) for x in plane) + "]"
-        dot = (
-            f"list_sum(list_transform(list_zip(embedding, {arr}), "
-            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p_idx} ELSE 0 END)")
-    bucket = " + ".join(terms)
+    bucket = _lsh_bucket_sql(planes)
     cos = (
         "list_sum(list_transform(list_zip(qv, cv), "
         "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
@@ -5704,7 +5707,7 @@ def _ann_recall_oracle_sql(k: int = 5) -> str:
 
 @register(
     "ann_recall_eval",
-    oracle=_ann_recall_oracle_sql(),
+    oracle=_ann_recall_oracle_sql(_LSH_PLANES),
     doc="ANN recall evaluation harness (beyond-reference): per query, "
     "recall@5 of the LSH bucketed path against the brute-force ground "
     "truth — the measurement that justifies shipping an approximate "
@@ -5719,7 +5722,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") % 50 == 0)
     k = 5
     exact = cosine_topk(queries, emb, k=k).select("query_id", "neighbor_id")
-    lsh = lsh_cosine_topk(queries, emb, k=k, n_planes=8, dim=64, seed=7).select(
+    lsh = lsh_cosine_topk(queries, emb, _LSH_PLANES, k=k).select(
         "query_id", F.col("neighbor_id").alias("l_neighbor")
     )
     # both sides are top-k results (|queries|·k rows) — broadcast the LSH
@@ -5739,22 +5742,11 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_multiprobe_oracle_sql(k: int = 5) -> str:
+def _lsh_multiprobe_oracle_sql(planes: list[list[float]], k: int = 5) -> str:
     """DuckDB oracle for ann_lsh_multiprobe_topk: literal hyperplanes, the
     query side unnested over its 1+n_planes single-bit-flip probe codes."""
-    from etl_cascalog_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim=64, n_planes=8, seed=7)
-    terms = []
-    for p_idx, plane in enumerate(planes):
-        arr = "[" + ",".join(repr(x) for x in plane) + "]"
-        d = (
-            f"list_sum(list_transform(list_zip(embedding, {arr}), "
-            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        terms.append(f"(CASE WHEN {d} > 0 THEN {1 << p_idx} ELSE 0 END)")
-    code = " + ".join(terms)
-    masks = "[" + ", ".join(str(m) for m in [0] + [1 << b for b in range(8)]) + "]"
+    code = _lsh_bucket_sql(planes)
+    masks = "[" + ", ".join(str(m) for m in [0] + [1 << b for b in range(len(planes))]) + "]"
     return f"""
     WITH b AS (
       SELECT vec_id, embedding, CAST({code} AS BIGINT) AS code FROM embeddings
@@ -5785,7 +5777,7 @@ def _lsh_multiprobe_oracle_sql(k: int = 5) -> str:
 
 @register(
     "ann_lsh_multiprobe_topk",
-    oracle=_lsh_multiprobe_oracle_sql(),
+    oracle=_lsh_multiprobe_oracle_sql(_LSH_PLANES),
     doc="Multi-probe LSH cosine top-k (beyond-reference): each query also "
     "probes every Hamming-1 (one-bit-flip) bucket — the standard recall "
     "dial that recovers neighbors split off by a single hyperplane "
@@ -5794,38 +5786,18 @@ def _lsh_multiprobe_oracle_sql(k: int = 5) -> str:
     "dominates single-probe on the same planes (contract-tested).",
 )
 def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_cascalog_spark.operators.similarity import lsh_multiprobe_topk
+    from etl_cascalog_spark.operators.similarity import lsh_cosine_topk
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return lsh_multiprobe_topk(queries, emb, k=5, n_planes=8, dim=64, seed=7)
+    return lsh_cosine_topk(queries, emb, _LSH_PLANES, k=5, multiprobe=True)
 
 
-def _pq_oracle_sql(k: int = 5, dim: int = 64, m: int = 8) -> str:
+def _pq_oracle_sql(codebook: list[list[list[float]]], k: int = 5) -> str:
     """DuckDB oracle for ann_pq_adc_topk: the seeded codebook is literal,
     so corpus codes (first-match argmin via list_position(min)) and the
     per-query ADC lookup tables reproduce exactly."""
-    from etl_cascalog_spark.operators.similarity import pq_centroids
-
-    codebook = pq_centroids()
-    d_sub = dim // m
-
-    def l2(sub_expr: str, cent: list[float]) -> str:
-        arr = "[" + ",".join(repr(x) for x in cent) + "]"
-        return (
-            f"list_sum(list_transform(list_zip({sub_expr}, {arr}), "
-            "p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2])))"
-        )
-
-    code_cols, lut_cols = [], []
-    for j in range(m):
-        sub = f"list_slice(embedding, {j * d_sub + 1}, {j * d_sub + d_sub})"
-        dists = "[" + ", ".join(l2(sub, c) for c in codebook[j]) + "]"
-        code_cols.append(
-            f"CAST(list_position({dists}, list_min({dists})) - 1 AS INT) AS code_{j}"
-        )
-        lut_cols.append(f"{dists} AS lut_{j}")
-    adc = " + ".join(f"list_extract(lut_{j}, code_{j} + 1)" for j in range(m))
+    code_cols, lut_cols, adc = _pq_sql(codebook)
     return f"""
     WITH c AS (
       SELECT vec_id AS neighbor_id, {", ".join(code_cols)} FROM embeddings
@@ -5847,7 +5819,7 @@ def _pq_oracle_sql(k: int = 5, dim: int = 64, m: int = 8) -> str:
 
 @register(
     "ann_pq_adc_topk",
-    oracle=_pq_oracle_sql(),
+    oracle=_pq_oracle_sql(_PQ_CODEBOOK),
     doc="Product-quantization ADC top-k (beyond-reference): corpus stored "
     "as 8 one-byte codes per vector (vs 256 B float32 — the memory tier "
     "that makes a 100 TB vector corpus servable), queries exact, "
@@ -5861,49 +5833,18 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return pq_adc_topk(queries, emb, k=5)
+    return pq_adc_topk(queries, emb, _PQ_CODEBOOK, k=5)
 
 
-def _ivfpq_oracle_sql(k: int = 5, dim: int = 64, m: int = 8) -> str:
+def _ivfpq_oracle_sql(
+    cents: list[list[float]], codebook: list[list[list[float]]], k: int = 5
+) -> str:
     """DuckDB oracle for ann_ivfpq_topk: IVF cell assignment (argmax over
     literal centroids, as _ivf_oracle_sql) + PQ codes/LUTs (as
     _pq_oracle_sql), joined on cell."""
-    import math
-
-    from etl_cascalog_spark.operators.similarity import ivf_centroids, pq_centroids
-
-    cents = ivf_centroids(dim=dim, n_cells=8, seed=11)
-    cos_terms = []
-    for cent in cents:
-        arr = "[" + ",".join(repr(x) for x in cent) + "]"
-        d = (
-            f"list_sum(list_transform(list_zip(embedding, {arr}), "
-            "p -> CAST(p[1] AS DOUBLE) * p[2]))"
-        )
-        nc = repr(math.sqrt(sum(x * x for x in cent)))
-        cos_terms.append(f"{d} / {nc}")
-    cs = "[" + ", ".join(cos_terms) + "]"
+    cs = _ivf_scores_sql(cents)
     cell = f"CAST(list_position({cs}, list_max({cs})) - 1 AS INT)"
-
-    codebook = pq_centroids()
-    d_sub = dim // m
-
-    def l2(sub_expr: str, cent: list[float]) -> str:
-        arr = "[" + ",".join(repr(x) for x in cent) + "]"
-        return (
-            f"list_sum(list_transform(list_zip({sub_expr}, {arr}), "
-            "p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2])))"
-        )
-
-    code_cols, lut_cols = [], []
-    for j in range(m):
-        sub = f"list_slice(embedding, {j * d_sub + 1}, {j * d_sub + d_sub})"
-        dists = "[" + ", ".join(l2(sub, c) for c in codebook[j]) + "]"
-        code_cols.append(
-            f"CAST(list_position({dists}, list_min({dists})) - 1 AS INT) AS code_{j}"
-        )
-        lut_cols.append(f"{dists} AS lut_{j}")
-    adc = " + ".join(f"list_extract(lut_{j}, code_{j} + 1)" for j in range(m))
+    code_cols, lut_cols, adc = _pq_sql(codebook)
     return f"""
     WITH c AS (
       SELECT vec_id AS neighbor_id, {cell} AS cell, {", ".join(code_cols)}
@@ -5926,7 +5867,7 @@ def _ivfpq_oracle_sql(k: int = 5, dim: int = 64, m: int = 8) -> str:
 
 @register(
     "ann_ivfpq_topk",
-    oracle=_ivfpq_oracle_sql(),
+    oracle=_ivfpq_oracle_sql(_IVF_CENTROIDS, _PQ_CODEBOOK),
     doc="IVF+PQ — the production ANN index shape (FAISS IVFPQ) composed "
     "from the oracle-checked halves: candidates pruned to the query's "
     "IVF cell (equi-join, ~corpus/n_cells per query), scored by PQ "
@@ -5939,7 +5880,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    return ivfpq_topk(queries, emb, k=5)
+    return ivfpq_topk(queries, emb, _IVF_CENTROIDS, _PQ_CODEBOOK, k=5)
 
 
 @register(

@@ -562,21 +562,20 @@ def simhash_pairs(
 
 def embedding_neardup_pairs(
     df: DataFrame,
+    planes: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.99,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the fifth dedup tier: semantic
     near-dups that share no n-grams (paraphrases, re-encodes) but sit at
     cosine ≥ ``threshold`` in embedding space.
 
-    Scale path: hyperplane-LSH bucketing (similarity.lsh_bucket) turns the
-    quadratic all-pairs scan into an equi-join keyed on the sign bucket —
-    one shuffle on bucket id, candidate volume ~ Σ bucket², tunable via
-    ``n_planes`` (more planes → smaller buckets → higher precision, lower
+    Scale path: hyperplane-LSH bucketing (similarity.lsh_bucket over
+    ``planes``, built by similarity.hyperplanes) turns the quadratic
+    all-pairs scan into an equi-join keyed on the sign bucket — one
+    shuffle on bucket id, candidate volume ~ Σ bucket², tunable via the
+    plane count (more planes → smaller buckets → higher precision, lower
     recall for borderline pairs). True duplicates (cosine ≈ 1) have
     identical sign patterns by construction, so recall at the dedup
     threshold is exact; at 100 TB add band-OR over several plane sets the
@@ -585,10 +584,9 @@ def embedding_neardup_pairs(
     Output: (id_a, id_b, cos_sim) with id_a < id_b, cos_sim ≥ threshold.
     """
     from etl_cascalog_spark.io import ensure_min_parallelism
-    from etl_cascalog_spark.operators.similarity import dot, hyperplanes, lsh_bucket, norm
+    from etl_cascalog_spark.operators.similarity import dot, lsh_bucket, norm
 
     df = ensure_min_parallelism(df, id_col)
-    planes = hyperplanes(dim, n_planes, seed)
     # per-row norms computed once per side, not per candidate pair (values
     # bit-identical to the per-pair cosine the oracle states)
     sides = df.select(

@@ -19,9 +19,17 @@ All arithmetic is double-cast BEFORE multiply/sum: float32 accumulation is
 neither portable nor stable across partitionings.
 
 Broadcast discipline: every scorer that broadcasts its query/anchor side
-enforces a BYTE-AWARE bound by default (64 MB estimated from the actual
-array widths — see :func:`_lazy_query_guard`); ``max_queries`` /
-``max_anchors`` are the explicit row-count overrides.
+enforces one BYTE-AWARE bound (64 MB estimated from the actual array
+widths — see :func:`_lazy_query_guard`); ``hard_negatives`` adds a 10k
+anchor row cap. There is no per-call override: a set over the budget is
+chunked, or goes to a corpus-vs-corpus operator.
+
+One body per scoring rule: the cosine scorers share :func:`_cosine_topk`,
+the PQ scorers :func:`_adc_topk`, and every scorer returns through the
+one per-query window :func:`_topk`. Indexes are DATA: the hyperplanes,
+IVF centroids and PQ codebook are built once by the caller
+(:func:`hyperplanes`, :func:`ivf_centroids` / :func:`train_ivf_centroids`,
+:func:`pq_centroids`) and passed in.
 
 Cache lifecycle (every operator in this module): builders ``.cache()`` the
 encoded/normed corpus because it feeds BOTH sides of a self-join or both
@@ -91,33 +99,23 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-#: the one remedy that actually avoids broadcasting the query side — the
-#: bucketed scorers carry the SAME max_queries bound (their query side is
-#: broadcast too), so pointing an over-cap caller at them would be a dead
-#: end; only the corpus-vs-corpus operators change the plan shape.
-_GUARD_ALT_TEMPLATE = (
+#: the remedy every refusal names. The bucketed scorers broadcast their
+#: query side under the SAME budget, so pointing an over-budget caller at
+#: them would be a dead end; only the corpus-vs-corpus operators change
+#: the plan shape.
+_GUARD_REMEDY = (
     " For corpus-vs-corpus similarity use embedding_neardup /"
     " hard_negatives_lsh (the corpus is never broadcast there), or chunk"
-    " the query set, or raise {override} explicitly if you know the set"
-    " fits."
+    " the query set."
 )
-def _GUARD_ALT_FOR(override_name: str) -> str:
-    """The remediation naming the CALLER'S actual override parameter —
-    telling a hard_negatives caller to 'raise max_queries' would send them
-    to a TypeError. An explicit ``{override}`` placeholder (ADVICE r11):
-    a wording edit to the template cannot silently revert refusals to a
-    parameter the function doesn't have, the way a ``str.replace`` on a
-    literal token could."""
-    return _GUARD_ALT_TEMPLATE.format(override=override_name)
 
-#: default byte budget for the broadcast query side. The r10 guard counted
-#: ROWS, which is byte-blind: 100k rows is ~51 MB at the engine's dim=64
-#: float64 defaults but 0.6–3.3 GB at production embedding dims (768–4096)
-#: — exactly the over-broadcast the guard exists to refuse. The default
-#: bound is therefore BYTES, estimated from the actual array widths of the
-#: broadcast projection (so a dim-1024 caller gets a proportionally smaller
-#: row allowance, automatically); ``max_queries`` stays as the explicit
-#: row-count override for callers that know their set fits.
+#: byte budget for the broadcast query side, read at call time. A row
+#: count is byte-blind: 100k rows is ~51 MB at the engine's dim=64
+#: float64 defaults but 0.6–3.3 GB at production embedding dims
+#: (768–4096) — exactly the over-broadcast the guard exists to refuse.
+#: The bound is therefore BYTES, estimated from the actual array widths
+#: of the broadcast projection, so a dim-1024 caller gets a
+#: proportionally smaller row allowance, automatically.
 QUERY_BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
 
 #: per-row fixed overhead charged on top of column payloads (UnsafeRow
@@ -126,10 +124,10 @@ QUERY_BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
 #: Fixed-width scalar FIELDS are priced separately at 8 B each.
 _ROW_OVERHEAD_BYTES = 48
 
-#: default row cap for hard_negatives' anchor side, applied IN ADDITION
-#: to the byte budget: the miner's hazard is the anchors × corpus
-#: quadratic scoring pass, which narrow anchor rows would otherwise buy
-#: unbounded under a green byte estimate (the pre-r11 default, kept).
+#: row cap for hard_negatives' anchor side, applied IN ADDITION to the
+#: byte budget: the miner's hazard is the anchors × corpus quadratic
+#: scoring pass, which narrow anchor rows would otherwise buy unbounded
+#: under a green byte estimate.
 DEFAULT_MAX_ANCHORS = 10_000
 
 
@@ -172,17 +170,16 @@ def _col_bytes(col: Column, dt: T.DataType) -> Column:
 def _est_row_bytes(df: DataFrame) -> Column:
     """Estimated broadcast bytes of ONE row of ``df``: actual measured
     payload for every variable-width column — numeric arrays (the dominant
-    ANN payload: query vectors, quantized codes, ADC lookup tables) at
-    element-width × ``size()``, strings/binary at ``octet_length``, string
-    and nested arrays by folding the same estimate over their elements —
-    plus a fixed header overhead and 8 B per fixed-width scalar field.
-    Reading the widths from the DATA (not a ``dim`` parameter) means the
-    bound tracks whatever the caller actually broadcasts, including
-    kilobyte string ids. Fixed-width fields are priced per FIELD (VERDICT
-    r11 #1): every current caller projects (id, array), where the 48-byte
-    row constant dominates, but a scorer projecting hundreds of numeric
-    feature columns must pay for each of them, not ride at 48 B/row.
-    Map/struct columns are REFUSED (fail closed) — they are
+    ANN payload: query vectors, quantized codes, ADC lookup tables, probe
+    keys) at element-width × ``size()``, strings/binary at
+    ``octet_length``, string and nested arrays by folding the same
+    estimate over their elements — plus a fixed header overhead and 8 B
+    per fixed-width scalar field. Reading the widths from the DATA (not a
+    ``dim`` parameter) means the bound tracks whatever the caller actually
+    broadcasts, including kilobyte string ids. Fixed-width fields are
+    priced per FIELD (VERDICT r11 #1): a scorer projecting hundreds of
+    numeric feature columns must pay for each of them, not ride at
+    48 B/row. Map/struct columns are REFUSED (fail closed) — they are
     variable-width and have no cheap exact estimate."""
     n_fixed = 0
     total: Column | None = None
@@ -196,14 +193,11 @@ def _est_row_bytes(df: DataFrame) -> Column:
             # fail CLOSED (review r12): a map/struct payload is
             # variable-width but would otherwise ride at the 8 B scalar
             # price — a KB-per-row metadata map would sail under the
-            # byte budget by ~100×. No guarded scorer projects these;
-            # a caller who does must narrow the projection (or pass the
-            # explicit row override, which skips the estimate).
+            # byte budget by ~100×. No guarded scorer projects these.
             raise ValueError(
                 f"broadcast byte estimate cannot price column "
                 f"'{field.name}' of type {field.dataType.simpleString()} — "
-                "project the broadcast side down to id/vector columns, "
-                "or pass an explicit row-count override"
+                "project the broadcast side down to id/vector columns"
             )
         else:
             n_fixed += 1
@@ -211,60 +205,32 @@ def _est_row_bytes(df: DataFrame) -> Column:
     return const if total is None else const + total
 
 
-def _lazy_count_guard(
-    df: DataFrame,
-    bound: int,
-    message: str,
-    guard_col: str = "_bound_guard",
-) -> DataFrame:
-    """Attach a LAZY row-count bound to ``df``: a broadcast 1-row
-    ``assert_true`` over a map-side count aggregate, cross-joined onto the
-    rows so the check rides the same action as the consumer query.
-
-    Why lazy: a ``limit().collect()`` probe (the `cosine_topk_blas` shape,
-    where the contract already IS a driver-side matrix) would run a Spark
-    job at DataFrame-construction time, which the plan-audit zero-eager-jobs
-    gate (R5) forbids for plan-only operators — the assert raises at action
-    time instead. ``df`` is cached because it feeds BOTH the guard's count
-    and the guarded consumer; without the cache the guard would be a second
-    full pass over the input subtree (the ADVICE r7 lesson fixed in
-    ``hard_negatives``, kept here).
-    """
-    df = df.cache()
-    guard = F.broadcast(
-        df.select(
-            F.assert_true(
-                F.count(F.lit(1)) <= F.lit(bound), F.lit(message)
-            ).alias(guard_col)
-        )
-        # always-true filter (assert_true yields NULL or throws) forces
-        # evaluation — a projected-then-dropped column would be pruned by
-        # Catalyst and the assert would never run
-        .where(F.isnull(F.col(guard_col)))
-    )
-    return df.crossJoin(guard).drop(guard_col)
-
-
 def _lazy_query_guard(
     q: DataFrame,
-    max_queries: int | None,
     op_name: str,
     fanout: int = 1,
-    byte_budget: int = QUERY_BROADCAST_BUDGET_BYTES,
     max_rows: int | None = None,
-    override_name: str = "max_queries",
+    byte_budget: int | None = None,
 ) -> DataFrame:
     """Bounded-query-side guard for the ANN scorers (the side they
-    broadcast).
+    broadcast): estimated broadcast bytes — Σ per-row payload ×
+    ``fanout`` — must stay under the byte budget
+    (``QUERY_BROADCAST_BUDGET_BYTES`` as the module holds it at call
+    time; ``byte_budget`` overrides it for tests). The width is measured
+    from the data via :func:`_est_row_bytes`, so a dim-1024 caller gets
+    ~1/16 the row allowance of a dim-64 caller instead of a green guard
+    in front of a 3 GB broadcast.
 
-    Default (``max_queries is None``) the bound is BYTE-AWARE (VERDICT
-    r10 #1): estimated broadcast bytes — Σ per-row array payload ×
-    ``fanout`` — must stay under ``byte_budget`` (64 MB default). The
-    width is measured from the data via :func:`_est_row_bytes`, so a
-    dim-1024 caller gets ~1/16 the row allowance of a dim-64 caller
-    instead of a green guard in front of a 3 GB broadcast. Passing
-    ``max_queries`` explicitly restores the plain row-count bound (the
-    caller's declaration that the set fits).
+    LAZY: a broadcast 1-row ``assert_true`` over a map-side aggregate,
+    cross-joined onto the rows, so the check rides the consumer query's
+    action and building the plan runs no job (the R5 zero-eager-jobs
+    gate; plan lint, fingerprinting and EXPLAIN stay job-free). ``q`` is
+    cached because it feeds BOTH the guard's aggregate and the broadcast;
+    without the cache the guard would be a second full pass over the
+    input subtree (ADVICE r7). The cache is also where the scorers put
+    their expensive per-row key folds (bucket / cell assignment), so
+    Catalyst's inferred ``isnotnull`` twin of a fold is cut at the
+    InMemoryRelation boundary instead of re-evaluating it (R4).
 
     Every scorer that broadcasts its query side carries this — the
     cross-join scorers because BroadcastNestedLoop has no other
@@ -279,39 +245,23 @@ def _lazy_query_guard(
     corpus streaming with full scan parallelism at every scale, and the
     guard keeps the forced side honest.
 
-    Callers with an exploding query side (ivf nprobe, lsh multi-probe)
-    must apply this BEFORE the explode and pass the probe multiplicity as
-    ``fanout`` so the byte bound prices the POST-explode broadcast while
-    an explicit ``max_queries`` still counts queries, not query × probe
-    rows.
-
-    ``max_rows`` adds a row-count bound ON TOP of the byte budget in the
-    default mode (both checked in the one guard aggregate) — for
-    operators like :func:`hard_negatives` whose hazard is the
-    anchors × corpus COMPUTE, not just broadcast bytes, so tiny-width
-    rows cannot buy an unbounded quadratic under a green byte estimate.
-    ``override_name`` names the caller's explicit-override parameter in
-    the refusal message (``max_anchors`` for the miner).
+    A query side that explodes after the guard (probe keys) passes the
+    probe count as ``fanout`` so the bound prices the POST-explode
+    broadcast. ``max_rows`` adds a row-count bound in the same aggregate
+    — for :func:`hard_negatives`, whose hazard is the anchors × corpus
+    COMPUTE, so tiny-width rows cannot buy an unbounded quadratic under a
+    green byte estimate.
     """
-    if max_queries is not None:
-        return _lazy_count_guard(
-            q,
-            max_queries,
-            f"{op_name}: broadcast side exceeds {override_name}="
-            f"{max_queries} -- this operator broadcasts that side by"
-            " design (eval/re-rank/anchor sets)." + _GUARD_ALT_FOR(
-                override_name
-            ),
-        )
+    budget = QUERY_BROADCAST_BUDGET_BYTES if byte_budget is None else byte_budget
     q = q.cache()
     n = F.count(F.lit(1))
     est = F.coalesce(F.sum(_est_row_bytes(q)), F.lit(0).cast("long")) * F.lit(
         int(fanout)
     )
-    ok = est <= F.lit(int(byte_budget))
+    ok = est <= F.lit(int(budget))
     msg = (
         f"{op_name}: broadcast side estimated at %d bytes"
-        f" (budget {int(byte_budget)})"
+        f" (budget {int(budget)})"
     )
     if max_rows is not None:
         ok = ok & (n <= F.lit(int(max_rows)))
@@ -319,7 +269,7 @@ def _lazy_query_guard(
     msg += (
         " -- this operator broadcasts that side by design"
         " (eval/re-rank/anchor sets), and the byte bound scales with the"
-        " measured vector width." + _GUARD_ALT_FOR(override_name)
+        " measured vector width." + _GUARD_REMEDY
     )
     fmt_args = [est] if max_rows is None else [est, n]
     guard_col = "_bound_guard"
@@ -328,9 +278,93 @@ def _lazy_query_guard(
             F.assert_true(ok, F.format_string(msg, *fmt_args)).alias(
                 guard_col
             )
-        ).where(F.isnull(F.col(guard_col)))
+        )
+        # always-true filter (assert_true yields NULL or throws) forces
+        # evaluation — a projected-then-dropped column would be pruned by
+        # Catalyst and the assert would never run
+        .where(F.isnull(F.col(guard_col)))
     )
     return q.crossJoin(guard).drop(guard_col)
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    order: Column,
+    out: Column,
+    key: str = "query_id",
+    nbr: str = "neighbor_id",
+) -> DataFrame:
+    """The per-``key`` top-k every scorer returns through: rank 1..k by
+    ``order`` (the score), ties to the lower ``nbr`` id, one window
+    partitioned on ``key`` (scales with the query count, no global
+    sort). Output (key, nbr, rank, out)."""
+    w = Window.partitionBy(key).orderBy(order, F.col(nbr))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(key, nbr, "rank", out)
+    )
+
+
+def _candidates(c: DataFrame, q: DataFrame, keyed: bool) -> DataFrame:
+    """Corpus ``c`` joined to the guarded query side ``q``, broadcast.
+    Unkeyed: a cross join. Keyed: ``c`` carries its candidate ``key`` and
+    ``q`` an array of probe ``keys``, exploded here — AFTER the guard,
+    whose ``fanout`` priced it — into one equi-join row per probe. A
+    candidate's single key matches at most one probe per query, so no
+    pair is scored twice."""
+    if not keyed:
+        return c.crossJoin(F.broadcast(q))
+    probes = q.select(
+        *[x for x in q.columns if x != "keys"], F.explode("keys").alias("key")
+    )
+    return c.join(F.broadcast(probes), on="key")
+
+
+def _cosine_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    op_name: str,
+    keys: tuple[Column, Column] | None = None,
+    fanout: int = 1,
+) -> DataFrame:
+    """The cosine scoring rule behind :func:`cosine_topk`,
+    :func:`lsh_cosine_topk` and :func:`ivf_cosine_topk`. ``keys`` is
+    None (score every corpus row) or a (corpus key, query probe-key
+    array) pair of expressions over ``vec_col``; ``fanout`` is the probe
+    count.
+
+    Norms are per-ROW facts, computed once per side, not per pair (the
+    inlined :func:`cosine` form re-folds both norms for every candidate
+    pair; measured 2.65s -> 1.8s at sf0.1). Values are bit-identical, so
+    an oracle stating cosine per pair still hash-matches. The corpus
+    projection is cached: it streams through the broadcast join, so its
+    norm would otherwise collapse into the per-pair select."""
+    from etl_cascalog_spark.io import ensure_min_parallelism
+
+    corpus = ensure_min_parallelism(corpus, id_col)
+    v = F.col(vec_col)
+    qcols = [F.col(id_col).alias("query_id"), v.alias("qv"), norm(v).alias("nq")]
+    ccols = [F.col(id_col).alias("neighbor_id"), v.alias("cv"), norm(v).alias("ncv")]
+    if keys is not None:
+        ccols.append(keys[0].alias("key"))
+        qcols.append(keys[1].alias("keys"))
+    q = _lazy_query_guard(queries.select(*qcols), op_name, fanout=fanout)
+    c = corpus.select(*ccols).cache()
+    scored = (
+        _candidates(c, q, keys is not None)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("ncv"))).alias("cos"),
+        )
+    )
+    return _topk(scored, k, F.col("cos").desc(), F.round("cos", 4).alias("cos_sim"))
 
 
 def cosine_topk(
@@ -339,57 +373,17 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    max_queries: int | None = None,
 ) -> DataFrame:
     """Brute-force cosine top-k: for every query vector the k nearest corpus
     vectors (self-match excluded). Output: (query_id, neighbor_id, rank,
-    cos_sim). The corpus side is the big side — the query side is broadcast,
-    and the bounded-query contract is ENFORCED lazily via
-    :func:`_lazy_query_guard`: byte-aware by default (estimated broadcast
-    bytes ≤ 64 MB, width measured from the data), ``max_queries`` as the
-    explicit row-count override — a corpus-sized or production-width query
-    frame would bypass ``autoBroadcastJoinThreshold`` through the mandatory
-    hint and is refused instead.
+    cos_sim). The corpus side is the big side — the query side is
+    broadcast, and the bounded-query contract is ENFORCED lazily by the
+    byte budget of :func:`_lazy_query_guard` (width measured from the
+    data): a corpus-sized or production-width query frame would bypass
+    ``autoBroadcastJoinThreshold`` through the mandatory hint and is
+    refused instead.
     """
-    from etl_cascalog_spark.io import ensure_min_parallelism
-
-    corpus = ensure_min_parallelism(corpus, id_col)
-    # norms are per-ROW facts — computed once per side, not per pair (the
-    # inlined cosine() form re-folds both norms for every candidate pair;
-    # measured 2.65s -> 1.8s at sf0.1). Values are bit-identical, so the
-    # oracle (which states cosine per pair) still hash-matches. The corpus
-    # side streams through the broadcast cross join, so its projection
-    # would collapse into the per-pair select — cache materializes it.
-    q = _lazy_query_guard(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            norm(F.col(vec_col)).alias("nq"),
-        ),
-        max_queries,
-        "cosine_topk",
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("ncv"),
-    )
-    c = c.cache()
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("ncv"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round(F.col("cos"), 4).alias("cos_sim"))
-    )
+    return _cosine_topk(queries, corpus, id_col, vec_col, k, "cosine_topk")
 
 
 def cosine_topk_blas(
@@ -398,7 +392,6 @@ def cosine_topk_blas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    max_queries: int | None = None,
 ) -> DataFrame:
     """Vectorized exact cosine top-k — the PRODUCTION scorer (closes the
     interpreted-fold floor of :func:`cosine_topk`, which stays as the
@@ -413,25 +406,19 @@ def cosine_topk_blas(
     batches × |Q| × k candidate rows, never the full score matrix; a
     final window merge picks the global top-k. ~10-100× the fold's
     throughput (Arrow batch + BLAS vs per-element Catalyst interpretation).
+    An empty query set returns the empty top-k without a corpus pass.
 
     Determinism note: float64 matmul sums in a different order than the
     sequential fold, so scores can differ by ~1e-15 — ranks only flip on
     exact near-ties, which is why the catalog checks this operator on
     (query_id, neighbor_id, rank) with the exact-SQL oracle.
 
-    The bounded-query contract is ENFORCED, not just documented, and —
-    like :func:`_lazy_query_guard` — the default bound is BYTE-AWARE
-    (VERDICT r10 #1): a cheap 1-row map-side aggregate prices the set as
-    rows × measured vector width BEFORE anything is materialized on the
-    driver, refusing past ``QUERY_BROADCAST_BUDGET_BYTES`` (64 MB) — so a
-    dim-4096 caller cannot collect gigabytes under a green row count.
-    Passing ``max_queries`` explicitly restores the r9 single-job path:
-    the guard fuses into the one mandatory collect (``limit(max_queries
-    + 1)``, refuse on overflow) with no separate counting pass. For
-    unbounded query sides use :func:`lsh_cosine_topk` /
-    :func:`lsh_multiprobe_topk` / :func:`ivf_cosine_topk`, whose
-    candidate generation is a bucket equi-join with no driver
-    materialization.
+    The bounded-query contract is ENFORCED with the same byte budget as
+    :func:`_lazy_query_guard` (``QUERY_BROADCAST_BUDGET_BYTES``, read at
+    call time), but eagerly: a cheap 1-row map-side aggregate prices the
+    set as rows × measured vector width BEFORE anything is materialized
+    on the driver, so a dim-4096 caller cannot collect gigabytes under a
+    green row count.
 
     Output: (query_id, neighbor_id, rank, cos_sim).
     """
@@ -441,60 +428,38 @@ def cosine_topk_blas(
     from etl_cascalog_spark.io import ensure_min_parallelism
 
     corpus = ensure_min_parallelism(corpus, id_col)
-    q_proj = queries.select(F.col(id_col), F.col(vec_col))
-    if max_queries is None:
-        # byte-aware default: one 1-row aggregate (map-side combined)
-        # prices the collect from the ACTUAL widths before the driver
-        # materializes anything. The stats pass and the collect are TWO
-        # actions over the same plan (ADVICE r11) — cache q_proj across
-        # the pair (released below) so an expensive upstream query isn't
-        # recomputed.
-        q_proj = q_proj.cache()
-        try:
-            stats = q_proj.select(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(_est_row_bytes(q_proj)), F.lit(0).cast("long")
-                ).alias("est_bytes"),
-            ).collect()[0]
-            if stats["est_bytes"] > QUERY_BROADCAST_BUDGET_BYTES:
-                raise ValueError(
-                    f"cosine_topk_blas: query side estimated at "
-                    f"{stats['est_bytes']} driver-collect bytes (budget "
-                    f"{QUERY_BROADCAST_BUDGET_BYTES}) — this scorer collects "
-                    "the query set to the driver by design (eval/re-rank "
-                    "sets), and the byte bound scales with the measured "
-                    "vector width. For an unbounded query side use "
-                    "lsh_cosine_topk / lsh_multiprobe_topk / ivf_cosine_topk "
-                    "(bucketed candidate joins, nothing driver-side), or pass "
-                    "max_queries explicitly if you know the set fits."
-                )
-            q_rows = q_proj.collect()
-        finally:
-            # both rows and bytes now live on the driver (or the guard
-            # refused) — the executor-side copy is dead weight either way
-            q_proj.unpersist()
-    else:
-        # explicit override: the r9 fused single-job path — collect
-        # max_queries+1 rows and refuse on overflow BEFORE materializing
-        # anything bigger
-        q_rows = q_proj.limit(max_queries + 1).collect()
-        if len(q_rows) > max_queries:
-            raise ValueError(
-                f"cosine_topk_blas: query side exceeds max_queries={max_queries} "
-                "— this scorer collects the query set to the driver by design "
-                "(eval/re-rank sets). For an unbounded query side use "
-                "lsh_cosine_topk / lsh_multiprobe_topk / ivf_cosine_topk "
-                "(bucketed candidate joins, nothing driver-side), or raise "
-                "max_queries explicitly if you know the set fits."
+    # the stats pass and the collect are TWO actions over the same plan
+    # (ADVICE r11) — cache the projection across the pair so an expensive
+    # upstream query isn't recomputed
+    q_proj = queries.select(F.col(id_col), F.col(vec_col)).cache()
+    try:
+        est_bytes = q_proj.select(
+            F.coalesce(
+                F.sum(_est_row_bytes(q_proj)), F.lit(0).cast("long")
             )
-    qids = [r[0] for r in q_rows]
-    Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    qid_arr = np.asarray(qids)
+        ).collect()[0][0]
+        if est_bytes > QUERY_BROADCAST_BUDGET_BYTES:
+            raise ValueError(
+                f"cosine_topk_blas: query side estimated at {est_bytes}"
+                f" driver-collect bytes (budget {QUERY_BROADCAST_BUDGET_BYTES})"
+                " -- this scorer collects the query set to the driver by"
+                " design (eval/re-rank sets), and the byte bound scales with"
+                " the measured vector width." + _GUARD_REMEDY
+            )
+        q_rows = q_proj.collect()
+    finally:
+        # both rows and bytes now live on the driver (or the guard
+        # refused) — the executor-side copy is dead weight either way
+        q_proj.unpersist()
 
     id_dtype = dict(corpus.dtypes)[id_col]
     out_schema = f"query_id {id_dtype}, neighbor_id {id_dtype}, cos double"
+    top = F.col("cos").desc(), F.round("cos", 4).alias("cos_sim")
+    if not q_rows:
+        return _topk(corpus.sparkSession.createDataFrame([], out_schema), k, *top)
+    qid_arr = np.asarray([r[0] for r in q_rows])
+    Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
+    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
 
     def score(batches):
         for pdf in batches:
@@ -517,13 +482,7 @@ def cosine_topk_blas(
                 {"query_id": out_q, "neighbor_id": out_n, "cos": out_s}
             )
 
-    candidates = corpus.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round(F.col("cos"), 4).alias("cos_sim"))
-    )
+    return _topk(corpus.mapInPandas(score, out_schema), k, *top)
 
 
 def hyperplanes(dim: int, n_planes: int = 8, seed: int = 7) -> list[list[float]]:
@@ -573,62 +532,58 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     )
 
 
+def _lsh_probes(vec: Column, planes: list[list[float]], multiprobe: bool) -> Column:
+    """The buckets a query probes, as an array: its own
+    :func:`lsh_bucket`, plus — with ``multiprobe`` — every Hamming-1
+    neighbor bucket (one sign bit flipped; 1 + n_planes probes). The
+    bucket is folded ONCE and repeated before the XOR masks apply."""
+    masks = [0] + ([1 << b for b in range(len(planes))] if multiprobe else [])
+    return F.zip_with(
+        F.array_repeat(lsh_bucket(vec, planes), len(masks)),
+        F.expr("array(" + ", ".join(f"{m}L" for m in masks) + ")"),
+        lambda code, m: code.bitwiseXOR(m),
+    )
+
+
 def lsh_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
+    planes: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-    max_queries: int | None = None,
+    multiprobe: bool = False,
 ) -> DataFrame:
-    """LSH-bucketed cosine top-k: score only candidates in the query's
-    hyperplane bucket — the equi-join replaces the cross join, so the
-    CORPUS side streams with full scan parallelism and only same-bucket
-    pairs are scored. The query side is broadcast by contract
-    (eval/re-rank sets) and the bound is ENFORCED by the lazy guard —
-    byte-aware by default, ``max_queries`` as the explicit row override —
-    because a bare un-hinted join measurably flips the build side onto
-    the cached corpus and serializes the probe (see
-    :func:`_lazy_query_guard`); corpus-vs-corpus similarity belongs to
-    ``embedding_neardup`` / ``hard_negatives_lsh``."""
-    from etl_cascalog_spark.io import ensure_min_parallelism
+    """LSH-bucketed cosine top-k over the hyperplanes ``planes`` (see
+    :func:`hyperplanes`): score only candidates in the query's probed
+    buckets — the equi-join replaces the cross join, so the CORPUS side
+    is hashed once and streams with full scan parallelism, and only
+    same-bucket pairs are scored.
 
-    corpus = ensure_min_parallelism(corpus, id_col)
-    planes = hyperplanes(dim, n_planes, seed)
-    q = _lazy_query_guard(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            norm(F.col(vec_col)).alias("nq"),
-            lsh_bucket(F.col(vec_col), planes).alias("bucket"),
-        ),
-        max_queries,
+    ``multiprobe`` also probes every Hamming-1 neighbor bucket
+    (:func:`_lsh_probes`) — the standard recall dial for hyperplane LSH: a
+    near neighbor on the far side of ONE hyperplane is the dominant miss
+    mode, and probing the flipped bucket recovers it without adding
+    planes or reshuffling the corpus. Recall is weakly ≥ single-probe on
+    the same planes.
+
+    The query side (× probes after the explode) is broadcast by contract
+    (eval/re-rank sets), and the bound is ENFORCED by the lazy byte
+    guard, priced at the probe fanout — because a bare un-hinted join
+    measurably flips the build side onto the cached corpus and serializes
+    the probe (see :func:`_lazy_query_guard`); corpus-vs-corpus
+    similarity belongs to ``embedding_neardup`` / ``hard_negatives_lsh``.
+    Output: (query_id, neighbor_id, rank, cos_sim)."""
+    v = F.col(vec_col)
+    return _cosine_topk(
+        queries,
+        corpus,
+        id_col,
+        vec_col,
+        k,
         "lsh_cosine_topk",
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("ncv"),
-        lsh_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    c = c.cache()  # per-row norms: once per side, not per candidate pair
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("ncv"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round(F.col("cos"), 4).alias("cos_sim"))
+        keys=(lsh_bucket(v, planes), _lsh_probes(v, planes, multiprobe)),
+        fanout=1 + len(planes) if multiprobe else 1,
     )
 
 
@@ -702,90 +657,53 @@ def ivf_cells_topn(vec: Column, centroids: list[list[float]], nprobe: int) -> Co
     return F.transform(top, lambda e: (-e["nc"]).cast("int"))
 
 
+def _ivf_keys(
+    vec: Column, centroids: list[list[float]], nprobe: int
+) -> tuple[Column, Column]:
+    """(corpus cell, query probe cells) for the keyed scorers."""
+    return ivf_cell(vec, centroids), ivf_cells_topn(vec, centroids, nprobe)
+
+
 def ivf_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
+    centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_cells: int = 8,
-    dim: int = 64,
-    seed: int = 11,
     nprobe: int = 1,
-    max_queries: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) cosine top-k — the second ANN scale path next to
     :func:`lsh_cosine_topk`: corpus vectors are assigned to their nearest
-    centroid cell once (map-side); each query scans only its probed cells.
+    cell of ``centroids`` (:func:`ivf_centroids` or
+    :func:`train_ivf_centroids`) once, map-side; each query scans only
+    its ``nprobe`` nearest cells (:func:`ivf_cells_topn`, whose first
+    cell is :func:`ivf_cell`).
 
     The cell equi-join replaces the cross join — candidate volume
     Σ|cell|·|queries probing it| instead of |Q|·|C|. The query side is
-    broadcast (MANDATORY hint + lazy ``max_queries`` guard: a bare join
-    here measurably flips the build side onto the cached corpus and
-    serializes the probe on the query scan's file splits — the 6.9 s →
-    86 s sf3 lesson in :func:`_lazy_query_guard`); the corpus streams
-    with full scan parallelism, which also matters because ``n_cells``
-    is far below the task count, so a cell-keyed shuffle could never use
-    the cluster. Recall is tuned by ``n_cells`` (fewer, larger cells →
-    higher recall & cost) and ``nprobe`` (probe the q nearest cells: the
+    broadcast (MANDATORY hint + lazy byte guard priced at ``nprobe``: a
+    bare join here measurably flips the build side onto the cached corpus
+    and serializes the probe on the query scan's file splits — the
+    6.9 s → 86 s sf3 lesson in :func:`_lazy_query_guard`); the corpus
+    streams with full scan parallelism, which also matters because the
+    cell count is far below the task count, so a cell-keyed shuffle
+    could never use the cluster. Recall is tuned by the cell count
+    (fewer, larger cells → higher recall & cost) and ``nprobe`` (the
     query row explodes per probed cell — same join, ×nprobe candidates,
-    recall → exact as nprobe → n_cells).
+    recall → exact as nprobe → the cell count).
     """
-    from etl_cascalog_spark.io import ensure_min_parallelism
-
-    corpus = ensure_min_parallelism(corpus, id_col)
-    cents = ivf_centroids(dim, n_cells, seed)
-    # guard BEFORE the nprobe explode so an explicit max_queries counts
-    # queries, not query x probe rows (the byte bound prices the
-    # post-explode broadcast via fanout=nprobe); the cell assignment (the
-    # expensive argmin fold) sits INSIDE the guarded projection so the
-    # guard's cache evaluates it once and cuts Catalyst's inferred
-    # isnotnull(assignment) duplicate (the R4 mega-filter this query used
-    # to allowlist)
-    if nprobe <= 1:
-        q = _lazy_query_guard(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-                norm(F.col(vec_col)).alias("nq"),
-                ivf_cell(F.col(vec_col), cents).alias("cell"),
-            ),
-            max_queries,
-            "ivf_cosine_topk",
-        )
-    else:
-        q = _lazy_query_guard(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-                norm(F.col(vec_col)).alias("nq"),
-                ivf_cells_topn(F.col(vec_col), cents, nprobe).alias("cells"),
-            ),
-            max_queries,
-            "ivf_cosine_topk",
-            fanout=nprobe,
-        ).select("query_id", "qv", "nq", F.explode("cells").alias("cell"))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("ncv"),
-        ivf_cell(F.col(vec_col), cents).alias("cell"),
-    )
-    c = c.cache()  # per-row norms: once per side, not per candidate pair
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("ncv"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round(F.col("cos"), 4).alias("cos_sim"))
+    if nprobe < 1:
+        raise ValueError(f"ivf_cosine_topk: nprobe must be >= 1, got {nprobe}")
+    return _cosine_topk(
+        queries,
+        corpus,
+        id_col,
+        vec_col,
+        k,
+        "ivf_cosine_topk",
+        keys=_ivf_keys(F.col(vec_col), centroids, nprobe),
+        fanout=nprobe,
     )
 
 
@@ -799,9 +717,10 @@ def train_ivf_centroids(
 ) -> list[list[float]]:
     """Fit IVF coarse-quantizer centroids with distributed k-means
     (Lloyd's over the cluster; k-means|| init) and return them as the
-    plain-literal centroid list that :func:`ivf_cell` /
-    :func:`ivf_cells_topn` consume — training is a separate offline step
-    exactly as in FAISS-style IVF; query plans never change shape.
+    plain-literal centroid list that :func:`ivf_cell`,
+    :func:`ivf_cosine_topk` and :func:`ivfpq_topk` consume — training is a
+    separate offline step exactly as in FAISS-style IVF; query plans never
+    change shape.
 
     100 TB posture: training runs on a SAMPLE (``sample_fraction``; k-means
     needs ~10^3 points per cell, not the corpus), the model is
@@ -910,7 +829,6 @@ def quantized_dot_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    max_queries: int | None = None,
 ) -> DataFrame:
     """Int8-quantized brute-force top-k by integer dot product — the
     SQ8 re-rank shape (FAISS-style scalar quantization): both sides are
@@ -919,8 +837,8 @@ def quantized_dot_topk(
     float tie ambiguity at all. Output: (query_id, neighbor_id, rank, qdot).
 
     100 TB posture: quantization is map-side; the query side is broadcast
-    (queries ≪ corpus — ENFORCED lazily via :func:`_lazy_query_guard`'s
-    ``max_queries`` assert); scoring streams the corpus through one
+    (queries ≪ corpus — ENFORCED lazily by :func:`_lazy_query_guard`'s
+    byte budget); scoring streams the corpus through one
     BroadcastNestedLoop pass with a per-query top-k window on uniform
     query_id keys. Integer dot products also SIMD-vectorize ~4× denser
     than floats when this pattern is lowered to a columnar engine.
@@ -932,7 +850,6 @@ def quantized_dot_topk(
         queries.select(
             F.col(id_col).alias("query_id"), quantize_int8(F.col(vec_col)).alias("qq")
         ),
-        max_queries,
         "quantized_dot_topk",
     )
     c = corpus.select(
@@ -950,14 +867,7 @@ def quantized_dot_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", qdot.alias("qdot"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "qdot")
-    )
+    return _topk(scored, k, F.col("qdot").desc(), F.col("qdot"))
 
 
 def hard_negatives(
@@ -967,7 +877,6 @@ def hard_negatives(
     label_col: str = "label",
     k: int = 3,
     anchor_filter: Column | None = None,
-    max_anchors: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor, the
     ``k`` highest-cosine vectors with a DIFFERENT label — the near-boundary
@@ -979,65 +888,33 @@ def hard_negatives(
     Same plan discipline as :func:`cosine_topk`: anchors broadcast, corpus
     streams, per-row norms precomputed, partitioned window top-k (keyed on
     anchor — scales with anchor count, no global sort). The anchor side is
-    BOUNDED and the bound is ENFORCED (same posture as
-    :func:`cosine_topk_blas`): this operator broadcasts anchors and scores
-    anchors × corpus, so an unfiltered call on a large table would be an
-    unguarded O(N²) cross-join plus an over-broadcast — the DEFAULT bound
-    is dual: the 64 MB byte budget (wide anchors cannot hide behind a row
-    count) AND a ``DEFAULT_MAX_ANCHORS`` = 10k row cap (the quadratic
+    BOUNDED and the bound is ENFORCED: this operator broadcasts anchors
+    and scores anchors × corpus, so an unfiltered call on a large table
+    would be an unguarded O(N²) cross-join plus an over-broadcast. The
+    bound is dual: the byte budget (wide anchors cannot hide behind a row
+    count) AND the ``DEFAULT_MAX_ANCHORS`` = 10k row cap (the quadratic
     scoring hazard is row-count-, not byte-, shaped, so narrow anchors
-    cannot hide behind a byte estimate); passing ``max_anchors``
-    explicitly replaces both with the caller's row bound. The bound is
-    enforced LAZILY (a broadcast 1-row ``assert_true`` over a map-side
-    aggregate, raising at action time), so plan-only consumers —
-    plan lint, fingerprinting, EXPLAIN — never execute a job, and the
-    anchors frame is cached so the guard's count is not a second full
-    scan (ADVICE r7). At corpus scale use :func:`hard_negatives_lsh`
-    (bucketed candidate join, no broadcast of the anchor set), trading
-    recall of the single hardest negative for a bucket-local candidate
-    set; hard-negative mining tolerates that approximation by design
-    (any sufficiently-hard negative works).
+    cannot hide behind a byte estimate). It is enforced LAZILY by
+    :func:`_lazy_query_guard`, so plan-only consumers — plan lint,
+    fingerprinting, EXPLAIN — never execute a job. At corpus scale use
+    :func:`hard_negatives_lsh` (bucketed candidate join, no broadcast of
+    the anchor set), trading recall of the single hardest negative for a
+    bucket-local candidate set; hard-negative mining tolerates that
+    approximation by design (any sufficiently-hard negative works).
     """
     from etl_cascalog_spark.io import ensure_min_parallelism
 
     anchors = emb if anchor_filter is None else emb.where(anchor_filter)
-    # lazy anchor guard via the shared primitives: byte-aware by default
-    # (same r10-verdict fix as the scorers — 10k anchors at dim 4096 is a
-    # 330 MB broadcast under a green row count), max_anchors as the
-    # explicit row override. The projection is cached inside the guard (it
-    # feeds the guard's aggregate AND the broadcast), so the guard is
-    # never a second full scan (ADVICE r7); lifecycle: scoped_storage at
-    # the call site
-    a_proj = anchors.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(vec_col).alias("av"),
-        norm(F.col(vec_col)).alias("na"),
-        F.col(label_col).alias("a_label"),
+    a = _lazy_query_guard(
+        anchors.select(
+            F.col(id_col).alias("anchor_id"),
+            F.col(vec_col).alias("av"),
+            norm(F.col(vec_col)).alias("na"),
+            F.col(label_col).alias("a_label"),
+        ),
+        "hard_negatives (anchor side)",
+        max_rows=DEFAULT_MAX_ANCHORS,
     )
-    if max_anchors is not None:
-        a_guarded = _lazy_count_guard(
-            a_proj,
-            max_anchors,
-            f"hard_negatives: anchor side exceeds max_anchors={max_anchors}"
-            " -- this miner broadcasts the anchors and scores anchors x"
-            " corpus by design (curated anchor sets). For corpus-scale"
-            " mining use hard_negatives_lsh (bucketed candidate join,"
-            " nothing broadcast-unbounded), pass an anchor_filter, or"
-            " raise max_anchors explicitly if you know the set fits.",
-        )
-    else:
-        # dual default bound: the 64 MB byte budget (wide anchors cannot
-        # slip under a row count) AND the historical 10k row cap (the
-        # hazard here is the anchors x corpus COMPUTE, which tiny-width
-        # rows would otherwise buy unbounded under a green byte estimate)
-        a_guarded = _lazy_query_guard(
-            a_proj,
-            None,
-            "hard_negatives (anchor side)",
-            max_rows=DEFAULT_MAX_ANCHORS,
-            override_name="max_anchors",
-        )
-    a = F.broadcast(a_guarded)
     c = ensure_min_parallelism(emb, id_col).select(
         F.col(id_col).alias("negative_id"),
         F.col(vec_col).alias("cv"),
@@ -1046,7 +923,7 @@ def hard_negatives(
     )
     c = c.cache()
     scored = (
-        c.crossJoin(a)
+        c.crossJoin(F.broadcast(a))
         .where(F.col("a_label") != F.col("c_label"))
         .select(
             "anchor_id",
@@ -1054,111 +931,13 @@ def hard_negatives(
             (dot(F.col("av"), F.col("cv")) / (F.col("na") * F.col("nc"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cos").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "anchor_id",
-            "negative_id",
-            "rank",
-            F.round(F.col("cos"), 4).alias("cos_sim"),
-        )
-    )
-
-
-def lsh_multiprobe_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-    n_probe_bits: int | None = None,
-    max_queries: int | None = None,
-) -> DataFrame:
-    """Multi-probe LSH cosine top-k: each query probes its own bucket PLUS
-    every Hamming-1 neighbor bucket (one sign bit flipped) — the standard
-    recall dial for hyperplane LSH (a near neighbor on the far side of ONE
-    hyperplane is the dominant miss mode; probing the flipped bucket
-    recovers it without adding planes or tables).
-
-    ``n_probe_bits`` limits which bits may flip (default: all
-    ``n_planes``), giving 1+n_probe_bits probes per query. The query side
-    explodes (queries × probes rows — still eval-set sized, enforced by
-    the lazy ``max_queries`` guard) and is broadcast; the corpus side is
-    hashed ONCE, never duplicated and never broadcast, so the extra
-    recall costs only broadcast fan-in, not a corpus reshuffle (the
-    mandatory hint direction is a measured lesson — see
-    :func:`_lazy_query_guard`). Candidates hit
-    via several probes are deduplicated by construction (a candidate's
-    single bucket matches exactly one probed code per query).
-
-    Output: (query_id, neighbor_id, rank, cos_sim) — same contract as
-    :func:`lsh_cosine_topk`; recall is strictly ≥ single-probe on the
-    same planes.
-    """
-    from etl_cascalog_spark.io import ensure_min_parallelism
-
-    corpus = ensure_min_parallelism(corpus, id_col)
-    planes = hyperplanes(dim, n_planes, seed)
-    bits = n_planes if n_probe_bits is None else min(n_probe_bits, n_planes)
-    base = lsh_bucket(F.col(vec_col), planes)
-    probes = F.array(
-        F.lit(0), *[F.lit(1 << b) for b in range(bits)]
-    )  # XOR masks: self + each single-bit flip
-    # guard BEFORE the probe explode so an explicit max_queries counts
-    # queries, not query x probe rows; the byte bound prices the
-    # post-explode broadcast via fanout=1+bits
-    q = _lazy_query_guard(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            norm(F.col(vec_col)).alias("nq"),
-            base.alias("code"),
-        ),
-        max_queries,
-        "lsh_multiprobe_topk",
-        fanout=1 + bits,
-    ).select(
-        "query_id",
-        "qv",
-        "nq",
-        F.explode(probes).alias("__mask"),
-        F.col("code"),
-    ).select(
-        "query_id",
-        "qv",
-        "nq",
-        F.col("code").bitwiseXOR(F.col("__mask")).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("ncv"),
-        base.alias("bucket"),
-    )
-    c = c.cache()
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("ncv"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round(F.col("cos"), 4).alias("cos_sim")
-        )
+    return _topk(
+        scored,
+        k,
+        F.col("cos").desc(),
+        F.round("cos", 4).alias("cos_sim"),
+        key="anchor_id",
+        nbr="negative_id",
     )
 
 
@@ -1210,194 +989,142 @@ def pq_code(vec: Column, codebook: list[list[list[float]]], j: int) -> Column:
     return F.array_min(arr)["c"].cast("int")
 
 
-def pq_adc_topk(
+def _adc_topk(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int = 64,
-    m: int = 8,
-    k_c: int = 4,
-    seed: int = 13,
-    max_queries: int | None = None,
+    codebook: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+    k: int,
+    op_name: str,
+    keys: tuple[Column, Column] | None = None,
 ) -> DataFrame:
-    """Product-quantization top-k by Asymmetric Distance Computation: the
-    corpus is stored as ``m`` small integer codes (8 bytes/vector here vs
-    256 bytes of float32 — the memory story that lets a 100 TB vector
-    corpus fit an in-memory serving tier), queries stay exact, and the
-    approximate distance is the sum of per-subspace query→centroid
-    distances looked up by the candidate's codes.
-
-    Plan shape: corpus side encodes map-side (m struct-argmin folds, once
-    per vector — that projection is also exactly what a PQ index WRITE
-    would persist); the query side precomputes its m×k_c distance lookup
-    table ONCE PER QUERY ROW (the ADC trick — per candidate there are
-    only m ``element_at`` + adds, no vector math); join is a broadcast
-    cross of the tiny query side (boundedness ENFORCED lazily via
-    :func:`_lazy_query_guard`'s ``max_queries`` assert). Ascending
-    distance, ties → lower id;
-    rank over query-partitioned window. In production compose with the
-    IVF cell join (:func:`ivf_cosine_topk`) to prune candidates before
-    ADC — shapes are identical.
+    """The ADC scoring rule behind :func:`pq_adc_topk` and
+    :func:`ivfpq_topk`: the corpus is encoded map-side to one
+    :func:`pq_code` per subspace (cached — exactly what a PQ index WRITE
+    would persist); each query row builds its per-subspace distance
+    lookup tables ONCE (transform over the parsed codebook-matrix
+    literal, round 12 — ~4 py4j calls per subspace instead of one per
+    element), so per candidate there are only m ``element_at`` + adds,
+    no vector math. ``keys`` as in :func:`_cosine_topk`: None scores
+    every corpus row, a (corpus key, query probe keys) pair prunes the
+    candidates to the probed cells. Ascending distance, ties → lower id.
     """
     from etl_cascalog_spark.io import ensure_min_parallelism
 
-    codebook = pq_centroids(dim, m, k_c, seed)
-    d_sub = dim // m
+    m, d_sub = len(codebook), len(codebook[0][0])
+    v = F.col(vec_col)
     corpus = ensure_min_parallelism(corpus, id_col)
+    ccols = [F.col(id_col).alias("neighbor_id")]
+    qcols = [F.col(id_col).alias("query_id")]
+    if keys is not None:
+        ccols.append(keys[0].alias("key"))
+        qcols.append(keys[1].alias("keys"))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        *[
-            pq_code(F.col(vec_col), codebook, j).alias(f"code_{j}")
-            for j in range(m)
-        ],
-    )
-    c = c.cache()
+        *ccols, *[pq_code(v, codebook, j).alias(f"code_{j}") for j in range(m)]
+    ).cache()
     q = _lazy_query_guard(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            # per-subspace LUT: transform over the parsed codebook-matrix
-            # literal (round 12) — same codebook-order distances, built in
-            # ~4 py4j calls per subspace instead of one per element
+            *qcols,
             *[
                 F.transform(
                     F.expr(_dmat_sql(codebook[j])),
                     # safe closure: PySpark invokes the lambda synchronously
                     # inside F.transform, while j holds this iteration's value
-                    lambda c: _l2_col(_sub(F.col(vec_col), j, d_sub), c),
+                    lambda cent: _l2_col(_sub(v, j, d_sub), cent),
                 ).alias(f"lut_{j}")
                 for j in range(m)
             ],
         ),
-        max_queries,
-        "pq_adc_topk",
+        op_name,
     )
     dist = None
     for j in range(m):
         t = F.element_at(F.col(f"lut_{j}"), F.col(f"code_{j}") + 1)
         dist = t if dist is None else dist + t
     scored = (
-        c.crossJoin(F.broadcast(q))
+        _candidates(c, q, keys is not None)
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", dist.alias("adc"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("adc"), 4).alias("adc_dist"),
-        )
-    )
+    return _topk(scored, k, F.col("adc").asc(), F.round("adc", 4).alias("adc_dist"))
+
+
+def pq_adc_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    codebook: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+) -> DataFrame:
+    """Product-quantization top-k by Asymmetric Distance Computation over
+    ``codebook`` (:func:`pq_centroids`): the corpus is stored as ``m``
+    small integer codes (8 bytes/vector here vs 256 bytes of float32 —
+    the memory story that lets a 100 TB vector corpus fit an in-memory
+    serving tier), queries stay exact, and the approximate distance is
+    the sum of per-subspace query→centroid distances looked up by the
+    candidate's codes (:func:`_adc_topk`).
+
+    The join is a broadcast cross of the tiny query side (boundedness
+    ENFORCED lazily by :func:`_lazy_query_guard`'s byte budget). In
+    production compose with the IVF cell join (:func:`ivfpq_topk`) to
+    prune candidates before ADC — same body, keyed.
+    Output (query_id, neighbor_id, rank, adc_dist).
+    """
+    return _adc_topk(queries, corpus, codebook, id_col, vec_col, k, "pq_adc_topk")
 
 
 def ivfpq_topk(
     queries: DataFrame,
     corpus: DataFrame,
+    centroids: list[list[float]],
+    codebook: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    dim: int = 64,
-    n_cells: int = 8,
-    ivf_seed: int = 11,
-    m: int = 8,
-    k_c: int = 4,
-    pq_seed: int = 13,
-    max_queries: int | None = None,
 ) -> DataFrame:
     """IVF+PQ — the production ANN index shape (FAISS IVFPQ): candidates
-    are pruned to the query's IVF cell (equi-join, no cross join), then
-    scored by PQ asymmetric distance (8-byte codes, per-query LUT).
+    are pruned to the query's IVF cell of ``centroids`` (equi-join, no
+    cross join), then scored by PQ asymmetric distance over ``codebook``
+    (8-byte codes, per-query LUT).
 
     This is the composition where both halves earn their keep at 100 TB:
     the IVF join bounds candidate volume to ~corpus/n_cells per query
-    (query-side broadcast mandatory + ``max_queries``-guarded, same
-    build-side lesson as :func:`ivf_cosine_topk`), and ADC scoring reads
-    codes, not vectors, so the streamed candidate side carries m bytes
-    per row instead of the embedding. Output (query_id, neighbor_id,
-    rank, adc_dist); ascending
-    distance, ties → lower id. Extend recall exactly like
-    :func:`ivf_cosine_topk`'s nprobe (probe more cells) — shapes compose.
+    (query-side broadcast mandatory + byte-guarded, same build-side
+    lesson as :func:`ivf_cosine_topk`), and ADC scoring reads codes, not
+    vectors, so the streamed candidate side carries m bytes per row
+    instead of the embedding. Output (query_id, neighbor_id, rank,
+    adc_dist); ascending distance, ties → lower id.
     """
-    from etl_cascalog_spark.io import ensure_min_parallelism
-
-    cents = ivf_centroids(dim, n_cells, ivf_seed)
-    codebook = pq_centroids(dim, m, k_c, pq_seed)
-    d_sub = dim // m
-    corpus = ensure_min_parallelism(corpus, id_col)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        ivf_cell(F.col(vec_col), cents).alias("cell"),
-        *[
-            pq_code(F.col(vec_col), codebook, j).alias(f"code_{j}")
-            for j in range(m)
-        ],
-    )
-    c = c.cache()
-    q = _lazy_query_guard(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            ivf_cell(F.col(vec_col), cents).alias("cell"),
-            # per-subspace LUT: transform over the parsed codebook-matrix
-            # literal (round 12) — same codebook-order distances, built in
-            # ~4 py4j calls per subspace instead of one per element
-            *[
-                F.transform(
-                    F.expr(_dmat_sql(codebook[j])),
-                    # safe closure: PySpark invokes the lambda synchronously
-                    # inside F.transform, while j holds this iteration's value
-                    lambda c: _l2_col(_sub(F.col(vec_col), j, d_sub), c),
-                ).alias(f"lut_{j}")
-                for j in range(m)
-            ],
-        ),
-        max_queries,
+    return _adc_topk(
+        queries,
+        corpus,
+        codebook,
+        id_col,
+        vec_col,
+        k,
         "ivfpq_topk",
-    )
-    dist = None
-    for j in range(m):
-        t = F.element_at(F.col(f"lut_{j}"), F.col(f"code_{j}") + 1)
-        dist = t if dist is None else dist + t
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", dist.alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("adc"), 4).alias("adc_dist"),
-        )
+        keys=_ivf_keys(F.col(vec_col), centroids, 1),
     )
 
 
 def hard_negatives_lsh(
     emb: DataFrame,
+    planes: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 3,
     anchor_filter: Column | None = None,
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 7,
 ) -> DataFrame:
     """Corpus-scale hard-negative mining: the bucketed sibling of
-    :func:`hard_negatives` — candidates come from the anchor's hyperplane
-    bucket only, so the plan is a bucket equi-join with NO broadcast hint
-    on either side: the anchor set scales with the caller's filter (an
-    unbounded fraction of the corpus), so forcing a broadcast would
-    re-create exactly the over-broadcast hazard the dense path's
-    ``max_anchors`` guard exists to prevent. AQE converts the join to
+    :func:`hard_negatives` — candidates come from the anchor's bucket
+    over the hyperplanes ``planes``, so the plan is a bucket equi-join
+    with NO broadcast hint on either side: the anchor set scales with the
+    caller's filter (an unbounded fraction of the corpus), so forcing a
+    broadcast would re-create exactly the over-broadcast hazard the dense
+    path's anchor guard exists to prevent. AQE converts the join to
     broadcast at runtime only when the anchor side actually fits; at
     corpus scale both sides shuffle on the bucket key — the correct
     100 TB plan. Mining tolerates the bucket approximation by design
@@ -1407,7 +1134,6 @@ def hard_negatives_lsh(
     Same output contract: (anchor_id, negative_id, rank, cos_sim)."""
     from etl_cascalog_spark.io import ensure_min_parallelism
 
-    planes = hyperplanes(dim, n_planes, seed)
     anchors = emb if anchor_filter is None else emb.where(anchor_filter)
     a = anchors.select(
         F.col(id_col).alias("anchor_id"),
@@ -1433,18 +1159,13 @@ def hard_negatives_lsh(
             (dot(F.col("av"), F.col("cv")) / (F.col("na") * F.col("nc"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cos").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "anchor_id",
-            "negative_id",
-            "rank",
-            F.round(F.col("cos"), 4).alias("cos_sim"),
-        )
+    return _topk(
+        scored,
+        k,
+        F.col("cos").desc(),
+        F.round("cos", 4).alias("cos_sim"),
+        key="anchor_id",
+        nbr="negative_id",
     )
 
 
@@ -1456,7 +1177,6 @@ def mmr_rerank(
     n_candidates: int = 10,
     k: int = 3,
     lam: float = 0.5,
-    max_queries: int | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified re-rank (Carbonell &
     Goldstein 1998): from each query's top-``n_candidates`` cosine
@@ -1500,7 +1220,6 @@ def mmr_rerank(
             F.col(vec_col).alias("qv"),
             norm(F.col(vec_col)).alias("nq"),
         ),
-        max_queries,
         "mmr_rerank",
     )
     c = corpus.select(

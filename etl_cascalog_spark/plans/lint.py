@@ -252,10 +252,9 @@ def lint_plan(df: DataFrame) -> PlanReport:
 #: alone let a whitelisted recurrence silently grow from 3 checkpoint jobs
 #: to 300 under a green gate). Three categories only:
 #:   (a) bounded driver-side collects that ARE the operator's contract
-#:       (guard-fenced: byte-budget / max_queries / m_bits / 1-row
-#:       watermark) — budget 1-4 jobs (AQE materializes a shuffled
-#:       aggregate as its own map-stage job, so one logical collect can
-#:       count as 2);
+#:       (guard-fenced: byte budget / m_bits / 1-row watermark) —
+#:       budget 1-4 jobs (AQE materializes a shuffled aggregate as its
+#:       own map-stage job, so one logical collect can count as 2);
 #:   (b) iterative fixpoint algorithms whose per-round eager
 #:       ``localCheckpoint`` IS the algorithm (lineage must be cut between
 #:       rounds or iteration i re-runs rounds 0..i-1) — budget =

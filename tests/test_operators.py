@@ -105,19 +105,37 @@ def test_blas_topk_matches_fold(spark):
         assert abs(bcos - cos) <= 1e-4  # rounded to 4dp; raw delta ~1e-15
 
 
-def test_blas_topk_rejects_oversized_query_side(spark):
-    """The bounded-query contract is enforced: a query frame larger than
-    max_queries raises BEFORE any driver-side collect, pointing at the
-    bucketed operators for the unbounded case."""
+def test_blas_topk_rejects_oversized_query_side(spark, monkeypatch):
+    """The bounded-query contract is enforced: a query frame over the byte
+    budget raises BEFORE the driver-side collect of the query rows,
+    pointing at the corpus-vs-corpus operators for the unbounded case."""
     import pytest
 
     from etl_cascalog_spark.io import read_table
-    from etl_cascalog_spark.operators.similarity import cosine_topk_blas
+    from etl_cascalog_spark.operators import similarity
     from tests.conftest import SF_SMOKE
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
-    with pytest.raises(ValueError, match="max_queries.*lsh_cosine_topk"):
-        cosine_topk_blas(emb, emb, k=5, max_queries=10)
+    # the budget is read at call time: shrink it to well under the fixture
+    monkeypatch.setattr(similarity, "QUERY_BROADCAST_BUDGET_BYTES", 10_000)
+    with pytest.raises(ValueError, match="driver-collect bytes.*embedding_neardup"):
+        similarity.cosine_topk_blas(emb, emb, k=5)
+
+
+def test_blas_topk_empty_query_set(spark):
+    """An empty query set scores nothing: the BLAS scorer returns the
+    empty top-k with the same columns as the fold scorer (it used to
+    crash normalizing a 0-row query matrix)."""
+    from etl_cascalog_spark.io import read_table
+    from etl_cascalog_spark.operators.similarity import cosine_topk, cosine_topk_blas
+    from tests.conftest import SF_SMOKE
+
+    emb = read_table(spark, SF_SMOKE, "embeddings")
+    none = emb.where(F.lit(False))
+    blas = cosine_topk_blas(none, emb, k=3)
+    fold = cosine_topk(none, emb, k=3)
+    assert blas.columns == fold.columns
+    assert blas.count() == 0 and fold.count() == 0
 
 
 def test_take_train_dts_and_shift_cut(spark):
@@ -401,13 +419,19 @@ def test_lsh_cosine_matches_brute_force_in_bucket(spark):
     """LSH top-k returns a subset consistent with brute force when the true
     neighbors share the query's bucket (high-sim vectors do)."""
     from etl_cascalog_spark.io import read_table
-    from etl_cascalog_spark.operators.similarity import cosine_topk, lsh_cosine_topk
+    from etl_cascalog_spark.operators.similarity import (
+        cosine_topk,
+        hyperplanes,
+        lsh_cosine_topk,
+    )
 
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = emb.where(F.col("vec_id") % 100 == 0)
     brute = cosine_topk(q, emb, k=1).collect()
+    planes = hyperplanes(64, 8, 7)
     lsh = {
-        (r.query_id, r.rank): r.neighbor_id for r in lsh_cosine_topk(q, emb, k=1).collect()
+        (r.query_id, r.rank): r.neighbor_id
+        for r in lsh_cosine_topk(q, emb, planes, k=1).collect()
     }
     # for each query where LSH found a rank-1 neighbor with cos ≥ 0.9 in
     # brute force, they agree (near-identical vectors share sign buckets)
@@ -1031,11 +1055,14 @@ def test_plan_audit_dedupes_cached_reprints():
 def test_ivf_nprobe_recall_monotonic(spark):
     """Recall vs the exact brute-force top-k improves (weakly) with nprobe,
     and nprobe = n_cells recovers brute force exactly — the quantitative
-    contract of the IVF recall dial."""
+    contract of the IVF recall dial, for the seeded centroids and for
+    k-means-trained ones (the index is data: both feed the same scorer)."""
     from etl_cascalog_spark.io import read_table
     from etl_cascalog_spark.operators.similarity import (
         cosine_topk,
+        ivf_centroids,
         ivf_cosine_topk,
+        train_ivf_centroids,
     )
     from tests.conftest import SF_SMOKE
 
@@ -1047,13 +1074,34 @@ def test_ivf_nprobe_recall_monotonic(spark):
 
     exact = pairs(cosine_topk(q, emb, k=5))
 
-    def recall(nprobe):
-        got = pairs(ivf_cosine_topk(q, emb, k=5, n_cells=8, nprobe=nprobe))
-        return len(got & exact) / len(exact)
+    for cents in (
+        ivf_centroids(64, 8, 11),
+        train_ivf_centroids(emb, n_cells=8, seed=11),
+    ):
+        def recall(nprobe):
+            got = pairs(ivf_cosine_topk(q, emb, cents, k=5, nprobe=nprobe))
+            return len(got & exact) / len(exact)
 
-    r1, r2, r8 = recall(1), recall(2), recall(8)
-    assert 0.0 < r1 <= r2 <= 1.0   # the dial is (weakly) monotone
-    assert r8 == 1.0               # all cells probed == exhaustive search
+        r1, r2 = recall(1), recall(2)
+        assert 0.0 < r1 <= r2 <= 1.0   # the dial is (weakly) monotone
+        # all cells probed == exhaustive search
+        assert pairs(ivf_cosine_topk(q, emb, cents, k=5, nprobe=8)) == exact
+
+
+def test_ivf_nprobe_must_be_positive(spark):
+    """nprobe < 1 probes no cell: refused at plan time instead of
+    silently scoring nothing."""
+    import pytest
+
+    from etl_cascalog_spark.io import read_table
+    from etl_cascalog_spark.operators.similarity import ivf_centroids, ivf_cosine_topk
+    from tests.conftest import SF_SMOKE
+
+    emb = read_table(spark, SF_SMOKE, "embeddings")
+    cents = ivf_centroids(64, 8, 11)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="nprobe must be >= 1"):
+            ivf_cosine_topk(emb, emb, cents, k=1, nprobe=bad)
     # note: absolute recall at small nprobe is LOW here by design — the
     # synthetic embeddings are uniform (no cluster structure), the
     # hardest case for IVF; real corpora cluster and recall jumps
@@ -1569,14 +1617,15 @@ def test_multiprobe_recall_dominates_single_probe(spark):
     from etl_cascalog_spark.io import read_table
     from etl_cascalog_spark.operators.similarity import (
         cosine_topk,
+        hyperplanes,
         lsh_cosine_topk,
-        lsh_multiprobe_topk,
     )
     from tests.conftest import SF_SMOKE
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
     k = 5
+    planes = hyperplanes(64, 8, 7)
 
     def topk_sets(df):
         out = {}
@@ -1585,8 +1634,8 @@ def test_multiprobe_recall_dominates_single_probe(spark):
         return out
 
     exact = topk_sets(cosine_topk(queries, emb, k=k))
-    single = topk_sets(lsh_cosine_topk(queries, emb, k=k))
-    multi = topk_sets(lsh_multiprobe_topk(queries, emb, k=k))
+    single = topk_sets(lsh_cosine_topk(queries, emb, planes, k=k))
+    multi = topk_sets(lsh_cosine_topk(queries, emb, planes, k=k, multiprobe=True))
     total_s = total_m = 0
     for qid, truth in exact.items():
         total_s += len(truth & single.get(qid, set()))
@@ -1634,12 +1683,12 @@ def test_pq_adc_equals_reconstruction_l2(spark):
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
+    codebook = pq_centroids()
     got = {
         (r.query_id, r.neighbor_id): r.adc_dist
-        for r in pq_adc_topk(queries, emb, k=3).collect()
+        for r in pq_adc_topk(queries, emb, codebook, k=3).collect()
     }
     vecs = {r.vec_id: list(r.embedding) for r in emb.collect()}
-    codebook = pq_centroids()
     d_sub = 8
 
     def reconstruct(v):
@@ -1761,83 +1810,85 @@ def test_quantize_pow2_col_parity_with_static_twin(spark):
     )
 
 
-def test_hard_negatives_anchor_bound_enforced(spark):
-    """hard_negatives fails past max_anchors (the cosine_topk_blas
-    posture): broadcasting an unbounded anchor set is an O(N^2)
-    cross-join at scale, so the guard must fail loudly and name the
-    bucketed variant — and a bound that fits must still work. The guard
-    is LAZY (assert_true at action time, ADVICE r7): constructing the
-    plan must run zero jobs; the raise fires on the first action."""
+def _assert_lazy_refusal(spark, build, match):
+    """``build()`` and EXPLAIN of its plan submit zero Spark jobs (the
+    broadcast guard is LAZY — assert_true at action time, ADVICE r7), and
+    the first action raises a refusal matching ``match``."""
     import pytest
 
+    from etl_cascalog_spark.plans.lint import count_build_jobs
+
+    over, n_build = count_build_jobs(spark, build, "guard_build")
+    _, n_explain = count_build_jobs(spark, over.explain, "guard_explain")
+    assert (n_build, n_explain) == (0, 0)
+    with pytest.raises(Exception, match=match):
+        over.count()
+
+
+def test_hard_negatives_anchor_bound_enforced(spark, monkeypatch):
+    """hard_negatives fails past its anchor byte budget: broadcasting an
+    unbounded anchor set is an O(N^2) cross-join at scale, so the guard
+    must fail loudly and name the bucketed variant — and an anchor set
+    that fits must still work. Plan construction and EXPLAIN run zero
+    jobs; the raise fires on the first action."""
     from etl_cascalog_spark.io import read_table
-    from etl_cascalog_spark.operators.similarity import hard_negatives
+    from etl_cascalog_spark.operators import similarity
     from tests.conftest import SF_SMOKE
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
-    over = hard_negatives(emb, max_anchors=5)  # plan-time: no job, no raise
-    over.explain()  # plan-only consumers stay job-free
-    with pytest.raises(Exception, match="hard_negatives_lsh"):
-        over.count()
     flt = F.col("vec_id") % 50 == 0
     n_anchors = emb.where(flt).count()
-    got = hard_negatives(emb, anchor_filter=flt, k=1, max_anchors=n_anchors)
+    got = similarity.hard_negatives(emb, anchor_filter=flt, k=1)
+    # the budget is read when the plan is built: shrink it for the refusal
+    monkeypatch.setattr(similarity, "QUERY_BROADCAST_BUDGET_BYTES", 1_000)
+    _assert_lazy_refusal(
+        spark, lambda: similarity.hard_negatives(emb), "hard_negatives_lsh"
+    )
     assert got.count() == n_anchors
 
 
-def test_ann_broadcast_scorers_query_bound_enforced(spark):
+def test_ann_broadcast_scorers_query_bound_enforced(spark, monkeypatch):
     """VERDICT r9 #2: every ANN scorer that broadcasts its query side —
     the cross-join scorers AND the bucketed ones (where the hint is
     mandatory: a bare equi-join flips the build side onto the cached
     corpus and serializes the probe, the measured sf3 lesson in
-    _lazy_query_guard) — enforces max_queries with the shared LAZY
-    guard: plan construction runs zero jobs, EXPLAIN stays job-free, the
-    raise fires on the first action and names the right alternative, and
-    a query set inside the bound still scores."""
-    import pytest
-
+    _lazy_query_guard) — enforces the byte budget with the shared LAZY
+    guard: plan construction and EXPLAIN run zero jobs, the raise fires
+    on the first action and names the right alternative, and a query set
+    inside the budget still scores."""
     from etl_cascalog_spark.io import read_table
-    from etl_cascalog_spark.operators.similarity import (
-        cosine_topk,
-        ivf_cosine_topk,
-        ivfpq_topk,
-        lsh_cosine_topk,
-        lsh_multiprobe_topk,
-        mmr_rerank,
-        pq_adc_topk,
-        quantized_dot_topk,
-    )
+    from etl_cascalog_spark.operators import similarity as S
     from tests.conftest import SF_SMOKE
 
     emb = read_table(spark, SF_SMOKE, "embeddings")
     q = emb.where(F.col("vec_id") % 50 == 0)
-    # all 8 guarded scorers name the corpus-vs-corpus remedies (the
-    # bucketed scorers carry the SAME bound, so pointing an over-cap
-    # caller at them would be a dead end)
-    for op, kw in [
-        (cosine_topk, {"k": 1}),
-        (quantized_dot_topk, {"k": 1}),
-        (pq_adc_topk, {"k": 1}),
-        (mmr_rerank, {"k": 1, "n_candidates": 2}),
-        (lsh_cosine_topk, {"k": 1}),
-        (ivf_cosine_topk, {"k": 1}),
-        (lsh_multiprobe_topk, {"k": 1}),
-        (ivfpq_topk, {"k": 1}),
-    ]:
-        over = op(q, emb, max_queries=3, **kw)  # plan-time: no job, no raise
-        over.explain()
-        with pytest.raises(Exception, match="embedding_neardup"):
-            over.count()
+    planes = S.hyperplanes(64, 8, 7)
+    cents = S.ivf_centroids(64, 8, 11)
+    book = S.pq_centroids()
+    # in-budget sets score: plans built under the default budget
     n_q = q.count()
-    ok = cosine_topk(q, emb, k=1, max_queries=n_q)
+    ok = S.cosine_topk(q, emb, k=1)
+    ok_b = S.lsh_cosine_topk(q, emb, planes, k=1)
+    ok_mp = S.lsh_cosine_topk(q, emb, planes, k=1, multiprobe=True)
+    ok_np = S.ivf_cosine_topk(q, emb, cents, k=1, nprobe=2)
+    # all 8 guarded scorers name the corpus-vs-corpus remedies (the
+    # bucketed scorers carry the SAME bound, so pointing an over-budget
+    # caller at them would be a dead end)
+    monkeypatch.setattr(S, "QUERY_BROADCAST_BUDGET_BYTES", 1_000)
+    for build in [
+        lambda: S.cosine_topk(q, emb, k=1),
+        lambda: S.quantized_dot_topk(q, emb, k=1),
+        lambda: S.pq_adc_topk(q, emb, book, k=1),
+        lambda: S.mmr_rerank(q, emb, k=1, n_candidates=2),
+        lambda: S.lsh_cosine_topk(q, emb, planes, k=1),
+        lambda: S.ivf_cosine_topk(q, emb, cents, k=1),
+        lambda: S.lsh_cosine_topk(q, emb, planes, k=1, multiprobe=True),
+        lambda: S.ivfpq_topk(q, emb, cents, book, k=1),
+    ]:
+        _assert_lazy_refusal(spark, build, "embedding_neardup")
     assert ok.count() == n_q
-    ok_b = lsh_cosine_topk(q, emb, k=1, max_queries=n_q)
     assert ok_b.count() > 0
-    # explode-after-guard: the bound counts QUERIES, not query x probe
-    # rows — n_q queries with 9 probes each must pass at max_queries=n_q
-    ok_mp = lsh_multiprobe_topk(q, emb, k=1, max_queries=n_q)
     assert ok_mp.count() > 0
-    ok_np = ivf_cosine_topk(q, emb, k=1, nprobe=2, max_queries=n_q)
     assert ok_np.count() > 0
 
 
@@ -1845,10 +1896,9 @@ def test_ann_query_guard_default_is_byte_aware(spark):
     """VERDICT r10 #1: the r10 guard counted ROWS, which silently permits
     multi-GB broadcasts at production embedding dims. The DEFAULT bound is
     now BYTES measured from the data: a modest row count of wide vectors
-    must trip the 64 MB budget with no explicit max_queries anywhere, in
-    both the lazy broadcast guard and cosine_topk_blas's eager driver
-    collect — while the same row count at the engine's dim-64 fixtures
-    passes. max_queries stays as the explicit row-count override."""
+    must trip the 64 MB budget, in both the lazy broadcast guard and
+    cosine_topk_blas's eager driver collect — while the same row count at
+    the engine's dim-64 fixtures passes."""
     import pytest
 
     from etl_cascalog_spark.io import read_table
@@ -1887,7 +1937,8 @@ def test_lazy_query_guard_byte_math(spark):
     """The byte estimate is exact and fanout-priced: rows x (48-byte row
     overhead + 8 bytes per fixed-width scalar field + 8 bytes per array
     element), multiplied by the explode fanout the caller declares — so
-    ivf nprobe / lsh multi-probe pay for the POST-explode broadcast."""
+    ivf nprobe / lsh multi-probe pay for the POST-explode broadcast. The
+    private byte_budget argument stands in for the module budget."""
     import pytest
 
     from etl_cascalog_spark.operators.similarity import _lazy_query_guard
@@ -1897,20 +1948,20 @@ def test_lazy_query_guard_byte_math(spark):
         F.array_repeat(F.lit(1.0), 4).alias("qv"),
     )
     # 10 rows x (48 + 8 [vec_id long] + 4*8) = 880 estimated bytes
-    ok = _lazy_query_guard(df, None, "t", byte_budget=880)
+    ok = _lazy_query_guard(df, "t", byte_budget=880)
     assert ok.count() == 10
-    bad = _lazy_query_guard(df, None, "t", byte_budget=879)
+    bad = _lazy_query_guard(df, "t", byte_budget=879)
     with pytest.raises(Exception, match="estimated at 880 bytes"):
         bad.count()
-    fanned = _lazy_query_guard(df, None, "t", byte_budget=1759, fanout=2)
+    fanned = _lazy_query_guard(df, "t", byte_budget=1759, fanout=2)
     with pytest.raises(Exception, match="estimated at 1760 bytes"):
         fanned.count()
     # string payloads are priced by octet_length — kilobyte ids cannot
     # hide behind the fixed row overhead (review r11 finding)
     dfs = df.withColumn("s", F.lit("x" * 20))  # 10 x (48+8+32+20) = 1080
-    ok_s = _lazy_query_guard(dfs, None, "t", byte_budget=1080)
+    ok_s = _lazy_query_guard(dfs, "t", byte_budget=1080)
     assert ok_s.count() == 10
-    bad_s = _lazy_query_guard(dfs, None, "t", byte_budget=1079)
+    bad_s = _lazy_query_guard(dfs, "t", byte_budget=1079)
     with pytest.raises(Exception, match="estimated at 1080 bytes"):
         bad_s.count()
     # VERDICT r11 #1: fixed-width scalar fields are priced per FIELD — a
@@ -1920,9 +1971,9 @@ def test_lazy_query_guard_byte_math(spark):
         F.col("id").alias("vec_id"),
         *[(F.col("id") + i).alias(f"f{i}") for i in range(100)],
     )
-    ok_w = _lazy_query_guard(wide, None, "t", byte_budget=8560)
+    ok_w = _lazy_query_guard(wide, "t", byte_budget=8560)
     assert ok_w.count() == 10
-    bad_w = _lazy_query_guard(wide, None, "t", byte_budget=8559)
+    bad_w = _lazy_query_guard(wide, "t", byte_budget=8559)
     with pytest.raises(Exception, match="estimated at 8560 bytes"):
         bad_w.count()
     # review r12: map/struct payloads have no cheap exact estimate and
@@ -1930,10 +1981,10 @@ def test_lazy_query_guard_byte_math(spark):
     # REFUSE (fail closed) at plan time, not under-price by ~100x
     dfm = df.withColumn("meta", F.create_map(F.lit("k"), F.col("qv")))
     with pytest.raises(ValueError, match="cannot price column 'meta'"):
-        _lazy_query_guard(dfm, None, "t", byte_budget=10_000)
+        _lazy_query_guard(dfm, "t", byte_budget=10_000)
     # max_rows composes with the byte budget in one guard: narrow rows
     # cannot buy an unbounded row count under a green byte estimate
-    wide_n = _lazy_query_guard(df, None, "t", byte_budget=10_000, max_rows=9)
+    wide_n = _lazy_query_guard(df, "t", byte_budget=10_000, max_rows=9)
     with pytest.raises(Exception, match=r"10 rows \(bound 9\)"):
         wide_n.count()
 
@@ -1942,9 +1993,9 @@ def test_hard_negatives_default_keeps_row_cap(spark):
     """Review r11: switching hard_negatives' default to the byte budget
     alone would have LOOSENED the old 10k-anchor default ~12x at dim 64 —
     the miner's hazard is the anchors x corpus quadratic, which is
-    row-count-shaped. The default must trip past DEFAULT_MAX_ANCHORS rows
-    even when the bytes are tiny, and the refusal must name max_anchors
-    (the parameter this operator actually has), not max_queries."""
+    row-count-shaped. The guard must trip past DEFAULT_MAX_ANCHORS rows
+    even when the bytes are tiny, and the refusal names the bucketed
+    variant."""
     import pytest
 
     from etl_cascalog_spark.operators.similarity import (
@@ -1961,7 +2012,7 @@ def test_hard_negatives_default_keeps_row_cap(spark):
         (F.col("id") % 2).alias("label"),
     )
     over = hard_negatives(emb, k=1)  # plan-time: lazy, no job, no raise
-    with pytest.raises(Exception, match=r"rows \(bound 10000\).*max_anchors"):
+    with pytest.raises(Exception, match=r"rows \(bound 10000\).*hard_negatives_lsh"):
         over.count()
 
 
@@ -2009,14 +2060,15 @@ def test_hard_negatives_lsh_subset_of_bucket(spark):
         r.anchor_id: r.negative_id
         for r in hard_negatives(emb, anchor_filter=flt, k=1).collect()
     }
+    planes = hyperplanes(64, 8, 7)
     lsh = {
         r.anchor_id: r.negative_id
-        for r in hard_negatives_lsh(emb, anchor_filter=flt, k=1).collect()
+        for r in hard_negatives_lsh(emb, planes, anchor_filter=flt, k=1).collect()
     }
     buckets = {
         r.vec_id: r.b
         for r in emb.select(
-            "vec_id", lsh_bucket(F.col("embedding"), hyperplanes(64, 8, 7)).alias("b")
+            "vec_id", lsh_bucket(F.col("embedding"), planes).alias("b")
         ).collect()
     }
     labels = {r.vec_id: r.label for r in emb.select("vec_id", "label").collect()}

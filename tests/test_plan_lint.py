@@ -148,7 +148,7 @@ def test_no_dim_side_sort_merge_join(lint_reports):
 #: argument (R4 exceptions — same hygiene rules as the other allowlists).
 #: EMPTY since round 10: the last two entries (ann_ivf_topk /
 #: ann_ivfpq_topk probe-side assignment inference) were fixed for real —
-#: the cell-assignment fold now sits inside the max_queries guard's cached
+#: the cell-assignment fold now sits inside the broadcast guard's cached
 #: projection, so Catalyst's inferred isnotnull(assignment) twin is cut at
 #: the InMemoryRelation boundary instead of re-evaluating the fold.
 MEGA_FILTER_OK: dict[str, str] = {}

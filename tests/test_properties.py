@@ -920,3 +920,50 @@ def test_remove_duplicate_spans_overlapping_equals_anti_join(spark, texts, spans
         kept = [t for p, t in toks if p not in cut]
         want[d] = (" ".join(kept), len(toks), len(toks) - len(kept))
     assert got == want
+
+
+_unit = st.floats(-1.0, 1.0, allow_nan=False).map(lambda x: round(x, 3))
+_vec4 = st.lists(_unit, min_size=4, max_size=4)
+
+
+@given(
+    vecs=st.lists(_vec4, min_size=1, max_size=6),
+    cents=st.lists(
+        _vec4.filter(lambda c: any(abs(x) >= 0.01 for x in c)),
+        min_size=1,
+        max_size=5,
+    ),
+)
+# duplicated centroids: every score ties, so both must pick the LOWER id
+@example(
+    vecs=[[1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 0.0, 0.0]],
+    cents=[[0.0, 1.0, 0.0, 0.0], [1.0, 0.5, 0.0, 0.0], [1.0, 0.5, 0.0, 0.0]],
+)
+@_settings
+def test_ivf_top1_probe_is_the_cell(spark, vecs, cents):
+    """ivf_cosine_topk probes ivf_cells_topn(v, c, nprobe) for every
+    nprobe, so its nprobe=1 path rests on ivf_cells_topn(v, c, 1)[0] ==
+    ivf_cell(v, c): same dot(v, c)/||c|| score, same tie → lower cell id.
+    Both are checked against a Python argmax (same left-fold double
+    arithmetic, ties to the lower index)."""
+    import math
+
+    from etl_cascalog_spark.operators.similarity import ivf_cell, ivf_cells_topn
+
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], "i int, v array<double>")
+    rows = df.select(
+        "i",
+        ivf_cell(F.col("v"), cents).alias("cell"),
+        ivf_cells_topn(F.col("v"), cents, 1).alias("top"),
+    ).collect()
+    assert len(rows) == len(vecs)
+
+    def score(v, c):
+        acc = 0.0
+        for x, y in zip(v, c):
+            acc += x * y
+        return acc / math.sqrt(sum(x * x for x in c))
+
+    for r in rows:
+        want = max(range(len(cents)), key=lambda j: (score(vecs[r.i], cents[j]), -j))
+        assert r.top == [r.cell] and r.cell == want, (vecs[r.i], cents)

@@ -217,9 +217,7 @@ def test_score_period_trgx_path_report(spark):
     pad = next(r for r in out if '"kpi":"TOTAL"' in r.selector)
     assert '"metrics":"TOTAL"' in pad.selector
     # payload: bottler_sort → period with config + sliding metrics
-    g11 = next(r for r in out if '"metrics":"[G11]加权铺权率"' in r.selector) \
-        if any('"加权铺权率"' in s for s in sels) else \
-        next(r for r in out if "[G11]" in r.selector)
+    g11 = next(r for r in out if '"metrics":"[G11]加权铺货率"' in r.selector)
     dm = g11.dimension_metrics
     assert dm.startswith('{"02_BoA":{"2017-01-31":{"c_total_score":20.00')
     assert '"c_weight":0.50' in dm and '"max_value":44.00' in dm
