@@ -238,6 +238,7 @@ def main() -> int:
     from etl_cascalog_spark.io import TABLES, read_table
     from etl_cascalog_spark.plans.lint import EAGER_BUILD_OK, count_build_jobs
     from etl_cascalog_spark.session import (
+        codegen_compiles,
         get_spark,
         release_all_blocks,
         scoped_storage,
@@ -269,16 +270,20 @@ def main() -> int:
     for sf_dir in sf_dirs:
         for t in TABLES:
             read_table(spark, sf_dir, t)
-    # one tiny catalog query untimed, so whole-stage-codegen JIT of the
-    # common operator stack is not billed to whichever query sorts first
+    # one tiny catalog query untimed, so the JVM's JIT of the common
+    # operator stack is not billed to whichever query sorts first; its
+    # generated classes stay compiled only because the session's codegen
+    # cache holds the sweep's working set (session.CODEGEN_CACHE_ENTRIES)
     with scoped_storage(spark):
         QUERIES["static_report"].build(spark, sf_dirs[0]).write.format(
             "noop"
         ).mode("overwrite").save()
 
     run_seq = [0]
+    compiles: list[int] = []  # classes compiled by each sample of a query
 
     def run_once(name: str, sf_dir: str) -> float:
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         # queries are independent jobs (the reference ran each report in its
         # own JVM): every cache / localCheckpoint block a query creates dies
@@ -293,6 +298,7 @@ def main() -> int:
             ).mode("overwrite").save()
             n = obs.get["n"]
         wall = round(time.perf_counter() - t0, 3)
+        compiles.append(codegen_compiles(spark) - c0)
         print(f"# {name}: {wall:.3f}s ({n} rows)", file=sys.stderr)
         return wall
 
@@ -329,6 +335,7 @@ def main() -> int:
         if n_samples > 1:
             jvm_system.gc()
         load_q = loadavg()
+        compiles.clear()
         samples = [run_once(name, sf_dir)]
         if n_samples > 1 and samples[0] >= min_floor_s:
             # honor the requested N exactly (N=5 takes 5 base samples,
@@ -340,10 +347,19 @@ def main() -> int:
             # typically <20% of the catalog)
             if max(samples) / max(min(samples), 1e-9) > 1.25:
                 samples += [run_once(name, sf_dir), run_once(name, sf_dir)]
-            print(f"# {name}: min {min(samples):.3f}s of {samples}", file=sys.stderr)
+            print(
+                f"# {name}: min {min(samples):.3f}s of {samples}, "
+                f"codegen compiles {compiles}",
+                file=sys.stderr,
+            )
         timings[key] = min(samples)
         scaling.setdefault(name, {})[label] = timings[key]
-        query_meta[key] = {"n_samples": len(samples), "samples": samples, "loadavg": load_q}
+        query_meta[key] = {
+            "n_samples": len(samples),
+            "samples": samples,
+            "codegen_compiles": list(compiles),
+            "loadavg": load_q,
+        }
     load_end = loadavg()
 
     # The audit runs after the whole timed sweep, each build on an empty

@@ -5872,8 +5872,9 @@ def _ivfpq_oracle_sql(
     "from the oracle-checked halves: candidates pruned to the query's "
     "IVF cell (equi-join, ~corpus/n_cells per query), scored by PQ "
     "asymmetric distance so the joined candidate side carries 8 bytes "
-    "of codes through the shuffle, not the embedding. nprobe extends "
-    "recall exactly as in ann_ivf_nprobe_topk.",
+    "of codes through the shuffle, not the embedding. Each query probes "
+    "its one nearest cell; unlike ann_ivf_nprobe_topk there is no nprobe "
+    "recall dial.",
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cascalog_spark.operators.similarity import ivfpq_topk
@@ -7182,7 +7183,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # und feeds the degree pass AND the filter join; kept below fans
         # out into SIX consumers (wedge e1/e2/e3, node set, edge count) —
         # without materialization the basket pair fan-out re-executes per
-        # branch (measured lesson 3/7). Scoped-storage releases both.
+        # branch (measured lesson 4/8). Scoped-storage releases both.
         .cache()
     )
     deg = (
@@ -7629,7 +7630,7 @@ def khop_related_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("__c") >= 2)
         .select("src", "dst")
         # every unrolled hop joins this frame — uncached, the basket pair
-        # fan-out subtree replays once per hop (lesson 3/7)
+        # fan-out subtree replays once per hop (lesson 4/8)
         .cache()
     )
     seeds = (

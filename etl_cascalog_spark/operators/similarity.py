@@ -208,13 +208,12 @@ def _est_row_bytes(df: DataFrame) -> Column:
 def _lazy_query_guard(
     q: DataFrame,
     op_name: str,
-    fanout: int = 1,
     max_rows: int | None = None,
     byte_budget: int | None = None,
 ) -> DataFrame:
     """Bounded-query-side guard for the ANN scorers (the side they
-    broadcast): estimated broadcast bytes — Σ per-row payload ×
-    ``fanout`` — must stay under the byte budget
+    broadcast): estimated broadcast bytes — Σ per-row payload — must
+    stay under the byte budget
     (``QUERY_BROADCAST_BUDGET_BYTES`` as the module holds it at call
     time; ``byte_budget`` overrides it for tests). The width is measured
     from the data via :func:`_est_row_bytes`, so a dim-1024 caller gets
@@ -245,19 +244,24 @@ def _lazy_query_guard(
     corpus streaming with full scan parallelism at every scale, and the
     guard keeps the forced side honest.
 
-    A query side that explodes after the guard (probe keys) passes the
-    probe count as ``fanout`` so the bound prices the POST-explode
-    broadcast. ``max_rows`` adds a row-count bound in the same aggregate
-    — for :func:`hard_negatives`, whose hazard is the anchors × corpus
-    COMPUTE, so tiny-width rows cannot buy an unbounded quadratic under a
-    green byte estimate.
+    A query side that explodes after the guard (an array of probe
+    ``keys``, see :func:`_candidates`) is priced as the POST-explode
+    broadcast: per row, ``size(keys)`` rows that each carry one 8-byte
+    key in place of the array. ``max_rows`` adds a row-count bound in
+    the same aggregate — for :func:`hard_negatives`, whose hazard is the
+    anchors × corpus COMPUTE, so tiny-width rows cannot buy an unbounded
+    quadratic under a green byte estimate.
     """
     budget = QUERY_BROADCAST_BUDGET_BYTES if byte_budget is None else byte_budget
     q = q.cache()
     n = F.count(F.lit(1))
-    est = F.coalesce(F.sum(_est_row_bytes(q)), F.lit(0).cast("long")) * F.lit(
-        int(fanout)
-    )
+    if "keys" in q.columns:
+        row = F.coalesce(F.size("keys"), F.lit(0)) * (
+            _est_row_bytes(q.drop("keys")) + F.lit(8)
+        )
+    else:
+        row = _est_row_bytes(q)
+    est = F.coalesce(F.sum(row), F.lit(0).cast("long"))
     ok = est <= F.lit(int(budget))
     msg = (
         f"{op_name}: broadcast side estimated at %d bytes"
@@ -311,7 +315,7 @@ def _candidates(c: DataFrame, q: DataFrame, keyed: bool) -> DataFrame:
     """Corpus ``c`` joined to the guarded query side ``q``, broadcast.
     Unkeyed: a cross join. Keyed: ``c`` carries its candidate ``key`` and
     ``q`` an array of probe ``keys``, exploded here — AFTER the guard,
-    whose ``fanout`` priced it — into one equi-join row per probe. A
+    which priced the exploded rows — into one equi-join row per probe. A
     candidate's single key matches at most one probe per query, so no
     pair is scored twice."""
     if not keyed:
@@ -330,13 +334,11 @@ def _cosine_topk(
     k: int,
     op_name: str,
     keys: tuple[Column, Column] | None = None,
-    fanout: int = 1,
 ) -> DataFrame:
     """The cosine scoring rule behind :func:`cosine_topk`,
     :func:`lsh_cosine_topk` and :func:`ivf_cosine_topk`. ``keys`` is
     None (score every corpus row) or a (corpus key, query probe-key
-    array) pair of expressions over ``vec_col``; ``fanout`` is the probe
-    count.
+    array) pair of expressions over ``vec_col``.
 
     Norms are per-ROW facts, computed once per side, not per pair (the
     inlined :func:`cosine` form re-folds both norms for every candidate
@@ -353,7 +355,7 @@ def _cosine_topk(
     if keys is not None:
         ccols.append(keys[0].alias("key"))
         qcols.append(keys[1].alias("keys"))
-    q = _lazy_query_guard(queries.select(*qcols), op_name, fanout=fanout)
+    q = _lazy_query_guard(queries.select(*qcols), op_name)
     c = corpus.select(*ccols).cache()
     scored = (
         _candidates(c, q, keys is not None)
@@ -569,7 +571,7 @@ def lsh_cosine_topk(
 
     The query side (× probes after the explode) is broadcast by contract
     (eval/re-rank sets), and the bound is ENFORCED by the lazy byte
-    guard, priced at the probe fanout — because a bare un-hinted join
+    guard, priced per probe row — because a bare un-hinted join
     measurably flips the build side onto the cached corpus and serializes
     the probe (see :func:`_lazy_query_guard`); corpus-vs-corpus
     similarity belongs to ``embedding_neardup`` / ``hard_negatives_lsh``.
@@ -583,7 +585,6 @@ def lsh_cosine_topk(
         k,
         "lsh_cosine_topk",
         keys=(lsh_bucket(v, planes), _lsh_probes(v, planes, multiprobe)),
-        fanout=1 + len(planes) if multiprobe else 1,
     )
 
 
@@ -682,7 +683,7 @@ def ivf_cosine_topk(
 
     The cell equi-join replaces the cross join — candidate volume
     Σ|cell|·|queries probing it| instead of |Q|·|C|. The query side is
-    broadcast (MANDATORY hint + lazy byte guard priced at ``nprobe``: a
+    broadcast (MANDATORY hint + lazy byte guard priced per probed cell: a
     bare join here measurably flips the build side onto the cached corpus
     and serializes the probe on the query scan's file splits — the
     6.9 s → 86 s sf3 lesson in :func:`_lazy_query_guard`); the corpus
@@ -703,7 +704,6 @@ def ivf_cosine_topk(
         k,
         "ivf_cosine_topk",
         keys=_ivf_keys(F.col(vec_col), centroids, nprobe),
-        fanout=nprobe,
     )
 
 

@@ -88,6 +88,7 @@ def test_named_run_is_comparable_and_leaves_bench_local_alone(tmp_path):
     for q in names:
         meta = out["query_meta"][q]
         assert meta["build_jobs"] == 0 and meta["n_samples"] == 1
+        assert len(meta["codegen_compiles"]) == 1
         assert {"smj", "bhj", "bnlj", "cart", "exch", "push"} <= set(meta)
     assert out["query_meta"]["pricing_summary"]["push"] == "yes"
 

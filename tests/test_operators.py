@@ -1934,11 +1934,12 @@ def test_ann_query_guard_default_is_byte_aware(spark):
 
 
 def test_lazy_query_guard_byte_math(spark):
-    """The byte estimate is exact and fanout-priced: rows x (48-byte row
-    overhead + 8 bytes per fixed-width scalar field + 8 bytes per array
-    element), multiplied by the explode fanout the caller declares — so
-    ivf nprobe / lsh multi-probe pay for the POST-explode broadcast. The
-    private byte_budget argument stands in for the module budget."""
+    """The byte estimate is exact: rows x (48-byte row overhead + 8 bytes
+    per fixed-width scalar field + 8 bytes per array element). A probe
+    ``keys`` array is priced as the POST-explode broadcast, so ivf nprobe /
+    lsh multi-probe pay for one row per probe, each carrying one 8-byte
+    key. The private byte_budget argument stands in for the module
+    budget."""
     import pytest
 
     from etl_cascalog_spark.operators.similarity import _lazy_query_guard
@@ -1953,9 +1954,17 @@ def test_lazy_query_guard_byte_math(spark):
     bad = _lazy_query_guard(df, "t", byte_budget=879)
     with pytest.raises(Exception, match="estimated at 880 bytes"):
         bad.count()
-    fanned = _lazy_query_guard(df, "t", byte_budget=1759, fanout=2)
-    with pytest.raises(Exception, match="estimated at 1760 bytes"):
-        fanned.count()
+    # probe keys: ids 0..9 carry 1,2,3,1,2,3,1,2,3,1 keys = 19 exploded
+    # rows x (48 + 8 [vec_id] + 4*8 + 8 [one key]) = 1824 bytes; pricing
+    # the whole array on every probe row would read 2016
+    keyed = df.withColumn(
+        "keys", F.array_repeat("vec_id", (F.col("vec_id") % 3 + 1).cast("int"))
+    )
+    ok_k = _lazy_query_guard(keyed, "t", byte_budget=1824)
+    assert ok_k.count() == 10
+    bad_k = _lazy_query_guard(keyed, "t", byte_budget=1823)
+    with pytest.raises(Exception, match="estimated at 1824 bytes"):
+        bad_k.count()
     # string payloads are priced by octet_length — kilobyte ids cannot
     # hide behind the fixed row overhead (review r11 finding)
     dfs = df.withColumn("s", F.lit("x" * 20))  # 10 x (48+8+32+20) = 1080
